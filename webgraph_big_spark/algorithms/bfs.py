@@ -49,7 +49,9 @@ def bfs_distances(
         )
     # hash-partitioned by the expansion key and pinned: per level only
     # the frontier moves (see co_partitioned for the full recipe)
-    edges = co_partitioned(arc_view, "src")
+    edges = co_partitioned(
+        arc_view, "src", rows=g.num_arcs() * (1 if symmetric else 2)
+    )
 
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col("id").cast("long"))

@@ -57,7 +57,9 @@ def connected_components(
         )
     # hash-partitioned by the per-round join key and pinned: only state
     # rows move per round (see co_partitioned for the full recipe)
-    edges = co_partitioned(arc_view, "src")
+    edges = co_partitioned(
+        arc_view, "src", rows=g.num_arcs() * (1 if symmetric else 2)
+    )
 
     # dense graphs expose the FULL [0, n) node set whether or not n was
     # declared (g.nodes() derives it) — so isolated/gap ids get the same

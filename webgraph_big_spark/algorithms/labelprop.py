@@ -44,8 +44,14 @@ def label_propagation(
     spark = g.edges.sparkSession
     gs = g if symmetric else symmetrize(g)
     # hash-partitioned by the per-round join key and pinned: only label
-    # rows move per round (see co_partitioned for the full recipe)
-    edges = co_partitioned(gs.edges.select("src", "dst"), "src")
+    # rows move per round (see co_partitioned for the full recipe).  Sized
+    # from the input's arc count: the symmetrized table has at most twice
+    # as many rows, and counting it would run its dedup one extra time.
+    edges = co_partitioned(
+        gs.edges.select("src", "dst"),
+        "src",
+        rows=g.num_arcs() * (1 if symmetric else 2),
+    )
     nodes = g.nodes().cache()
 
     def initial() -> DataFrame:

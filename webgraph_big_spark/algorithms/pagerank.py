@@ -14,22 +14,40 @@ where D^t = Σ over dangling nodes y (outdeg 0) of r^t(y) — dangling mass
 is redistributed uniformly.  α defaults to 0.85.  Ranks sum to 1 every
 iteration.  Convergence: L∞(r^{t+1} − r^t) < tol.
 
-Execution shape per iteration (two shuffles, both on node id):
+Execution shape per iteration — one job-producing plan, materialized by
+the round's own ``localCheckpoint``:
   1. contribs: ranks (n rows, small) ⨝ edges on src — ranks are the
-     *small* side; at 100 TB the edge table stays partitioned by src
-     across iterations so only ranks move.
+     *small* side: broadcast while n·32 B fits the broadcast threshold,
+     else exchanged against the edge table pinned by src
+     (``co_partitioned``), so only ranks move.
   2. groupBy(dst).sum — map-side partial aggregation combines hub fan-in
      before the shuffle; AQE skew-join handles residual hub skew
      (see skew.py for the explicit salting path + metrics).
+  3. ∪ the static set of nodes with no in-arc (no outer join).
 
-Dangling mass + delta are computed in the same pass via a join of old and
-new ranks (one action per iteration).  Lineage is truncated through
-IterativeRunner parquet checkpoints (resumable per the north rule).
+On the broadcast path that is three Spark jobs per round: the rank
+broadcast, the inflow shuffle and the checkpoint itself.
+
+The state holds u = r − c, where c is the part every node shares: the
+teleport term plus the redistributed dangling mass.  Since Σ r ≡ 1, c
+follows from Σu, which the round reads with ``DataFrame.observe`` off
+its own checkpoint job — the plan has no aggregate subquery and the
+driver keeps c as a scalar.  The next round adds c to the rank side,
+and the output adds it once at the end.
+
+The L∞ probe (every ``check_every`` rounds) rides on the same job: the
+round joins u' with the old ranks (the rank side's broadcast, reused)
+and observes the max and min of u' − r; the change r' − r = u' − r + c'
+peaks in absolute value at one of them.  There is no probe action.
+
+Lineage is truncated by the per-round ``localCheckpoint``;
+``IterativeRunner`` parquet checkpoints (resumable per the north rule)
+store true ranks, one write per checkpoint.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from webgraph_big_spark.checkpoint import IterativeRunner
 from webgraph_big_spark.graph import Graph, co_partitioned
@@ -52,9 +70,8 @@ def pagerank(
 
     ``fixed_iterations`` runs exactly that many rounds with no convergence
     test (used by the SQL-oracle gate); otherwise the L∞ delta is tested
-    every ``check_every`` rounds (a convergence probe is an extra action;
-    probing every round would double driver latency for no benefit —
-    power iteration's delta decays geometrically).
+    every ``check_every`` rounds, and the run stops at the first probe
+    round below ``tol``.
 
     ``salt_buckets`` (co-partition path only) splits each source's arcs
     across that many partitions: the edge table co-partitions on
@@ -119,39 +136,40 @@ def pagerank(
                 "_salt",
                 F.pmod(F.xxhash64("dst"), F.lit(salt_buckets)).cast("int"),
             )
-            edges_w = co_partitioned(edges_base, "src", "_salt")
+            edges_w = co_partitioned(edges_base, "src", "_salt", rows=g.num_arcs())
         else:
-            edges_w = co_partitioned(edges_base, "src")
+            edges_w = co_partitioned(edges_base, "src", rows=g.num_arcs())
+
+    # state rank column = u = rank − c (module docstring); a fresh or
+    # resumed state holds true ranks, i.e. c = 0
+    c = 0.0
+    obs: Observation | None = None  # the latest round's metrics
 
     def initial() -> DataFrame:
         return g.nodes().select("id", F.lit(1.0 / n).alias("rank"))
 
-    # Nodes with no in-arc never receive inflow: their new rank is the
-    # same constant expression every round.  The set is STATIC, so
-    # precompute it once and make each round a (contribs ∪ constant)
-    # union instead of an n-row outer join — the per-round sort-merge
-    # join of the full node set against contribs disappears from the
-    # loop entirely (guide §2.4: remove shuffles outright).  The float
-    # expression keeps the literal `0.0 + inflow-shaped` form so ranks
-    # are bit-identical to the old coalesce(inflow, 0.0) path.
-    no_in = (
-        g.nodes()
-        .join(g.edges.select(F.col("dst").alias("id")).distinct(), "id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
+    # Nodes with no in-arc never receive inflow: their u is 0.0 every
+    # round.  The set is STATIC, so precompute it once and make each
+    # round a (contribs ∪ constant) union instead of an n-row outer
+    # join — the per-round sort-merge join of the full node set against
+    # contribs disappears from the loop entirely (guide §2.4: remove
+    # shuffles outright).  The in-arc id set has ≤ n rows, so on the
+    # broadcast path it is broadcast like the rank side.
+    has_in = g.edges.select(F.col("dst").alias("id")).distinct()
+    if use_broadcast:
+        has_in = F.broadcast(has_in)
+    no_in = g.nodes().join(has_in, "id", "left_anti").localCheckpoint(eager=True)
 
     def step(ranks: DataFrame, it: int):
-        # One lazy plan per round.  Σ ranks ≡ 1 (the update preserves it),
-        # so dangling mass = 1 − Σ inflow — computed from the SAME
-        # aggregated exchange (Catalyst reuses it) instead of a second
-        # scan, and folded in via a 1-row broadcast cross-join.
+        nonlocal obs
         # After localCheckpoint the rank DataFrame is a LogicalRDD with no
         # size statistics, so Catalyst left alone would fall back to a
         # sort-merge join that reshuffles the whole edge table every
         # round.  Below the (memory-derived) threshold the rank side is
         # broadcast explicitly; above it, the shuffle-hash hint + the
         # pre-partitioned edge table make each round exchange only ranks.
-        rank_side = ranks.select(F.col("id").alias("src"), "rank")
+        true_rank = F.col("rank") + F.lit(c)
+        rank_side = ranks.select(F.col("id").alias("src"), true_rank.alias("rank"))
         join_keys = ["src"]
         if use_broadcast:
             rank_side = F.broadcast(rank_side)
@@ -171,40 +189,41 @@ def pagerank(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("inflow"))
         )
-        tot = contribs.agg(F.coalesce(F.sum("inflow"), F.lit(0.0)).alias("_tot"))
-        btot = F.broadcast(tot)
-
-        def _rank_expr(inflow_col):
-            return (
-                F.lit((1.0 - alpha) / n)
-                + F.lit(alpha)
-                * (inflow_col + (F.lit(1.0) - F.col("_tot")) / n)
-            ).alias("rank")
-
         # every node with an in-arc appears in contribs every round (all
-        # sources carry a rank), so the old n-row left join + coalesce
-        # splits exactly into contribs rows (inflow) ∪ the static no-in
-        # set (inflow ≡ 0.0) — a join-free union
-        new_ranks = contribs.crossJoin(btot).select(
-            "id", _rank_expr(F.col("inflow"))
-        ).unionByName(
-            no_in.crossJoin(btot).select("id", _rank_expr(F.lit(0.0)))
+        # sources carry a rank), so contribs rows ∪ the static no-in set
+        # (inflow ≡ 0) cover all n nodes without a join
+        new_u = contribs.select("id", (F.lit(alpha) * F.col("inflow")).alias("rank")).unionByName(
+            no_in.select("id", F.lit(0.0).alias("rank"))
         )
-        if fixed_iterations is not None:
-            changed = None if it + 1 < fixed_iterations else 0
-            return new_ranks, changed
-        return new_ranks, None
+        observed = [F.sum("rank").alias("mass")]
+        if fixed_iterations is None and (it + 1) % check_every == 0:
+            # L∞ probe in the same job: new − old = (u' − old) + c', and
+            # c' is known only after this round, so observe the extremes
+            # of u' − old; the largest |· + c'| is at one of them.  The old
+            # side is the rank side's plan under other names, so on the
+            # broadcast path Spark reuses the round's one broadcast
+            old = ranks.select(F.col("id").alias("_src"), true_rank.alias("_old"))
+            old = F.broadcast(old) if use_broadcast else old.hint("shuffle_hash")
+            new_u = new_u.join(old, F.col("id") == F.col("_src")).withColumn(
+                "_d", F.col("rank") - F.col("_old")
+            )
+            observed += [F.max("_d").alias("dmax"), F.min("_d").alias("dmin")]
+        obs = Observation()
+        return new_u.observe(obs, *observed).select("id", "rank"), None
 
     def check(old: DataFrame, new: DataFrame, it: int):
-        if (it + 1) % check_every != 0:
+        nonlocal c
+        m = obs.get
+        c = (1.0 - m["mass"]) / n
+        if fixed_iterations is not None:
+            return None if it + 1 < fixed_iterations else 0
+        if "dmax" not in m:
             return None
-        # L∞ delta probe over the two materialized (checkpointed) states
-        delta = (
-            new.join(old.withColumnRenamed("rank", "prev").hint("shuffle_hash"), "id")
-            .agg(F.max(F.abs(F.col("rank") - F.col("prev"))))
-            .first()[0]
-        )
+        delta = max(abs(m["dmax"] + c), abs(m["dmin"] + c))
         return 0 if delta < tol else 1
+
+    def with_c(state: DataFrame) -> DataFrame:
+        return state.select("id", (F.col("rank") + F.lit(c)).alias("rank"))
 
     runner = IterativeRunner(
         spark,
@@ -213,12 +232,10 @@ def pagerank(
         max_iterations=fixed_iterations or max_iterations,
     )
     try:
-        result = runner.run(
-            initial, step, check=None if fixed_iterations else check, resume=resume
-        )
+        result = runner.run(initial, step, check=check, resume=resume, durable=with_c)
     finally:
         if not use_broadcast:
             # don't leave the degree-joined edge table pinned in executor
             # storage for the rest of the session
             edges_w.unpersist()
-    return result.state
+    return with_c(result.state)

@@ -6,16 +6,20 @@ barrier per round (``algo/ParallelBreadthFirstVisit.java:272``,
 state DataFrames where each round is a job; this module adds what Spark
 does not give for free (SURVEY.md §4):
 
-- **lineage truncation**: iterative plans grow unboundedly; every
-  ``checkpoint_every`` rounds the state is written to parquet and re-read,
-  cutting the plan (the Spark analogue of the reference's in-place
-  arrays).
-- **resumability** (north rule): each checkpoint directory carries a
-  manifest (iteration, row count, partition/skew metrics); a new run with
-  the same ``run_dir`` restarts from the latest complete checkpoint and
+- **lineage truncation**: iterative plans grow unboundedly, so every
+  round's state is eagerly ``localCheckpoint``-ed (the Spark analogue of
+  the reference's in-place arrays).
+- **resumability** (north rule): every ``checkpoint_every`` rounds the
+  state is written to parquet — exactly one Spark job, the write itself.
+  Each checkpoint directory carries a manifest: iteration, ``rows`` and
+  ``partition_sizes`` (rows per written part file, read from the parquet
+  footers, so the manifest costs no Spark job).  A new run with the same
+  ``run_dir`` restarts from the latest complete checkpoint and
   reproduces the same final state.
-- **per-iteration metrics**: rows changed, per-partition sizes, wall
-  time — appended to ``runs.jsonl`` (the lineage/metrics table).
+- **per-iteration metrics**: rows (an ``observe``-d ``count(*)`` read
+  off the round's own ``localCheckpoint``, so no extra job), rows
+  changed and wall time — kept in ``IterationResult.metrics`` and, with
+  a ``run_dir``, appended to ``runs.jsonl`` (the lineage/metrics table).
 
 Checkpoints are plain parquet directories; on a cluster deployment the
 same layout maps 1:1 onto an Iceberg table with snapshot-per-iteration
@@ -33,7 +37,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 @dataclass
@@ -83,17 +88,14 @@ class IterativeRunner:
                 its.append(int(name.split("_")[1]))
         return max(its) if its else None
 
-    def _write_checkpoint(self, state: DataFrame, it: int, extra: dict) -> DataFrame:
+    def _write_checkpoint(self, state: DataFrame, it: int, extra: dict) -> None:
         d = self._ckpt_dir(it)
         data = os.path.join(d, "state")
         state.write.mode("overwrite").parquet(data)
-        reread = self.spark.read.parquet(data)
         part_sizes = [
-            r["cnt"]
-            for r in reread.groupBy(F.spark_partition_id().alias("p"))
-            .count()
-            .withColumnRenamed("count", "cnt")
-            .collect()
+            pq.read_metadata(os.path.join(data, name)).num_rows
+            for name in sorted(os.listdir(data))
+            if name.endswith(".parquet")
         ]
         manifest = {
             "iteration": it,
@@ -106,7 +108,6 @@ class IterativeRunner:
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, self._manifest_path(it))  # commit point
-        return reread
 
     def _load_checkpoint(self, it: int) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._ckpt_dir(it), "state"))
@@ -124,60 +125,69 @@ class IterativeRunner:
         step: Callable[[DataFrame, int], tuple[DataFrame, int | None]],
         check: Callable[[DataFrame, DataFrame, int], int | None] | None = None,
         resume: bool = True,
+        durable: Callable[[DataFrame], DataFrame] | None = None,
     ) -> IterationResult:
         """``step(state, it) -> (new_state_plan, changed_or_None)``;
         ``check(old, new, it) -> changed_or_None`` runs *after* the new
         state is materialized (so convergence probes hit cached data, not
-        a recompute).  Convergence = changed == 0.
+        a recompute, and metrics the step ``observe``-d are readable).
+        Convergence = changed == 0.  ``durable(state)`` is what a durable
+        checkpoint writes and a resumed run starts from (default: the
+        state itself).
 
         Every iteration the new state is **eagerly localCheckpoint-ed**:
         iterative DataFrame plans otherwise grow without bound and
         Catalyst re-optimization time explodes within ~5 rounds
         (SURVEY.md §7 hard part 4 — the Spark analogue of the reference's
         in-place big arrays).  Durable parquet checkpoints (resume path)
-        happen every ``checkpoint_every`` rounds on top.
+        happen every ``checkpoint_every`` rounds on top, and once more at
+        the end unless the last round was just written.
         """
         metrics: list[dict] = []
         start_iter = 0
+        written = None  # iteration whose state is already durable
         if self.run_dir:
             os.makedirs(self.run_dir, exist_ok=True)
         latest = self.latest_checkpoint() if (resume and self.run_dir) else None
         if latest is not None:
             state = self._load_checkpoint(latest)
-            start_iter = latest
+            start_iter = written = latest
         else:
             state = initial()
         state = state.localCheckpoint(eager=True)
+        to_disk = durable or (lambda s: s)
 
         converged = False
         it = start_iter
         while it < self.max_iterations:
             t0 = time.time()
             new_plan, changed = step(state, it)
-            new_state = new_plan.localCheckpoint(eager=True)  # truncate lineage
-            # row-count metric: one extra (tiny but not free) job per round —
-            # only pay for it when a run_dir wants durable metrics/manifests
-            n_rows = new_state.count() if self.run_dir else None
+            rows = Observation()
+            # truncate lineage; the row count rides on the same job
+            new_state = new_plan.observe(rows, F.count(F.lit(1)).alias("rows")).localCheckpoint(
+                eager=True
+            )
             if changed is None and check is not None:
                 changed = check(state, new_state, it)
             it += 1
             rec = {
                 "iteration": it,
-                "rows": n_rows,
+                "rows": rows.get["rows"],
                 "changed": changed,
                 "sec": time.time() - t0,
             }
             metrics.append(rec)
             self._log_run(rec)
             if self.run_dir and (it % self.checkpoint_every == 0):
-                self._write_checkpoint(new_state, it, {"changed": changed})
+                self._write_checkpoint(to_disk(new_state), it, {"changed": changed})
+                written = it
             state = new_state
             if changed is not None and changed == 0:
                 converged = True
                 break
-        if self.run_dir:
+        if self.run_dir and written != it:
             # final checkpoint so a resumed run sees the converged state
-            self._write_checkpoint(state, it, {"final": True})
+            self._write_checkpoint(to_disk(state), it, {"final": True})
         return IterationResult(state=state, iterations=it, converged=converged, metrics=metrics)
 
     def clear(self) -> None:

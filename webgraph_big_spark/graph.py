@@ -46,7 +46,7 @@ _PIN_ROW_BYTES_PER_COL = 16  # long column in an UnsafeRow, incl. overhead
 
 
 def co_partitioned(
-    df: DataFrame, *keys: str, num_partitions: int | None = None
+    df: DataFrame, *keys: str, num_partitions: int | None = None, rows: int | None = None
 ) -> DataFrame:
     """Pin a STATIC relation hash-partitioned by ``keys`` for an
     iterative loop — the shared recipe behind every per-round join that
@@ -72,22 +72,28 @@ def co_partitioned(
 
     ``num_partitions`` defaults to a SIZE-DERIVED count (guide §2.2:
     partition by bytes, not by a constant tuned to either local mode or
-    one cluster): one cheap count of the source sizes the pin at
+    one cluster): ``rows`` sizes the pin at
     ~``TARGET_PIN_PARTITION_BYTES`` per partition.  A 20 MB sf0.1 edge
-    table pins as ONE partition — every per-round join stage then runs
-    one real task instead of `cpus` near-empty ones — while a 2 TB
+    table pins as TWO partitions — every per-round join stage then runs
+    two real tasks instead of `cpus` near-empty ones — while a 2 TB
     production table pins as ~64k partitions, with no config change.
     Iterative-loop stages inherit the pin's partition count (the state
     side must co-partition), so this one number sets the whole loop's
-    per-round task count.
+    per-round task count.  Never fewer than 2: ``repartition(1, keys)``
+    reports SinglePartition, which no hash-distributed join can reuse,
+    so the cached side would be re-exchanged every round.
+
+    ``rows`` should come from a count of the SOURCE relation (an upper
+    bound is fine): counting ``df`` itself when it is omitted runs the
+    whole upstream plan once more before the pin runs it.
     """
-    spark = df.sparkSession
     k = num_partitions
     if k is None:
-        rows = df.count()
+        if rows is None:
+            rows = df.count()
         est_bytes = rows * _PIN_ROW_BYTES_PER_COL * max(len(df.columns), 1)
-        k = max(1, -(-est_bytes // TARGET_PIN_PARTITION_BYTES))
-    pinned = df.repartition(int(k), *keys).cache()
+        k = -(-est_bytes // TARGET_PIN_PARTITION_BYTES)
+    pinned = df.repartition(max(2, int(k)), *keys).cache()
     pinned.count()
     return pinned
 
