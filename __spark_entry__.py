@@ -892,15 +892,12 @@ import tempfile  # noqa: E402
 
 from webgraph_big_spark.algorithms.bfs import bfs_distances as _bfs  # noqa: E402
 from webgraph_big_spark.algorithms.hyperball import (  # noqa: E402
+    hyperball,
     hyperball_registers,
     hyperball_registers_sql,
     hyperball_centralities,
     hyperball_centralities_sql,
     hyperball_nf_sql,
-)
-from webgraph_big_spark.algorithms.hyperball_packed import (  # noqa: E402
-    hyperball_registers_packed as _hb_packed,
-    hyperball_packed as _hb_packed_nf,
 )
 from webgraph_big_spark.algorithms.scc import (  # noqa: E402
     strongly_connected_components_fwbw,
@@ -991,21 +988,21 @@ def _r2_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["hyperball_regs_m16_g2"] = lambda spark, sf: hyperball_registers(
         load_g2(spark, sf), HB_T, log2m=4
     )
-    # packed-register variant (8 six-bit registers per long, bit-sliced
-    # max-merge — hyperball_packed.py lifts the column design's plan-width
-    # precision ceiling): same register values, same oracle; the m=256
-    # gate runs ABOVE the default column precision
-    q["hyperball_regs_packed_g2"] = lambda spark, sf: _hb_packed(
+    # registers are packed 8 six-bit fields per long (bit-sliced
+    # max-merge, plan width O(1) in m): the *_packed_* gate names predate
+    # the single engine and run the same function; the m=256 gate
+    # exercises a precision above the default
+    q["hyperball_regs_packed_g2"] = lambda spark, sf: hyperball_registers(
         load_g2(spark, sf), HB_T
     )
-    q["hyperball_regs_packed_m256_g2"] = lambda spark, sf: _hb_packed(
+    q["hyperball_regs_packed_m256_g2"] = lambda spark, sf: hyperball_registers(
         load_g2(spark, sf), HB_T, log2m=8
     )
-    # the packed path's NF estimator (per-row partial sums + absent-slot
-    # correction): rounded to 3 dp so the float fold-order difference
-    # vs the oracle's balanced per-node tree is absorbed — registers
-    # themselves are gated integer-exact above
-    q["hyperball_packed_nf_g2"] = lambda spark, sf: _hb_packed_nf(
+    # the NF estimator (per-row partial sums + absent-slot correction):
+    # rounded to 3 dp so the float fold-order difference vs the oracle's
+    # balanced per-node tree is absorbed — registers themselves are
+    # gated integer-exact above
+    q["hyperball_packed_nf_g2"] = lambda spark, sf: hyperball(
         load_g2(spark, sf), HB_T
     ).select("t", F.round("nf", 3).alias("nf"))
     # HLL centralities: the estimator is a deterministic SQL expression,
@@ -1193,8 +1190,8 @@ def _r2_oracles() -> dict[str, str]:
     o["bfs_parents_g2"] = _bfs_parents_sql(G2_SQL, BFS_ROUNDS)
     o["hyperball_regs_g2"] = hyperball_registers_sql(G2_SQL, HB_T)
     o["hyperball_regs_m16_g2"] = hyperball_registers_sql(G2_SQL, HB_T, log2m=4)
-    # the packed variants hash against the SAME unrolled register oracle
-    # (identical register values, only the Spark-side layout differs)
+    # the *_packed_* gates run the same engine as the two above and hash
+    # against the SAME unrolled register oracle
     o["hyperball_regs_packed_g2"] = hyperball_registers_sql(G2_SQL, HB_T)
     o["hyperball_regs_packed_m256_g2"] = hyperball_registers_sql(
         G2_SQL, HB_T, log2m=8

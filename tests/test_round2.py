@@ -20,8 +20,8 @@ from webgraph_big_spark.graph import Graph
 from webgraph_big_spark.algorithms.bfs import bfs_distances
 from webgraph_big_spark.algorithms.components import connected_components
 from webgraph_big_spark.algorithms.hyperball import (
-    P,
-    W_BITS,
+    HASH_BITS,
+    LOG2M,
     hyperball,
     hyperball_centralities,
     hyperball_registers,
@@ -52,19 +52,21 @@ def _h48(s) -> int:
 
 
 def _hll_regs_oracle(edges, nodes, t):
+    m = 1 << LOG2M
+    w_bits = HASH_BITS - LOG2M
     regs = {}
     for x in nodes:
-        r = [0] * P
+        r = [0] * m
         h = _h48(x)
-        j = h & (P - 1)
-        w = h >> 6
-        r[j] = (W_BITS + 1) if w == 0 else (W_BITS - w.bit_length() + 1)
+        j = h & (m - 1)
+        w = h >> LOG2M
+        r[j] = (w_bits + 1) if w == 0 else (w_bits - w.bit_length() + 1)
         regs[x] = r
     dedup = sorted(set(map(tuple, edges)))
     for _ in range(t):
         new = {x: list(r) for x, r in regs.items()}
         for s, d in dedup:
-            for k in range(P):
+            for k in range(m):
                 if regs[d][k] > new[s][k]:
                     new[s][k] = regs[d][k]
         regs = new

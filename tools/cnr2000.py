@@ -22,7 +22,7 @@ fixture with :func:`Graph.from_adjacency_text` and validates:
 
 Usage: python tools/cnr2000.py [--skip-scc] [--skip-wcc] [--skip-hb]
                                [--skip-stats] [--hb-t N | --hb-converge]
-                               [--hb-impl column|packed] [--hb-log2m N]
+                               [--hb-log2m N]
                                [--hb-truth] [--scc-run-dir DIR]
 (writes one JSON line; --hb-t bounds the HyperBall rounds, --hb-converge
 runs to changed==0 — the slow test's fixpoint; --hb-truth additionally
@@ -155,10 +155,8 @@ def main() -> None:
 
     if not skip_hb:
         # HyperBall — --hb-t bounds the rounds, --hb-converge runs to
-        # changed==0 (the slow tests' register fixpoint); --hb-impl
-        # picks the column or the packed-register loop (identical
-        # register values; packed is the high-precision scale path);
-        # --hb-truth validates against the reference's exact NF
+        # changed==0 (the slow tests' register fixpoint); --hb-truth
+        # validates against the reference's exact NF
         hb_t: int | None = 64
         if hb_converge:
             hb_t = None
@@ -167,28 +165,10 @@ def main() -> None:
         hb_log2m = 6
         if "--hb-log2m" in sys.argv:
             hb_log2m = int(sys.argv[sys.argv.index("--hb-log2m") + 1])
-        hb_impl = "column"
-        if "--hb-impl" in sys.argv:
-            hb_impl = sys.argv[sys.argv.index("--hb-impl") + 1]
         res["hb_t_max"] = hb_t
         res["hb_log2m"] = hb_log2m
-        res["hb_impl"] = hb_impl
         t0 = time.time()
-        # NB round 6: hyperball() itself now delegates to the packed
-        # engine; "--hb-impl column" selects the original column-layout
-        # NF estimator explicitly.
-        if hb_impl == "column":
-            from webgraph_big_spark.algorithms.hyperball import (
-                _hyperball_column_nf as hyperball,  # noqa: F811
-            )
-        if hb_impl == "packed":
-            from webgraph_big_spark.algorithms.hyperball_packed import (
-                hyperball_packed,
-            )
-
-            nf = hyperball_packed(g, t_max=hb_t, log2m=hb_log2m).collect()
-        else:
-            nf = hyperball(g, t_max=hb_t, log2m=hb_log2m).collect()
+        nf = hyperball(g, t_max=hb_t, log2m=hb_log2m).collect()
         res["hyperball_sec"] = round(time.time() - t0, 1)
         progress(f"hyperball {res['hyperball_sec']}s")
         ests = [r["nf"] for r in sorted(nf, key=lambda r: r["t"])]

@@ -141,38 +141,7 @@ def main() -> None:
         )
     )
 
-    # 7. HyperBall merge round (production loop shape): edges cached
-    # hash-partitioned by dst, systolic double join, 64 built-in max aggs
-    from webgraph_big_spark.algorithms.hyperball import _RCOLS, _init_state
-
-    state = _init_state(g1).localCheckpoint(eager=True)
-    edges_hb = g1.edges.select("src", "dst").distinct().repartition(8, "dst").cache()
-    edges_hb.count()
-    changed = state.select("id")
-    msgs = (
-        edges_hb.join(
-            changed.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst"
-        )
-        .join(state.selectExpr("id AS dst", *_RCOLS).hint("shuffle_hash"), "dst")
-        .selectExpr("src AS id", *_RCOLS)
-    )
-    merged = msgs.groupBy("id").agg(*[F.max(c).alias(c) for c in _RCOLS])
-    sections.append(
-        (
-            "HyperBall merge round (co-partitioned edges)",
-            "Expect the edge side read from InMemoryTableScan with NO Exchange "
-            "above it (the cache preserves the dst hash partitioning — only the "
-            "frontier and state rows exchange per round), then HashAggregate "
-            "partial/final around ONE id shuffle for the register max-merge "
-            "(map-side combine collapses hub fan-in) and zero Python operators — "
-            "no ArrowEvalPython, no FlatMapGroupsInPandas.",
-            merged,
-        )
-    )
-    # NB: edges_hb stays cached — the explain at the end must still see
-    # the InMemoryRelation (the script exits right after)
-
-    # 8-10. the round-4 consistency fix: WCC / label-prop / BFS rounds on
+    # 7-9. the round-4 consistency fix: WCC / label-prop / BFS rounds on
     # the SAME co-partitioned recipe as PageRank/HyperBall (one shared
     # helper, graph.py:co_partitioned) — state/frontier moves, edges don't
     from webgraph_big_spark.graph import co_partitioned

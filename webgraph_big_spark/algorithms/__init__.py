@@ -13,10 +13,6 @@ from webgraph_big_spark.algorithms.hyperball import (  # noqa: F401
     hyperball_centralities,
     hyperball_registers,
 )
-from webgraph_big_spark.algorithms.hyperball_packed import (  # noqa: F401
-    hyperball_packed,
-    hyperball_registers_packed,
-)
 from webgraph_big_spark.algorithms.scc import (  # noqa: F401
     scc_buckets,
     strongly_connected_components,

@@ -9,42 +9,42 @@ and the per-node ball-size deltas accumulate into the neighbourhood
 function and the geometric centralities (``algo/HyperBall.java:245``:
 harmonic / closeness / Lin / reachable).
 
-Spark design (production path — 100% JVM in the hot loop):
+Spark design (100% JVM in the hot loop).  Like the reference, which
+keeps one register array and merges it with word-wise ops, registers
+are packed, 8 six-bit fields per long:
 
-- state(id, r0..r{m-1}: int, est: double): the 2^log2m registers are
-  COLUMNS, not a packed blob, so the per-round merge is m built-in
-  ``F.max`` aggregates.  That buys the two properties a packed-binary +
-  ``collect_list`` + Arrow-UDF merge cannot have:
-  * **map-side combine** — a 10⁸-in-degree hub receives one partial row
-    per upstream task, never 10⁸ rows in one group (no OOM, no salting);
-  * **zero Python** — merge, changed-detection, and the HLL estimator
-    (Σ 2^-r, zero count, small-range correction) are all codegen'd
-    column expressions.
-- ``log2m`` is the reference ctor's precision knob
-  (``algo/HyperBall.java:217``): rel. std ≈ 1.04/sqrt(m).  The plan is
-  O(m) columns wide — the measured driver/plan-build cost per m is in
-  BENCH.md; the default m=64 keeps plans cheap (~13% rel. std, the
-  reference's own small-precision regime).
-- the edge table is hash-partitioned by ``dst`` ONCE and cache()d
-  (InMemoryRelation preserves outputPartitioning; localCheckpoint's
-  LogicalRDD would not) so the two per-round joins on ``dst`` exchange
-  ONLY the changed-frontier and state rows — the m-arc edge table never
-  reshuffles inside the loop (same recipe as pagerank.py's
-  co-partitioned path).
-- messages flow only from nodes whose counter changed last round
-  (systolic); termination is ``changed = ∅`` (the natural fixpoint).
-- NF / centrality updates are *incremental*: only touched nodes
-  contribute (est − old_est) deltas each round.
+- state(id, slot, packed): slot = register_index >> 3; ``packed`` holds
+  registers ``slot*8 .. slot*8+7`` (48 bits used; rho ≤ HASH_BITS −
+  log2m + 1 = 46 at the minimum log2m=3).  Rows are SPARSE — an absent
+  (id, slot) row means eight zero registers, so a fresh counter is ONE
+  row regardless of m = 2^log2m.
+- merge = one (id, slot) groupBy with 8 shift/mask ``max`` aggregates
+  and one repack.  The field maxes are algebraic, so map-side combine
+  collapses hub fan-in (a 10⁸-in-degree hub receives one partial row
+  per upstream task — no OOM, no salting), and the plan is O(1) wide
+  in m: precision costs rows, not plan.  ``log2m`` is the reference
+  ctor's precision knob (rel. std ≈ 1.04/sqrt(m)); the default m=64
+  is the reference's own small-precision regime.
+- systolic at SLOT granularity: only (id, slot) rows whose packed value
+  changed last round emit messages; termination is "no packed word
+  changed" (the natural fixpoint).
+- the edge table is hash-partitioned by ``dst`` once
+  (``graph.co_partitioned``), so per round only the frontier and the
+  state rows exchange — the edge table never reshuffles in the loop.
+- centralities need per-node estimates: :func:`_node_est` rebuilds the
+  m-register estimate BIT-EXACTLY from per-slot partial sums, so the
+  per-round (est − old_est) deltas equal the SQL oracle's.
 
 The register hash is the engine-portable md5-prefix hash
 (``functions.stable_long_hash``), so the full register state after t
 rounds is bit-reproducible in ANSI SQL — the driver gate compares the
 merged registers themselves (integers, no float tolerance), and the
-unrolled DuckDB oracles below are 1:1 mirrors of the Spark plan
-(:func:`hyperball_registers_sql` for the raw registers,
-:func:`hyperball_centralities_sql` for the estimator + per-round
-harmonic/closeness delta sums — the same float expressions in the same
-association order, so 3-dp-rounded outputs hash-match).
+unrolled DuckDB oracles below (one column per register) mirror the
+Spark computation (:func:`hyperball_registers_sql` for the raw
+registers, :func:`hyperball_centralities_sql` for the estimator +
+per-round harmonic/closeness delta sums — for the centralities, the same
+float expressions in the same association order, so 3-dp-rounded
+outputs hash-match).
 """
 
 from __future__ import annotations
@@ -56,7 +56,8 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, functions as F
 
 from webgraph_big_spark.functions import stable_long_hash
-from webgraph_big_spark.graph import Graph
+from webgraph_big_spark.graph import Graph, co_partitioned
+from webgraph_big_spark.transforms import BidirectionalGraph
 
 
 def neighbourhood_function_exact(g: Graph, t_max: int) -> DataFrame:
@@ -207,42 +208,41 @@ def _balanced_expr(terms: list[str], op: str) -> str:
     )
 
 
+def _est_expr(p: int) -> str:
+    """HLL estimate of a counter from its ``_z`` = Σ 2^-r and ``_zeros``
+    columns: α·m²/Σ2^-r with the small-range (linear counting)
+    correction."""
+    a = _alpha(p)
+    return (
+        f"CASE WHEN ({a * p * p} / _z) <= {2.5 * p} AND _zeros > 0 "
+        f"THEN {float(p)} * ln({float(p)} / CAST(_zeros AS DOUBLE)) "
+        f"ELSE ({a * p * p} / _z) END"
+    )
+
+
 @functools.lru_cache(maxsize=None)
 def _cfg(log2m: int) -> SimpleNamespace:
-    """Per-precision expression bundle.  All multi-register expressions
-    are SQL STRINGS evaluated with one selectExpr/F.expr call: building
-    m-column trees through the Column API costs one py4j round-trip per
-    operator (~5 ms each ⇒ seconds of pure driver overhead per loop
-    round); a string is ONE call and parses JVM-side."""
+    """Per-precision expression bundle for the m-register SQL oracles
+    and the bit-exact per-node estimate (:func:`_node_est`).  All
+    multi-register expressions are SQL STRINGS evaluated with one
+    selectExpr/F.expr call: building m-term trees through the Column API
+    costs one py4j round-trip per operator; a string is ONE call and
+    parses JVM-side.  The log2m ≤ 12 cap bounds those m-term trees (the
+    centralities and the unrolled oracles); the packed merge loop itself
+    is O(1) in m and goes up to log2m = 20 (:func:`init_register_cols`)."""
     if not 4 <= log2m <= 12:
         raise ValueError(f"log2m must be in [4, 12], got {log2m}")
     p = 1 << log2m
-    a = _alpha(p)
     return SimpleNamespace(
         log2m=log2m,
         p=p,
         w_bits=HASH_BITS - log2m,
-        rcols=[f"r{k}" for k in range(p)],
         zsum=_balanced_sum([f"exp({-_LN2} * r{k})" for k in range(p)]),
         zeros=_balanced_sum(
             [f"(CASE WHEN r{k} = 0 THEN 1 ELSE 0 END)" for k in range(p)]
         ),
-        est_expr=(
-            f"CASE WHEN ({a * p * p} / _z) <= {2.5 * p} AND _zeros > 0 "
-            f"THEN {float(p)} * ln({float(p)} / CAST(_zeros AS DOUBLE)) "
-            f"ELSE ({a * p * p} / _z) END"
-        ),
+        est_expr=_est_expr(p),
     )
-
-
-# back-compat module constants (the m=64 default; tests/tools import these)
-P = _cfg(LOG2M).p
-W_BITS = _cfg(LOG2M).w_bits
-_ALPHA_64 = _alpha(64)
-_RCOLS = _cfg(LOG2M).rcols
-_ZSUM = _cfg(LOG2M).zsum
-_ZEROS = _cfg(LOG2M).zeros
-_EST_EXPR = _cfg(LOG2M).est_expr
 
 
 def init_register_cols(log2m: int = LOG2M):
@@ -253,9 +253,10 @@ def init_register_cols(log2m: int = LOG2M):
     j = h & (m-1);  w = h >> log2m;  rho = (w_bits - bitlen(w)) + 1
     (bitlen via the binary-string length — exact, no float log).
 
-    Deliberately does NOT go through ``_cfg`` (whose log2m ≤ 12 cap is a
-    COLUMN-design plan-width limit): the packed-register path
-    (``hyperball_packed.py``) shares this init at higher precisions."""
+    Valid for log2m in 3..20: m ≥ 8 fills at least one packed slot, and
+    rho ≤ 46 fits a 6-bit field at every allowed precision.  This does
+    not go through ``_cfg``, whose log2m ≤ 12 cap only bounds the m-term
+    estimate trees."""
     if not 3 <= log2m <= 20:
         raise ValueError(f"log2m must be in [3, 20], got {log2m}")
     p = 1 << log2m
@@ -269,197 +270,204 @@ def init_register_cols(log2m: int = LOG2M):
     return j.alias("j"), rho.cast("int").alias("rho")
 
 
-def _with_est(df: DataFrame, c: SimpleNamespace) -> DataFrame:
-    """Append the HLL estimate column (α·m²/Σ2^-r with small-range
-    correction) — pure codegen'd SQL expressions."""
-    keep = [col for col in df.columns]
-    return df.selectExpr(
-        *keep, f"({c.zsum}) AS _z", f"({c.zeros}) AS _zeros"
-    ).selectExpr(*keep, f"{c.est_expr} AS est")
+# ---------------------------------------------------------------------------
+# packed registers: 8 six-bit fields per long, bit-sliced max-merge
+# ---------------------------------------------------------------------------
+
+K = 8  # registers per long (8 divides every m = 2^log2m ≥ 8)
+BITS = 6  # bits per register: rho ≤ HASH_BITS - log2m + 1 = 46 (log2m ≥ 3) < 63
+MASK = (1 << BITS) - 1
 
 
-def _init_state(g: Graph, log2m: int = LOG2M) -> DataFrame:
-    """state(id, r0..r{m-1}): each node's counter containing just {id}."""
-    c = _cfg(log2m)
-    jrho = g.nodes().select("id", *init_register_cols(log2m))
-    return jrho.selectExpr(
-        "id", *[f"CASE WHEN j = {k} THEN rho ELSE 0 END AS r{k}" for k in range(c.p)]
+def _field(expr: str, j: int) -> str:
+    return f"(shiftright({expr}, {BITS * j}) & {MASK})"
+
+
+def _repack(fields: list[str]) -> str:
+    return _balanced_sum(
+        [f"shiftleft({f}, {BITS * j})" for j, f in enumerate(fields)]
     )
 
 
-def _hyperball_loop(g: Graph, t_max: int | None, on_round, log2m: int = LOG2M):
-    """Shared systolic driver.  ``on_round(t, state, touched,
-    new_changed)`` is called after each merge; the loop ends when no
-    counter changed or t_max is hit.  Everything here is built-in
-    column expressions — max-merge with map-side combine, greatest()
-    against the old state, m-way inequality for change detection.
+def _greatest_packed(a: str, b: str) -> str:
+    """Field-wise max of two packed longs — the bit-sliced merge."""
+    return _repack(
+        [f"greatest({_field(a, j)}, {_field(b, j)})" for j in range(K)]
+    )
 
-    The edge table is partitioned by ``dst`` once and cached so the
-    per-round joins never re-exchange it (see module docstring)."""
-    c = _cfg(log2m)
-    spark = g.edges.sparkSession
-    from webgraph_big_spark.graph import co_partitioned
 
-    # no ``distinct()`` before the pin: register max-merge is idempotent,
-    # so duplicate arcs cannot change any merged register — the dedup
-    # shuffle ahead of the repartition was pure setup cost (guide §2.4)
+# one packed row's 8-term subtrees of Σ 2^-r and of the zero count
+_ROW_ZSUM = _balanced_sum([f"exp({-_LN2} * {_field('packed', j)})" for j in range(K)])
+_ROW_ZEROS = _balanced_sum(
+    [f"(CASE WHEN {_field('packed', j)} = 0 THEN 1 ELSE 0 END)" for j in range(K)]
+)
+
+
+def _packed_init(g: Graph, log2m: int) -> DataFrame:
+    """One row per node: the slot holding its own-hash register.
+    init_register_cols validates log2m (3..20)."""
+    return g.nodes().select("id", *init_register_cols(log2m)).selectExpr(
+        "id",
+        f"CAST((j div {K}) AS INT) AS slot",
+        f"shiftleft(CAST(rho AS BIGINT), CAST((j % {K}) * {BITS} AS INT)) AS packed",
+    )
+
+
+def _packed_loop(g: Graph, t_max: int | None, log2m: int, on_round=None):
+    """Systolic driver over sparse (id, slot, packed) rows.  Returns the
+    final state.  Hot path: two joins + one (id, slot) groupBy with
+    8 algebraic max aggregates — all codegen'd, O(1) plan width in m.
+    ``on_round(t, state)`` is called after each merge; the loop ends
+    when no packed word changed or t_max is hit."""
+    # no ``distinct()`` before the pin: the field-wise max merge is
+    # idempotent, duplicate arcs cannot change any register (guide §2.4)
     edges = co_partitioned(g.edges.select("src", "dst"), "dst")
-    # scope whole-stage codegen OFF for the column loop only: its m-wide
-    # projections (init CASEs, m greatest's, 2m est terms) fuse into
-    # generated methods past the JIT's compilable-size limits at ANY
-    # data scale, so whole-stage here buys compile time + interpreted
-    # bytecode instead of speed (A/B at sf0.1: warm round 6.5 → 4.3 s).
-    # Expression-level codegen still applies; the packed engine (O(1)
-    # plan width) keeps whole-stage fusion.
-    prev_wsc = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try:
-        state = _with_est(_init_state(g, log2m), c).localCheckpoint(eager=True)
-        changed = state.select("id")  # round 0: everything is new
+        state = _packed_init(g, log2m).localCheckpoint(eager=True)
+        changed = state  # round 0: every row is new
         t = 0
-        # changed ⇔ some incoming max exceeds the old register (balanced
-        # OR tree: parser depth log2(m), supports large register counts)
-        chg_expr = _balanced_expr(
-            [f"coalesce(m{k}, 0) > o{k}" for k in range(c.p)], "OR"
-        )
-        merged_exprs = [
-            f"greatest(o{k}, coalesce(m{k}, 0)) AS r{k}" for k in range(c.p)
+        max_aggs = [
+            F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)
         ]
         while t_max is None or t < t_max:
             t += 1
-            # systolic: only counters that changed last round are propagated;
-            # regs travel dst→src (x absorbs its successors' balls).  The
-            # groupBy-max gets partial aggregation: hub fan-in collapses
-            # map-side, one partial row per task reaches the reducer.  Both
-            # joins key on dst: the cached edge partitioning satisfies the
-            # distribution requirement, so only the (thin) frontier and the
-            # state rows are exchanged; shuffle_hash avoids re-sorting the
-            # cached relation every round.
+            # regs travel dst→src (x absorbs its successors' balls); the
+            # groupBy-max gets partial aggregation, so hub fan-in
+            # collapses map-side
             msgs = (
                 edges.join(
                     changed.withColumnRenamed("id", "dst").hint("shuffle_hash"),
                     "dst",
                 )
-                .join(
-                    state.selectExpr("id AS dst", *c.rcols).hint("shuffle_hash"),
-                    "dst",
+                .groupBy(F.col("src").alias("id"), "slot")
+                .agg(*max_aggs)
+                .selectExpr(
+                    "id",
+                    "slot",
+                    f"{_repack([f'_f{j}' for j in range(K)])} AS mpacked",
                 )
-                .selectExpr("src AS id", *c.rcols)
             )
-            gathered = msgs.groupBy("id").agg(
-                *[F.expr(f"max(r{k})").alias(f"m{k}") for k in range(c.p)]
+            merged = (
+                state.join(msgs.hint("shuffle_hash"), ["id", "slot"], "full")
+                .selectExpr(
+                    "id",
+                    "slot",
+                    "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
+                    f"{_greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed",
+                )
+                .localCheckpoint(eager=True)
             )
-            old_named = state.selectExpr(
-                "id", *[f"r{k} AS o{k}" for k in range(c.p)], "est AS old_est"
+            changed = merged.filter(F.col("packed") != F.col("old_packed")).select(
+                "id", "slot", "packed"
             )
-            # ONE left join replaces the old inner-join + anti-join +
-            # union state rebuild: rows without messages keep their
-            # registers (coalesce(m,0) is absent → greatest(o,0)=o) and
-            # recompute the SAME est bits from the same registers, so
-            # their (est - old_est) delta is exactly +0.0 — an IEEE
-            # no-op in every accumulator downstream.  The full state is
-            # materialized once per round instead of twice.
-            touched = (
-                old_named.join(gathered.hint("shuffle_hash"), "id", "left")
-                .selectExpr("id", *merged_exprs, "old_est", f"({chg_expr}) AS _chg")
-            )
-            touched = _with_est(touched, c).localCheckpoint(eager=True)
-            new_changed = touched.filter(F.col("_chg")).select("id")
-            state = touched.select("id", *c.rcols, "est")
-            n_changed = on_round(t, state, touched, new_changed)
-            if n_changed == 0:
+            state = merged.select("id", "slot", "packed")
+            if on_round is not None:
+                on_round(t, state)
+            if changed.isEmpty():
                 break
-            changed = new_changed
-        return state, t
+        return state
     finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_wsc)
         edges.unpersist()
 
 
 def hyperball(g: Graph, t_max: int | None, log2m: int = LOG2M) -> DataFrame:
-    """(t, nf_estimate) for t = 0..t_max: approximate neighbourhood
-    function.
-
-    Delegates to the packed-register engine
-    (:func:`webgraph_big_spark.algorithms.hyperball_packed.hyperball_packed`):
-    identical register values (both layouts hash-gate against the same
-    unrolled oracle), but plan width O(1) in m instead of O(m) — measured
-    2x faster warm and substantially cheaper to codegen-compile cold
-    (OPTIMIZATION_r06.md).  NF estimates agree with the column engine to
-    float round-off (different partial-sum association order).  The
-    column loop below (`_hyperball_loop`) remains the engine for the
-    register/centrality gates, whose oracles mirror its exact float
-    expression order."""
-    from webgraph_big_spark.algorithms.hyperball_packed import hyperball_packed
-
-    return hyperball_packed(g, t_max, log2m)
-
-
-def _hyperball_column_nf(g: Graph, t_max: int, log2m: int = LOG2M) -> DataFrame:
-    """The original column-layout NF estimator (kept for parity tests
-    and as the reference implementation of the incremental-delta NF
-    accumulation)."""
+    """(t, nf) for t = 0..t_max: the approximate neighbourhood function.
+    The per-round estimate aggregates per-row partials (Σ 2^-field and
+    zero-field counts) plus the absent-slot correction — absent rows are
+    eight zero registers each.  ``t_max=None`` runs to the register
+    fixpoint (no packed word changed — the reference slow tests'
+    convergence criterion, ``HyperBallSlowTest.java:46-76``).  ``log2m``
+    in 3..20."""
     spark = g.edges.sparkSession
-    c = _cfg(log2m)
+    p = 1 << log2m
     results: list[tuple[int, float]] = []
-    nf = [0.0]
 
-    def on_round(t, state, touched, new_changed):
-        if t == 1:
-            # NF(0) from the same materialized state the loop built;
-            # subtract this round's deltas back out of the current sums.
-            row0 = state.agg(F.coalesce(F.sum("est"), F.lit(0.0)).alias("s")).first()
-            drow = touched.agg(
-                F.coalesce(F.sum(F.col("est") - F.col("old_est")), F.lit(0.0)).alias("d")
-            ).first()
-            nf[0] = float(row0["s"]) - float(drow["d"])
-            results.append((0, nf[0]))
-            nf[0] += float(drow["d"])
-            results.append((1, nf[0]))
-            return new_changed.count()
-        row = touched.agg(
-            F.coalesce(F.sum(F.col("est") - F.col("old_est")), F.lit(0.0)).alias("d"),
-        ).first()
-        n_changed = new_changed.count()
-        nf[0] += float(row["d"])
-        results.append((t, nf[0]))
-        return n_changed
+    def estimate(state: DataFrame) -> float:
+        per_node = (
+            state.selectExpr("id", f"({_ROW_ZSUM}) AS _zr", f"({_ROW_ZEROS}) AS _kr")
+            .groupBy("id")
+            .agg(
+                F.expr(f"sum(_zr) + ({p} - count(*) * {K}) * 1.0").alias("_z"),
+                F.expr(f"sum(_kr) + ({p} - count(*) * {K})").alias("_zeros"),
+            )
+        )
+        est = per_node.selectExpr(f"{_est_expr(p)} AS est")
+        return float(est.agg(F.coalesce(F.sum("est"), F.lit(0.0))).first()[0])
 
-    if t_max == 0:
-        state0 = _with_est(_init_state(g, log2m), c)
-        nf0 = float(state0.agg(F.coalesce(F.sum("est"), F.lit(0.0))).first()[0])
-        return spark.createDataFrame([(0, nf0)], "t long, nf double")
-    _hyperball_loop(g, t_max, on_round, log2m)
-    if not results:  # graph with no arcs: loop did one no-op round
-        state0 = _with_est(_init_state(g, log2m), c)
-        nf[0] = float(state0.agg(F.coalesce(F.sum("est"), F.lit(0.0))).first()[0])
-        results.append((0, nf[0]))
-    # pad to t_max if the systolic loop converged early (NF is constant);
-    # t_max=None (run to the fixpoint) needs no padding — guard like
-    # hyperball_packed does, so a converged t_max=None run returns
-    # instead of raising TypeError after the whole computation
+    # NF(t) from the full state after each round (one aggregation per round)
+    results.append((0, estimate(_packed_init(g, log2m))))
+    _packed_loop(
+        g, t_max, log2m, on_round=lambda t, state: results.append((t, estimate(state)))
+    )
+    # pad if the systolic loop converged early (NF is constant from there)
     while t_max is not None and len(results) <= t_max:
-        results.append((len(results), nf[0]))
+        results.append((len(results), results[-1][1]))
     return spark.createDataFrame(results, "t long, nf double")
 
 
 def hyperball_registers(g: Graph, t_max: int, log2m: int = LOG2M) -> DataFrame:
-    """(id, regs_csv): the raw merged register vectors after ``t_max``
-    rounds, serialized as comma-joined decimal values.  Integers only —
-    the exactly-reproducible core the driver gate hashes against the
-    unrolled SQL oracle (:func:`hyperball_registers_sql`)."""
-    c = _cfg(log2m)
-
-    def on_round(t, state, touched, new_changed):
-        return new_changed.count()
-
-    state, _ = _hyperball_loop(g, t_max, on_round, log2m)
-    return state.select(
+    """(id, regs_csv): every node's merged register vector after
+    ``t_max`` rounds, r0..r{m-1} as comma-joined decimal values (absent
+    slots expand to zeros).  Integers only — the exactly-reproducible
+    core the driver gates hash against the unrolled SQL oracle
+    (:func:`hyperball_registers_sql`).  ``log2m`` in 3..20."""
+    nslots = (1 << log2m) // K
+    state = _packed_loop(g, t_max, log2m)
+    dense = g.nodes().join(
+        state.groupBy("id").agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("slot", "packed"))
+            ).alias("_mp")
+        ),
         "id",
-        F.concat_ws(",", *[F.col(col).cast("string") for col in c.rcols]).alias(
-            "regs_csv"
+        "left",
+    )
+    return dense.selectExpr(
+        "id",
+        "concat_ws(',', flatten(transform(sequence(0, {last}), "
+        "s -> transform(sequence(0, {kk}), "
+        "j -> CAST(shiftright(coalesce(element_at(_mp, s), CAST(0 AS BIGINT)), j * {bits}) & {mask} AS STRING)"
+        ")))) AS regs_csv".format(
+            last=nslots - 1, kk=K - 1, bits=BITS, mask=MASK
         ),
     )
+
+
+def _node_est(state: DataFrame, log2m: int) -> DataFrame:
+    """(id, est) from sparse packed state rows, BIT-EXACT with the SQL
+    oracle's per-node estimate (``_cfg(log2m).est_expr`` over the m
+    register columns).
+
+    ``_cfg``'s m-term balanced summation tree splits at midpoints, so
+    for m = 2^log2m it decomposes into m/8 CONTIGUOUS 8-term subtrees —
+    one per slot — combined by a balanced tree over the slot partials.
+    Each state row therefore computes its own 8-term subtree (register
+    k extracted in index order; ``exp(0)=1.0`` exactly, so an ABSENT
+    slot's partial is the compile-time constant 8.0 / zero-count 8), and
+    the per-node combine folds the ≤ m/8 partials in slot order through
+    the SAME upper tree.  Identical doubles in identical association
+    order ⇒ identical estimate bits, which is what lets the centralities
+    gate hash-match.  Generated code is O(m/8) per expression instead of
+    O(m)."""
+    c = _cfg(log2m)
+    nslots = c.p // K
+    rows = state.selectExpr("id", "slot", f"({_ROW_ZSUM}) AS _zr", f"({_ROW_ZEROS}) AS _kr")
+    dense = rows.groupBy("id").agg(
+        F.map_from_entries(F.collect_list(F.struct("slot", "_zr"))).alias("_zm"),
+        F.map_from_entries(F.collect_list(F.struct("slot", "_kr"))).alias("_km"),
+    )
+    zsum = _balanced_sum(
+        [
+            f"coalesce(element_at(_zm, {s}), CAST(8.0 AS DOUBLE))"
+            for s in range(nslots)
+        ]
+    )
+    zeros = _balanced_sum(
+        [f"coalesce(element_at(_km, {s}), 8)" for s in range(nslots)]
+    )
+    return dense.selectExpr(
+        "id", f"({zsum}) AS _z", f"({zeros}) AS _zeros"
+    ).selectExpr("id", f"{c.est_expr} AS est")
 
 
 def hyperball_centralities(
@@ -471,60 +479,37 @@ def hyperball_centralities(
 
     Counters run over the TRANSPOSE internally (centrality of x counts
     nodes that *reach* x, ``LinearGeometricCentrality.java:66-76``), so
-    pass the graph itself, not its transpose.  Per round t, each touched
-    node's ball grew by (est − old_est); harmonic adds that mass / t,
-    the closeness denominator adds mass · t.  ``discount`` is the
+    pass the graph itself, not its transpose.  Per round t, each node's
+    ball grew by (est − old_est); harmonic adds that mass / t, the
+    closeness denominator adds mass · t.  ``discount`` is the
     reference's pluggable discount-function extension point
     (``HyperBall.java:245`` discountFunction): a Python callable
     t → weight evaluated driver-side per round (t is a small integer),
     accumulating mass · discount(t) into a ``discounted`` column.
-    Runs to the systolic fixpoint when ``t_max`` is None.
+    Runs to the systolic fixpoint when ``t_max`` is None.  ``log2m`` in
+    4..12 (``_cfg``).
 
-    SQL-oracle mirror: :func:`hyperball_centralities_sql` (same
-    expressions, same left-to-right accumulation order).
-
-    Delegates to the packed-register engine
-    (:func:`~webgraph_big_spark.algorithms.hyperball_packed.hyperball_centralities_packed`),
-    whose output is BIT-IDENTICAL: registers evolve identically in both
-    layouts (both gated against the same oracle), per-node estimates are
-    computed by the same expression tree over the same register values
-    in the same association order, and the delta accumulation replicates
-    this column engine term for term — `tests/test_round6.py` asserts
-    exact equality.  The column implementation below
-    (`_hyperball_centralities_column`) remains the reference form the
-    SQL oracle mirrors."""
-    from webgraph_big_spark.algorithms.hyperball_packed import (
-        hyperball_centralities_packed,
-    )
-
-    return hyperball_centralities_packed(g, t_max=t_max, discount=discount, log2m=log2m)
-
-
-def _hyperball_centralities_column(
-    g: Graph, t_max: int | None = None, discount=None, log2m: int = LOG2M
-) -> DataFrame:
-    """The original column-engine centralities (the form the SQL oracle
-    mirrors expression for expression) — kept as the parity reference."""
-    from webgraph_big_spark.transforms import BidirectionalGraph
-
+    SQL-oracle mirror: :func:`hyperball_centralities_sql` — per-node
+    estimates are bit-exact (:func:`_node_est`) and the deltas
+    accumulate with the same expressions in the same left-associative
+    order (rounds without change add exactly +0.0)."""
     gt = BidirectionalGraph(g).backward
+    prev = [None]
     acc = [None]  # (id, harmonic, sumdist, discounted) accumulator
 
-    def on_round(t, state, touched, new_changed):
-        n_changed = new_changed.count()
+    def on_round(t, state):
+        cur = _node_est(state, log2m).localCheckpoint(eager=True)
         dmass = F.col("est") - F.col("old_est")
-        deltas = touched.select(
+        deltas = cur.join(
+            prev[0].withColumnRenamed("est", "old_est").hint("shuffle_hash"), "id"
+        ).select(
             "id",
             (dmass / F.lit(float(t))).alias("dh"),
             (dmass * F.lit(float(t))).alias("dd"),
             (dmass * F.lit(float(discount(t)) if discount else 0.0)).alias("dc"),
         )
-        # accumulate LAZILY: `deltas` is a cheap projection of the
-        # round's already-checkpointed state, so the running join chain
-        # costs nothing per round and is truncated every 4 rounds — the
-        # old per-round full-join + localCheckpoint was one extra O(n)
-        # job every round.  The left-associative (acc + delta_t) float
-        # order the SQL oracle mirrors is preserved exactly.
+        # accumulate LAZILY: the running join chain costs nothing per
+        # round and is truncated every 4 rounds
         if acc[0] is None:
             acc[0] = deltas.select(
                 "id",
@@ -545,10 +530,11 @@ def _hyperball_centralities_column(
             )
         if t % 4 == 0:
             acc[0] = acc[0].localCheckpoint(eager=True)
-        return n_changed
+        prev[0] = cur
 
-    state, _ = _hyperball_loop(gt, t_max, on_round, log2m)
-    base = state.select("id", F.col("est").alias("reachable"))
+    prev[0] = _node_est(_packed_init(gt, log2m), log2m).localCheckpoint(eager=True)
+    _packed_loop(gt, t_max, log2m, on_round=on_round)
+    base = prev[0].select("id", F.col("est").alias("reachable"))
     extra = [F.lit(0.0).alias("discounted")] if discount else []
     a = acc[0]
     if a is None:
@@ -608,8 +594,8 @@ def register_init_sql(nodes_cte: str, log2m: int = LOG2M) -> str:
 
 def _register_rounds_sql(edge_sql: str, t_max: int, c: SimpleNamespace) -> list[str]:
     """Shared CTE chain: e, nodes, _h/_jr, s0..s{t_max} — the unrolled
-    register recursion (m per-register max-merge columns per round, the
-    same shape as the Spark plan: m max aggregates + greatest)."""
+    register recursion, one max-merge column per register per round
+    (the same register values the packed Spark loop holds 8 per long)."""
     parts = [
         f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edge_sql}))",
         "nodes AS MATERIALIZED (SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION ALL SELECT dst FROM e))",
@@ -649,10 +635,10 @@ def hyperball_nf_sql(
     function (t, nf): the same forward register recursion as
     ``hyperball_registers_sql``, then per round nf_t = Σ_id est(s_t)
     rounded at ``round_dp``.  The rounding absorbs float association
-    differences: the packed Spark path (``hyperball_packed.py``) folds
-    per-row partials while this oracle (and the column design) folds a
-    balanced per-node tree — registers are integer-exact either way, so
-    the sums agree to ~1e-11 relative, far inside the rounding."""
+    differences: :func:`hyperball` folds per-row (per-slot) partials
+    while this oracle folds a balanced m-term tree per node — registers
+    are integer-exact either way, so the sums agree to ~1e-11 relative,
+    far inside the rounding."""
     c = _cfg(log2m)
     parts = _register_rounds_sql(edge_sql, t_max, c)
     for t in range(t_max + 1):

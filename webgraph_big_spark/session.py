@@ -51,10 +51,11 @@ def get_spark(
         # on scc_fwbw showed ~30% loss with bytes-first coalescing.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Catalyst constraint propagation is O(expressions²) during
-        # optimization; the wide-register HyperBall plans (hundreds of
-        # expressions) pay seconds of pure driver time per round for an
-        # inference pass that never helps these join shapes (measured
-        # ~10-15% on hyperball_centralities at sf0.1).  Purely an
+        # optimization and never helps these iterative join shapes.  It
+        # was turned off for the one-column-per-register HyperBall plans
+        # (hundreds of expressions; ~10-15% on hyperball_centralities at
+        # sf0.1), which no longer exist; whether dropping the setting
+        # now pays off needs its own A/B over every workload.  Purely an
         # optimizer-cost knob — plans stay semantically identical.
         .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
