@@ -3,17 +3,19 @@
 Analogue of ``ParallelBreadthFirstVisit`` (``algo/ParallelBreadthFirstVisit.java:79``):
 its shared queue + CAS ``marker`` array + per-level CyclicBarrier map to a
 ``visited`` state DataFrame, a ``frontier`` DataFrame and one Spark job
-per level (SURVEY.md §3.3).  ``visit_all`` reproduces ``visitAll()``
-(``:272``): restart from the smallest unvisited node until every node is
-reached; the per-node "round" is the BFS index — which is exactly how the
-reference derives WCC (``algo/ConnectedComponents.java:107``).
+per level: the frontier's checkpoint, whose observed row count also ends
+the loop (``graph.frontier_reach``; SURVEY.md §3.3).  ``visit_all``
+reproduces ``visitAll()`` (``:272``): restart from the smallest
+unvisited node until every node is reached; the per-node "round" is the
+BFS index — which is exactly how the reference derives WCC
+(``algo/ConnectedComponents.java:107``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from webgraph_big_spark.graph import Graph, co_partitioned
+from webgraph_big_spark.graph import Graph, co_partitioned, frontier_reach
 
 
 def bfs_distances(
@@ -36,6 +38,15 @@ def bfs_distances(
     id, as the reference's roots point at themselves).
     """
     spark = g.edges.sparkSession
+    if isinstance(sources, DataFrame):
+        src_df = sources.select(F.col("id").cast("long"))
+    else:
+        src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")
+
+    first_cols = ["id", F.lit(0).alias("dist")] + (
+        [F.col("id").alias("parent")] if parents else []
+    )
+
     if symmetric:
         arc_view = g.edges.select("src", "dst")
     else:
@@ -53,53 +64,30 @@ def bfs_distances(
         arc_view, "src", rows=g.num_arcs() * (1 if symmetric else 2)
     )
 
-    if isinstance(sources, DataFrame):
-        src_df = sources.select(F.col("id").cast("long"))
-    else:
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "id long")
-
-    first_cols = ["id", F.lit(0).alias("dist")] + (
-        [F.col("id").alias("parent")] if parents else []
-    )
-    visited = src_df.select(*first_cols).localCheckpoint(eager=True)
-    frontier = visited
-    depth = 0
-    limit = fixed_rounds if fixed_rounds is not None else max_depth
-    while depth < limit:
-        depth += 1
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
         # shuffle_hash on the stats-less frontier — without it Catalyst
         # plans SMJ and re-Exchanges the cached edge table every level
-        expand = edges.join(
+        arrivals = edges.join(
             frontier.select(F.col("id").alias("src")).hint("shuffle_hash"), "src"
         )
         if parents:
-            nxt_base = expand.groupBy(F.col("dst").alias("id")).agg(
+            nxt = arrivals.groupBy(F.col("dst").alias("id")).agg(
                 F.min("src").alias("parent")
             )
         else:
-            nxt_base = expand.select(F.col("dst").alias("id")).distinct()
-        # shuffle_hash on the visited side: nxt_base is already hash-
-        # partitioned by id (distinct/groupBy above), so the anti join
-        # exchanges only the visited set and skips the two sorts an SMJ
-        # would add per level
-        nxt = (
-            nxt_base.join(visited.select("id").hint("shuffle_hash"), "id", "left_anti")
-            .select(
-                "id",
-                F.lit(depth).alias("dist"),
-                *(["parent"] if parents else []),
-            )
-            .localCheckpoint(eager=True)  # truncate per-level lineage
+            nxt = arrivals.select(F.col("dst").alias("id")).distinct()
+        return nxt.select(
+            "id", F.lit(depth).alias("dist"), *(["parent"] if parents else [])
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
-        # the union chain itself grows linearly; re-materialize periodically
-        if depth % 10 == 0:
-            visited = visited.localCheckpoint(eager=True)
-    edges.unpersist()
-    return visited
+
+    try:
+        return frontier_reach(
+            src_df.select(*first_cols),
+            expand,
+            fixed_rounds if fixed_rounds is not None else max_depth,
+        )
+    finally:
+        edges.unpersist()
 
 
 def visit_all(

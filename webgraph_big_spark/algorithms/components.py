@@ -104,10 +104,11 @@ def connected_components(
         checkpoint_every=checkpoint_every,
         max_iterations=fixed_iterations or max_iterations,
     )
-    result = runner.run(initial, step, check=None if fixed_iterations else check)
-    edges.unpersist()
-    nodes.unpersist()
-    return result.state
+    try:
+        return runner.run(initial, step, check=None if fixed_iterations else check).state
+    finally:
+        edges.unpersist()
+        nodes.unpersist()
 
 
 def connected_components_star(
@@ -127,8 +128,6 @@ def connected_components_star(
     relation; converges when parents stop changing.  Per round: two
     shuffles; rounds: O(log n) — the scale path for web-diameter graphs.
     """
-    nodes = g.nodes().cache()
-
     def large_star(rel: DataFrame) -> DataFrame:
         # neighbours in both directions; every strictly-larger neighbour
         # re-attaches to min(N(u) ∪ {u}).
@@ -186,11 +185,9 @@ def connected_components_star(
     # converged relation is a star forest: u → component min.  Roots and
     # isolated nodes have no outgoing row → their own id.
     parents = rel.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("comp"))
-    out = nodes.join(parents, "id", "left").select(
+    return g.nodes().join(parents, "id", "left").select(
         "id", F.coalesce("comp", "id").alias("comp")
     )
-    nodes.unpersist()
-    return out
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

@@ -53,7 +53,7 @@ import functools
 import math
 from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from webgraph_big_spark.functions import stable_long_hash
 from webgraph_big_spark.graph import Graph, co_partitioned
@@ -347,6 +347,10 @@ def _packed_loop(g: Graph, t_max: int | None, log2m: int, on_round=None):
                     f"{_repack([f'_f{j}' for j in range(K)])} AS mpacked",
                 )
             )
+            # the changed-word count rides on the checkpoint job: the
+            # fixpoint test costs no job of its own
+            moved = Observation()
+            differs = F.col("packed") != F.col("old_packed")
             merged = (
                 state.join(msgs.hint("shuffle_hash"), ["id", "slot"], "full")
                 .selectExpr(
@@ -355,15 +359,14 @@ def _packed_loop(g: Graph, t_max: int | None, log2m: int, on_round=None):
                     "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
                     f"{_greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed",
                 )
+                .observe(moved, F.count_if(differs).alias("n"))
                 .localCheckpoint(eager=True)
             )
-            changed = merged.filter(F.col("packed") != F.col("old_packed")).select(
-                "id", "slot", "packed"
-            )
+            changed = merged.filter(differs).select("id", "slot", "packed")
             state = merged.select("id", "slot", "packed")
             if on_round is not None:
                 on_round(t, state)
-            if changed.isEmpty():
+            if moved.get["n"] == 0:
                 break
         return state
     finally:

@@ -116,7 +116,8 @@ def label_propagation(
         checkpoint_every=checkpoint_every,
         max_iterations=rounds if not until_stable else 1000,
     )
-    result = runner.run(initial, step, check=check if until_stable else None)
-    edges.unpersist()
-    nodes.unpersist()
-    return result.state
+    try:
+        return runner.run(initial, step, check=check if until_stable else None).state
+    finally:
+        edges.unpersist()
+        nodes.unpersist()

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from webgraph_big_spark.checkpoint import IterativeRunner
-from webgraph_big_spark.graph import Graph, co_partitioned
+from webgraph_big_spark.graph import Graph, broadcast_threshold, co_partitioned
 
 
 def pagerank(
@@ -98,16 +98,7 @@ def pagerank(
     # join that exchanges ONLY the rank rows — the edge table never
     # reshuffles, the bucketed-table pattern without a metastore.
     if broadcast_threshold_bytes is None:
-        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        digits = "".join(ch for ch in str(raw) if ch.isdigit() or ch == "-")
-        base = int(digits) if digits else 10485760
-        if str(raw).lower().rstrip("b").endswith("m"):
-            base *= 1 << 20
-        elif str(raw).lower().rstrip("b").endswith("k"):
-            base *= 1 << 10
-        elif str(raw).lower().rstrip("b").endswith("g"):
-            base *= 1 << 30
-        broadcast_threshold_bytes = max(base, 1)
+        broadcast_threshold_bytes = broadcast_threshold(spark)
     RANK_ROW_BYTES = 32  # 8B id + 8B rank + row overhead, conservative
     use_broadcast = n * RANK_ROW_BYTES <= broadcast_threshold_bytes
 

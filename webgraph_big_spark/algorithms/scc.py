@@ -22,10 +22,16 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from webgraph_big_spark.graph import Graph, co_partitioned
+from webgraph_big_spark.graph import (
+    Graph,
+    broadcast_threshold,
+    co_partitioned,
+    frontier_reach,
+)
 
 
 def bounded_closure(g: Graph, t: int) -> DataFrame:
@@ -67,56 +73,26 @@ def strongly_connected_components(g: Graph, t: int = 32) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _reach(
-    edges: DataFrame, seeds: DataFrame, forward: bool = True, pinned: DataFrame | None = None
-) -> DataFrame:
+def _reach(seeds: DataFrame, forward: bool, pinned: DataFrame) -> DataFrame:
     """Frontier-loop reachability: ids reachable from ``seeds(id)`` along
-    ``edges`` (or against them when ``forward=False``).  O(diameter)
+    the edges (or against them when ``forward=False``).  O(diameter)
     rounds, O(|reached|) state — never materializes pairs.
 
-    ``pinned`` (optional): the edge table already hash-partitioned +
-    cached by the expansion key (``src`` forward / ``dst`` backward) —
-    callers running several reaches over the SAME edge set (FW-BW does
-    forward + backward per pivot) pin once per outer round and pass it
-    in; this function then never repartitions and never unpersists.
-    When omitted, pins locally and releases in a ``finally``.
+    ``pinned``: the edge table hash-partitioned + cached by the
+    expansion key (``src`` forward / ``dst`` backward).  FW-BW runs a
+    forward and a backward reach per pivot over the same edge set, so
+    the caller pins once per outer round and owns the release.
     """
     s, d = ("src", "dst") if forward else ("dst", "src")
-    owns_pin = pinned is None
-    if owns_pin:
-        # pin the edge table hash-partitioned by the expansion key for
-        # the loop's lifetime: per round only the frontier moves
-        pinned = co_partitioned(edges, s)
-    visited = seeds.select("id").distinct().localCheckpoint(eager=True)
-    frontier = visited
-    depth = 0
-    try:
-        while True:
-            depth += 1
-            # shuffle_hash on the visited side: the candidate set is
-            # already hash-partitioned by id after the distinct, so the
-            # anti join exchanges only `visited` and skips SMJ sorts
-            nxt = (
-                pinned.join(
-                    frontier.withColumnRenamed("id", s).hint("shuffle_hash"), s
-                )
-                .select(F.col(d).alias("id"))
-                .distinct()
-                .join(visited.hint("shuffle_hash"), "id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                return visited
-            # lazy union of checkpointed levels — re-materializing the
-            # whole visited set every level was one extra O(|reached|)
-            # job per level; truncate the chain periodically instead
-            visited = visited.union(nxt)
-            if depth % 8 == 0:
-                visited = visited.localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        if owns_pin:
-            pinned.unpersist()
+
+    def expand(frontier: DataFrame, _: int) -> DataFrame:
+        return (
+            pinned.join(frontier.withColumnRenamed("id", s).hint("shuffle_hash"), s)
+            .select(F.col(d).alias("id"))
+            .distinct()
+        )
+
+    return frontier_reach(seeds.select("id").distinct(), expand)
 
 
 def _peel_trivial(
@@ -299,17 +275,8 @@ def strongly_connected_components_fwbw(
     # core set is ≤ |nodes| ids; broadcast it (edge table never shuffles
     # while peeling) exactly when it fits the session's broadcast
     # threshold — the same rule pagerank applies to its rank side
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    digits = "".join(ch for ch in str(raw) if ch.isdigit() or ch == "-")
-    bcast_bytes = int(digits) if digits else 10485760
-    if str(raw).lower().rstrip("b").endswith("m"):
-        bcast_bytes *= 1 << 20
-    elif str(raw).lower().rstrip("b").endswith("k"):
-        bcast_bytes *= 1 << 10
-    elif str(raw).lower().rstrip("b").endswith("g"):
-        bcast_bytes *= 1 << 30
     n_nodes0 = nodes.count()
-    bcast_core = 0 < n_nodes0 * 32 <= bcast_bytes
+    bcast_core = 0 < n_nodes0 * 32 <= broadcast_threshold(spark)
 
     while True:
         outer += 1
@@ -329,9 +296,7 @@ def strongly_connected_components_fwbw(
         # ONE pin per direction per outer round, shared by all phases;
         # the two repartition+cache+count materializations are
         # independent — overlap them (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _pool:
+        with ThreadPoolExecutor(max_workers=2) as _pool:
             _fwd_f = _pool.submit(co_partitioned, edges, "src")
             _bwd_f = _pool.submit(co_partitioned, edges, "dst")
             fwd, bwd = _fwd_f.result(), _bwd_f.result()
@@ -346,11 +311,9 @@ def strongly_connected_components_fwbw(
                 # forward and backward reachability are independent jobs
                 # over different pins — overlap them (guide §2.6) so one
                 # reach's per-level driver latency backfills the other's
-                from concurrent.futures import ThreadPoolExecutor
-
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    fw_f = pool.submit(_reach, edges, seed, True, fwd)
-                    bw_f = pool.submit(_reach, edges, seed, False, bwd)
+                    fw_f = pool.submit(_reach, seed, True, fwd)
+                    bw_f = pool.submit(_reach, seed, False, bwd)
                     fw, bw = fw_f.result(), bw_f.result()
                 scc = fw.join(bw, "id").localCheckpoint(eager=True)
                 comp = scc.agg(F.min("id")).first()[0]
@@ -374,31 +337,26 @@ def strongly_connected_components_fwbw(
                         .groupBy(F.col("dst").alias("id"))
                         .agg(F.max("color").alias("mx"))
                     )
-                    # change detection rides in the same plan (a color
-                    # changed ⇔ an incoming max exceeded it) — the old
-                    # separate new-vs-old join was a full SMJ per round
-                    new_color = (
+                    # a color changed ⇔ an incoming max exceeded it; the
+                    # count rides on the checkpoint job, no probe job
+                    moved = Observation()
+                    grew = F.count_if(F.col("mx") > F.col("color")).alias("n")
+                    color = (
                         color.join(msgs.hint("shuffle_hash"), "id", "left")
+                        .observe(moved, grew)
                         .select(
                             "id",
                             F.greatest("color", F.coalesce("mx", "color")).alias("color"),
-                            (F.coalesce("mx", "color") > F.col("color")).alias("_chg"),
                         )
                         .localCheckpoint(eager=True)
                     )
-                    n_changed = new_color.filter(F.col("_chg")).count()
-                    color = new_color.select("id", "color")
-                    if n_changed == 0:
+                    if moved.get["n"] == 0:
                         break
+
                 # multi-source backward reach from every color root,
                 # within its color class
-                roots = color.filter(F.col("id") == F.col("color")).select("id", "color")
-                member = roots.localCheckpoint(eager=True)
-                frontier = member
-                bdepth = 0
-                while True:
-                    bdepth += 1
-                    nxt = (
+                def expand_member(frontier: DataFrame, _: int) -> DataFrame:
+                    return (
                         bwd.join(
                             frontier.select(F.col("id").alias("dst"), "color").hint(
                                 "shuffle_hash"
@@ -413,18 +371,10 @@ def strongly_connected_components_fwbw(
                         )
                         .filter(F.col("color") == F.col("c2"))
                         .select("id", "color")
-                        .join(member.select("id").hint("shuffle_hash"), "id", "left_anti")
-                        .localCheckpoint(eager=True)
                     )
-                    if nxt.isEmpty():
-                        break
-                    # lazy union of checkpointed levels (cf. _reach): the
-                    # full-member re-materialization per level was an
-                    # extra O(|member|) job each round
-                    member = member.union(nxt)
-                    if bdepth % 8 == 0:
-                        member = member.localCheckpoint(eager=True)
-                    frontier = nxt
+
+                roots = color.filter(F.col("id") == F.col("color")).select("id", "color")
+                member = frontier_reach(roots, expand_member)
                 # comp label = min id within each discovered SCC
                 say(f"outer {outer}: assigning color-root SCCs")
                 comp_of = member.groupBy("color").agg(F.min("id").alias("comp"))

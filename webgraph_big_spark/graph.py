@@ -28,9 +28,9 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterable
+from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
 
 ARC_SCHEMA = T.StructType(
@@ -51,7 +51,8 @@ def co_partitioned(
     """Pin a STATIC relation hash-partitioned by ``keys`` for an
     iterative loop — the shared recipe behind every per-round join that
     must NOT re-exchange the big side (PageRank, HyperBall, WCC, label
-    propagation, BFS, SCC; the reference's whole scaling story is the
+    propagation, SCC colouring, and the :func:`frontier_reach` expansions
+    of BFS and the SCC reaches; the reference's whole scaling story is the
     same idea — ``algo/HyperBall.java:96-135``'s systolic iteration
     exists precisely to stop touching unchanged data each round).
 
@@ -96,6 +97,64 @@ def co_partitioned(
     pinned = df.repartition(max(2, int(k)), *keys).cache()
     pinned.count()
     return pinned
+
+
+FRONTIER_TRUNCATE_EVERY = 8
+
+
+def frontier_reach(
+    seeds: DataFrame,
+    expand: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int | None = None,
+) -> DataFrame:
+    """Grow a visited set level by level from ``seeds`` — the frontier
+    loop behind BFS and the SCC reaches, the Spark analogue of
+    ``ParallelBreadthFirstVisit``'s barrier per level over a shared
+    ``marker`` array (``algo/ParallelBreadthFirstVisit.java:79``).
+
+    ``expand(frontier, level)`` returns the candidate rows of ``level``
+    (1, 2, ...): an ``id`` column, unique per id, plus the columns of
+    ``seeds`` in the same order.  Candidates already visited are dropped
+    by an anti join on ``id``; what remains is the next frontier.  At
+    most ``max_rounds`` levels run.  Returns the visited rows, seeds
+    included.
+
+    Each level is ONE Spark action, the frontier's ``localCheckpoint``
+    (adaptive execution runs its shuffle stages as jobs of their own).
+    The loop ends when that action observed an empty frontier, so there
+    is no separate emptiness probe.  Visited grows as a lazy union of the
+    checkpointed levels, re-materialized every
+    ``FRONTIER_TRUNCATE_EVERY`` levels to bound its plan.
+    """
+    visited = seeds.localCheckpoint(eager=True)
+    frontier = visited
+    level = 0
+    while max_rounds is None or level < max_rounds:
+        level += 1
+        found = Observation()
+        # shuffle_hash on the visited side: the candidates are already
+        # hash-partitioned by id (the expansion's distinct/groupBy), so
+        # the anti join exchanges only `visited` and skips SMJ sorts
+        nxt = (
+            expand(frontier, level)
+            .join(visited.select("id").hint("shuffle_hash"), "id", "left_anti")
+            .observe(found, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        if found.get["n"] == 0:
+            break
+        visited = visited.union(nxt)
+        if level % FRONTIER_TRUNCATE_EVERY == 0:
+            visited = visited.localCheckpoint(eager=True)
+        frontier = nxt
+    return visited
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    as Spark itself parses it (``"10m"``, ``"1t"``, ...); -1 means
+    broadcast joins are off."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
 class Graph:
