@@ -17,6 +17,7 @@ from webgraph_big_spark.algorithms.components import (
 from webgraph_big_spark.algorithms.hyperball import hyperball
 from webgraph_big_spark.algorithms.labelprop import label_propagation
 from webgraph_big_spark.algorithms.pagerank import pagerank
+from webgraph_big_spark.algorithms.triangles import node_triangles, triangle_edges
 from webgraph_big_spark.graph import (
     Graph,
     broadcast_threshold,
@@ -128,9 +129,7 @@ def test_caches_released_when_loop_raises(spark, monkeypatch, algo):
     still releases every cache and pin the algorithm made."""
     g = _chain(spark, 8)
     g.num_arcs()
-    # start from an empty cache: triangle_count, run by earlier tests,
-    # never unpersists what it caches
-    spark.catalog.clearCache()
+    spark.catalog.clearCache()  # only this call's caches are under test
     cls = type(g.edges)
     original = cls.localCheckpoint
     calls = []
@@ -144,6 +143,17 @@ def test_caches_released_when_loop_raises(spark, monkeypatch, algo):
     monkeypatch.setattr(cls, "localCheckpoint", failing)
     with pytest.raises(RuntimeError, match="injected failure"):
         CACHED_RUNS[algo](g).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("fn", [triangle_edges, node_triangles], ids=lambda f: f.__name__)
+def test_triangles_leave_no_cache(spark, fn):
+    """The oriented adjacency a triangle call builds is a checkpoint, not
+    a session cache entry that outlives the call."""
+    g = Graph.from_pairs(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0)], num_nodes=4)
+    spark.catalog.clearCache()  # only these calls' caches are under test
+    fn(g).collect()
+    fn(g).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -12,21 +12,30 @@ Two implementations:
 
 - ``connected_components`` (hash-min): comp ← min(comp, min over
   neighbours comp) each round; converges in O(diameter) rounds.  One
-  join + one groupBy-min per round; message volume shrinks as nodes
-  stabilize when ``frontier_optimize`` is on (systolic idea of HyperBall,
-  ``algo/HyperBall.java:124-135`` — only changed nodes emit).
+  join + one groupBy-min + one state join per round; the count of
+  lowered labels that ends the loop is observed on the round's own
+  checkpoint job.
 - ``connected_components_star`` (Stergiou-style large-star/small-star,
   the north rule's named variant): converges in O(log n) rounds on
-  high-diameter graphs; each round is two conditional-union rounds
-  expressed as joins.  Preferred at 100 TB where diameters can be large.
+  high-diameter graphs; each round fuses large-star and small-star into
+  two sorted windows (one shuffle each; min and dedup over the sorted
+  partition), 3 Spark jobs per round.  Preferred at 100 TB where
+  diameters can be large.
+
+Both loops run on ``IterativeRunner``: lineage truncation, per-round
+records, and resume from ``run_dir``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.window import Window
 
 from webgraph_big_spark.checkpoint import IterativeRunner
 from webgraph_big_spark.graph import Graph, co_partitioned
+
+# rounds between durable checkpoints of connected_components_star's run_dir
+STAR_CHECKPOINT_EVERY = 8
 
 
 def connected_components(
@@ -69,10 +78,13 @@ def connected_components(
         g.nodes() if include_isolated and g.dense else g.touched_nodes()
     ).cache()
 
+    moved = None  # the latest round's observed change count
+
     def initial() -> DataFrame:
         return nodes.select("id", F.col("id").alias("comp"))
 
     def step(state: DataFrame, it: int):
+        nonlocal moved
         # shuffle_hash on the state side: post-checkpoint state has no
         # stats → without the hint Catalyst plans SMJ and re-Exchanges
         # the cached edge table every round
@@ -84,19 +96,20 @@ def connected_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("comp").alias("nbr_min"))
         )
-        new_state = state.join(msgs, "id", "left").select(
-            "id", F.least("comp", F.coalesce("nbr_min", "comp")).alias("comp")
+        # rows this round lowers, counted by the round's own checkpoint
+        # job (a null nbr_min is no change)
+        moved = Observation()
+        new_state = (
+            state.join(msgs, "id", "left")
+            .observe(moved, F.count_if(F.col("nbr_min") < F.col("comp")).alias("n"))
+            .select("id", F.least("comp", F.coalesce("nbr_min", "comp")).alias("comp"))
         )
         if fixed_iterations is not None:
             return new_state, (None if it + 1 < fixed_iterations else 0)
         return new_state, None
 
     def check(old: DataFrame, new: DataFrame, it: int) -> int:
-        return (
-            new.join(old.withColumnRenamed("comp", "prev").hint("shuffle_hash"), "id")
-            .filter(F.col("comp") != F.col("prev"))
-            .count()
-        )
+        return moved.get["n"]
 
     runner = IterativeRunner(
         spark,
@@ -119,69 +132,102 @@ def connected_components_star(
     """Large-star / small-star CC (Kiveris et al., the 'Stergiou-style'
     O(log n)-round family named by the north rule).
 
-    State is the parent pointer table (id, comp).  Each round:
-      large-star: every node points its *larger* neighbours at its current
-        minimum neighbour (including itself);
-      small-star: every node and its smaller-or-equal neighbours point at
-        the overall minimum.
-    Implemented as joins + groupBy-min over the (id, parent) edge
-    relation; converges when parents stop changing.  Per round: two
-    shuffles; rounds: O(log n) — the scale path for web-diameter graphs.
+    State is the parent relation (u, v) over arcs with u ≠ v; duplicate
+    rows are harmless.  One round, fused from the two phases:
+      large-star: partition the two-way relation by u, sorted by v;
+        every neighbour v > u re-attaches to m = min(N(u) ∪ {u}), giving
+        rows (x = v, y = m) with y < x;
+      small-star: partition those rows by x, sorted by y; x and every
+        y re-attach to the partition's first (least) y.
+    Each phase is one window over one shuffle: the min is the first row
+    of the sorted partition and ``lag`` drops the partition's repeated
+    rows, so neither the input nor a round's output needs a
+    ``distinct``.  A window buffers its partition in a spillable row
+    array: in the last rounds a component's root partition holds every
+    member, and it goes through one task but spills to disk instead of
+    hitting a per-row size limit.  Per round: the two shuffles and
+    the round's ``localCheckpoint`` — 3 Spark jobs under AQE.  The
+    relation converges to a star forest whose centres are the component
+    minima; convergence is read from ``(count, Σ xxhash64(u, v))``
+    observed on the round's own checkpoint job.  Rounds: O(log n) — the
+    scale path for web-diameter graphs.  ``run_dir`` makes the loop
+    resumable (``IterativeRunner``, a durable checkpoint every
+    ``STAR_CHECKPOINT_EVERY`` rounds).
     """
-    def large_star(rel: DataFrame) -> DataFrame:
-        # neighbours in both directions; every strictly-larger neighbour
-        # re-attaches to min(N(u) ∪ {u}).
-        nbrs = rel.union(rel.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = nbrs.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        # no dedup here: small_star's groupBy-min is duplicate-proof and
-        # its own final distinct canonicalizes the round's output — the
-        # intermediate distinct was a full extra shuffle per round
-        return (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    spark = g.edges.sparkSession
+    sig = None  # the latest round's observed signature
+    prev = None
+
+    def initial() -> DataFrame:
+        return g.edges.filter(F.col("src") != F.col("dst")).select(
+            F.col("src").alias("u"), F.col("dst").alias("v")
         )
 
-    def small_star(rel: DataFrame) -> DataFrame:
-        # orient u ≥ v; u and all its ≤ neighbours attach to the minimum.
-        nbrs = rel.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    def step(rel: DataFrame, it: int):
+        nonlocal sig
+        # with ascending order the running min is the partition's first
+        # row, and a null lag marks that first row
+        by_u = Window.partitionBy("u").orderBy("v")
+        large = (
+            rel.union(rel.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .select(
+                "u",
+                "v",
+                F.least(F.min("v").over(by_u), "u").alias("m"),
+                F.lag("v").over(by_u).alias("_prev"),
+            )
+            .filter((F.col("v") > F.col("u")) & ~F.col("_prev").eqNullSafe(F.col("v")))
+            .select(F.col("v").alias("x"), F.col("m").alias("y"))
         )
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("m"))
-        joined = nbrs.join(mins, "u")
-        out = joined.select(F.col("v").alias("u"), F.col("m").alias("v")).union(
-            joined.select(F.col("u"), F.col("m").alias("v"))
-        )
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    rel = (
-        g.edges.filter(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    for _ in range(max_iterations):
-        new_rel = small_star(large_star(rel)).localCheckpoint(eager=True)
+        by_x = Window.partitionBy("x").orderBy("y")
+        small = large.select(
+            "x",
+            "y",
+            F.min("y").over(by_x).alias("mm"),
+            F.lag("y").over(by_x).alias("_prev"),
+        ).filter(~F.col("_prev").eqNullSafe(F.col("y")))
+        # y < x for every large-star row, so mm < x: x always re-attaches,
+        # once, from its partition's first row
+        new_rel = small.select(
+            F.explode(
+                F.when(F.col("_prev").isNull(), F.array("y", "x")).otherwise(F.array("y"))
+            ).alias("u"),
+            F.col("mm").alias("v"),
+        ).filter(F.col("u") != F.col("v"))
         # convergence signature: (count, Σ xxhash64(u, v)) — a 64-bit
         # avalanche hash per row, so two distinct relations colliding on
-        # BOTH is ~2^-64; the weak u*31+v sum could collide and stop
-        # early.  Decimal(38) accumulator: exact and overflow-free under
-        # ANSI mode at any row count.
-        sig = new_rel.agg(
-            F.count("*").alias("c"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("s"),
-        ).first()
-        cur_sig = (sig["c"], sig["s"])
-        rel = new_rel
-        if cur_sig == prev_sig:
-            break
-        prev_sig = cur_sig
+        # BOTH is ~2^-64.  Decimal(38) accumulator: exact and
+        # overflow-free under ANSI mode at any row count.
+        sig = Observation()
+        return (
+            new_rel.observe(
+                sig,
+                F.count(F.lit(1)).alias("c"),
+                F.coalesce(
+                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+                    F.lit(0).cast("decimal(38,0)"),
+                ).alias("s"),
+            ),
+            None,
+        )
+
+    def check(old: DataFrame, new: DataFrame, it: int) -> int | None:
+        # a round's output depends only on the SET of its input rows, so
+        # two equal signatures in a row mean a fixed point; the first
+        # round (and the first after a resume) has nothing to compare
+        nonlocal prev
+        cur = (sig.get["c"], sig.get["s"])
+        changed = None if prev is None else int(cur != prev)
+        prev = cur
+        return changed
+
+    runner = IterativeRunner(
+        spark,
+        run_dir=run_dir,
+        checkpoint_every=STAR_CHECKPOINT_EVERY,
+        max_iterations=max_iterations,
+    )
+    rel = runner.run(initial, step, check=check).state
     # converged relation is a star forest: u → component min.  Roots and
     # isolated nodes have no outgoing row → their own id.
     parents = rel.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("comp"))
