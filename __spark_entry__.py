@@ -7,7 +7,12 @@ from the driver's TPC-H-ish parquet tables:
   suppliers are ~100× rarer than customers — the skew fixture);
 - **G2** — the per-nation "band" graph over customers (each customer
   linked to the next 5 customers of its nation in custkey order): a
-  bounded-degree, high-diameter graph with a known triangle structure.
+  bounded-degree, high-diameter graph with a known triangle structure;
+- **G3** — G2 with every 7th edge reversed (nontrivial directed cycles);
+- **G5** — the nation-level quotient of G1 with half its arcs reversed.
+
+The training-data pipeline gates run over the ``documents`` and
+``embeddings`` tables.
 
 Every iterative algorithm is gated in *fixed-round* form so the DuckDB
 oracle (unrolled CTE chain, generated programmatically below) computes
@@ -15,28 +20,50 @@ the identical trajectory; converged forms are exercised in pytest
 against NumPy oracles.  Float outputs are rounded to 9 decimals on both
 sides (well above both engines' ulp noise, well below any semantic
 difference).
+
+``queries()`` and ``oracle_sql()`` at the bottom are the one registry:
+each gate name maps to a Spark query and to its DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import math
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from webgraph_big_spark.graph import Graph
-from webgraph_big_spark import transforms as tr
 from webgraph_big_spark import functions as wf
-from webgraph_big_spark.algorithms.pagerank import pagerank
-from webgraph_big_spark.algorithms.components import connected_components
-from webgraph_big_spark.algorithms.labelprop import label_propagation
-from webgraph_big_spark.algorithms.triangles import triangle_edges
+from webgraph_big_spark import transforms as tr
+from webgraph_big_spark import typed as ty
 from webgraph_big_spark.algorithms.bfs import bfs_distances
-from webgraph_big_spark.algorithms.stats import degree_histogram
+from webgraph_big_spark.algorithms.centrality import harmonic_centrality
+from webgraph_big_spark.algorithms.components import connected_components
 from webgraph_big_spark.algorithms.hyperball import (
     distance_stats,
+    hyperball,
+    hyperball_centralities,
+    hyperball_centralities_sql,
+    hyperball_nf_sql,
+    hyperball_registers,
+    hyperball_registers_sql,
     neighbourhood_function_exact,
 )
+from webgraph_big_spark.algorithms.labelprop import label_propagation
+from webgraph_big_spark.algorithms.pagerank import pagerank
+from webgraph_big_spark.algorithms.scc import (
+    scc_buckets,
+    strongly_connected_components,
+    strongly_connected_components_fwbw,
+)
+from webgraph_big_spark.algorithms.stats import degree_histogram
+from webgraph_big_spark.algorithms.triangles import triangle_edges
+from webgraph_big_spark.datapipe import dedup as dd
+from webgraph_big_spark.datapipe import multimodal as dm
+from webgraph_big_spark.datapipe import similarity as ds
+from webgraph_big_spark.datapipe import text as dt
+from webgraph_big_spark.graph import Graph
 
 ALPHA = 0.85
 PR_ITERS = 12
@@ -46,10 +73,19 @@ BFS_ROUNDS = 6
 BAND = 5
 NF_T = 3
 RND = 9  # float rounding decimals (both engines)
+SCC_T = 32
+HC_T = 16
+HB_T = 2
+KM_K = 8
+KM_ITERS = 3
+EMB_DIM = 64
+TOPK_K = 5
+TOPK_RND = 6
+NEAR_DUP_T = 0.05
 
 
 # ---------------------------------------------------------------------------
-# graph derivations (Spark side)
+# graph derivations (Spark side, each with its DuckDB twin)
 # ---------------------------------------------------------------------------
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -134,6 +170,193 @@ def _g1w_sql(half: int) -> str:
     )
 
 
+def load_g3(spark: SparkSession, sf: str) -> Graph:
+    """The band graph plus every 7th edge reversed → nontrivial directed
+    cycles."""
+    b = load_g2(spark, sf).edges
+    rev = b.filter((F.col("src") + F.col("dst")) % 7 == 0).select(
+        F.col("dst").alias("src"), F.col("src").alias("dst")
+    )
+    return Graph(b.union(rev).distinct(), dense=False)
+
+
+G3_SQL = (
+    f"WITH _b AS ({G2_SQL}) "
+    "SELECT src, dst FROM _b UNION "
+    "SELECT dst AS src, src AS dst FROM _b WHERE (src + dst) % 7 = 0"
+)
+
+
+def _customer_supplier_to(spark: SparkSession, sf: str) -> DataFrame:
+    """(id, to): every G1 node mapped to its nation — customers to
+    c_nationkey, suppliers to 100000 + s_nationkey."""
+    cust = _read(spark, sf, "customer").select(
+        F.col("c_custkey").cast("long").alias("id"),
+        F.col("c_nationkey").cast("long").alias("to"),
+    )
+    supp = _read(spark, sf, "supplier").select(
+        (F.lit(100000) + F.col("s_suppkey")).cast("long").alias("id"),
+        (F.lit(100000) + F.col("s_nationkey")).cast("long").alias("to"),
+    )
+    return cust.union(supp)
+
+
+def load_g5(spark: SparkSession, sf: str) -> Graph:
+    """Nation-level quotient of G1 with half the arcs reversed — a tiny
+    (≤50-node) directed graph with nontrivial SCCs and small diameter,
+    the hash-matched fixture for the FW-BW path (whose closure-free
+    oracle stays cheap here; big-graph FW-BW behaviour is
+    pytest-covered)."""
+    q = tr.quotient_graph(load_g1(spark, sf), _customer_supplier_to(spark, sf)).edges
+    rev = q.filter((F.col("src") + F.col("dst")) % 2 == 0).select(
+        F.col("dst").alias("src"), F.col("src").alias("dst")
+    )
+    return Graph(q.union(rev).distinct(), dense=False)
+
+
+G5_SQL = (
+    f"WITH _q AS (SELECT DISTINCT c.c_nationkey::BIGINT AS src, "
+    "(100000 + s.s_nationkey)::BIGINT AS dst "
+    f"FROM ({G1_SQL}) g JOIN customer c ON g.src = c.c_custkey "
+    "JOIN supplier s ON g.dst - 100000 = s.s_suppkey) "
+    "SELECT src, dst FROM _q UNION "
+    "SELECT dst AS src, src AS dst FROM _q WHERE (src + dst) % 2 = 0"
+)
+
+
+def _docs(spark: SparkSession, sf: str) -> DataFrame:
+    return _read(spark, sf, "documents")
+
+
+def _emb(spark: SparkSession, sf: str) -> DataFrame:
+    return _read(spark, sf, "embeddings")
+
+
+# ---------------------------------------------------------------------------
+# Spark-side query bodies too long for a lambda
+# ---------------------------------------------------------------------------
+
+def _bfs_g2(spark: SparkSession, sf: str, parents: bool = False) -> DataFrame:
+    g = load_g2(spark, sf)
+    source = g.touched_nodes().agg(F.min("id")).first()[0]
+    out = bfs_distances(g, [int(source)], fixed_rounds=BFS_ROUNDS, parents=parents)
+    cols = ["id", F.col("dist").cast("int").alias("dist")]
+    return out.select(*cols, *(["parent"] if parents else []))
+
+
+def _compose_minplus(spark: SparkSession, sf: str) -> DataFrame:
+    g = load_g2(spark, sf)
+    gw = Graph(g.edges.withColumn("w", (F.col("dst") - F.col("src")).cast("long")), dense=False)
+    return tr.compose_semiring(gw, gw, label_col="w").edges
+
+
+def _quotient_nation(spark: SparkSession, sf: str) -> DataFrame:
+    g1 = load_g1(spark, sf)
+    return tr.quotient_graph(g1, _customer_supplier_to(spark, sf), weight=True).edges.select(
+        "src", "dst", F.col("weight").cast("long").alias("weight")
+    )
+
+
+def _subgraph_building(spark: SparkSession, sf: str) -> DataFrame:
+    g1 = load_g1(spark, sf)
+    cust = _read(spark, sf, "customer")
+    sub = (
+        cust.filter(F.col("c_mktsegment") == "BUILDING")
+        .select(F.col("c_custkey").cast("long").alias("id"))
+        .union(
+            _read(spark, sf, "supplier").select(
+                (F.lit(100000) + F.col("s_suppkey")).cast("long").alias("id")
+            )
+        )
+    )
+    return tr.induced_subgraph(g1, sub, renumber=True).edges
+
+
+def _graph_stats_df(spark: SparkSession, sf: str) -> DataFrame:
+    """Single-row stats over G1, kept as one declarative plan."""
+    g = load_g1(spark, sf)
+    edges = g.edges
+    nodes = g.touched_nodes()
+    outdeg = nodes.join(
+        edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d")), "id", "left"
+    ).select(F.coalesce("d", F.lit(0)).alias("d"))
+    indeg = nodes.join(
+        edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("d")), "id", "left"
+    ).select(F.coalesce("d", F.lit(0)).alias("d"))
+    a = edges.agg(
+        F.count("*").cast("long").alias("arcs"),
+        F.sum(F.when(F.col("src") == F.col("dst"), 1).otherwise(0)).cast("long").alias("loops"),
+    )
+    b = nodes.agg(F.count("*").cast("long").alias("nodes"))
+    c = outdeg.agg(
+        F.max("d").cast("long").alias("max_outdeg"),
+        F.sum(F.when(F.col("d") == 0, 1).otherwise(0)).cast("long").alias("dangling"),
+    )
+    d = indeg.agg(F.max("d").cast("long").alias("max_indeg"))
+    return a.crossJoin(b).crossJoin(c).crossJoin(d).select(
+        "nodes", "arcs", "loops", "dangling", "max_outdeg", "max_indeg"
+    )
+
+
+def _typed_pack(spark: SparkSession, sf: str) -> DataFrame:
+    cust = _read(spark, sf, "customer").select(
+        F.col("c_custkey").cast("long").alias("id"), F.lit(0).cast("long").alias("typ")
+    )
+    supp = _read(spark, sf, "supplier").select(
+        F.col("s_suppkey").cast("long").alias("id"), F.lit(1).cast("long").alias("typ")
+    )
+    u = cust.union(supp)
+    packed = u.select("id", "typ", wf.pack_node(F.col("typ"), F.col("id")).alias("packed"))
+    return packed.select(
+        "id",
+        "typ",
+        "packed",
+        wf.node_type(F.col("packed")).alias("typ_check"),
+        wf.node_id(F.col("packed")).alias("id_check"),
+    )
+
+
+def _store_load_weighted(spark: SparkSession, sf: str) -> DataFrame:
+    """Labelled-storage roundtrip: store the weighted purchase graph
+    (gap-encoded CSR + aligned label arrays), load it back, return the
+    arcs — the ``BVGraph.storeLabelled`` gate (identity oracle)."""
+    g = load_g1_weighted(spark, sf, 0)
+    base = tempfile.mkdtemp(prefix="wbs_store_gate_")
+    g.store(base, buckets=8)
+    loaded = Graph.load(spark, base)
+    return loaded.edges.select("src", "dst", F.col("w").cast("long").alias("w"))
+
+
+def _relabel_g2(spark: SparkSession, sf: str, which: str) -> DataFrame:
+    g = load_g2(spark, sf)
+    keys = {"lex": tr.lex_key, "gray": tr.gray_key, "random": lambda g: tr.random_key(g, seed=0)}
+    relabeled, _perm = tr.relabel_by_order(g, keys[which](g))
+    return relabeled.edges
+
+
+def _typed_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    """Convert G1 to a typed graph (customers type 0, suppliers type 1),
+    store partitioned by (src_type, dst_type), and return per-pair arc
+    counts + the sum of per-type-dense dst ids from the STORED table —
+    gating both the pair partitioning and the ConvertToTypedGraph
+    renumbering (``typed/ConvertToTypedGraph.java:95``)."""
+    g = load_g1(spark, sf)
+    nt = g.nodes().select(
+        "id",
+        F.when(F.col("id") < 100000, 0).otherwise(1).cast("int").alias("type"),
+    )
+    base = tempfile.mkdtemp(prefix="wbs_typed_gate_")
+    ty.convert_to_typed(g, nt, base)
+    arcs = spark.read.parquet(base + "/arcs")
+    return arcs.groupBy(
+        F.col("src_type").cast("long").alias("src_type"),
+        F.col("dst_type").cast("long").alias("dst_type"),
+    ).agg(
+        F.count("*").alias("arcs"),
+        F.sum(F.col("dst_tid").cast("double")).alias("sum_tdst"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # oracle SQL generators (unrolled iterative CTE chains for DuckDB)
 # ---------------------------------------------------------------------------
@@ -214,6 +437,25 @@ def _bfs_sql(edge_sql: str, rounds: int) -> str:
     return ", ".join(parts) + f" SELECT id, dist::INT AS dist FROM d{rounds}"
 
 
+def _bfs_parents_sql(edge_sql: str, rounds: int) -> str:
+    parts = [
+        "WITH " + _sym_cte(edge_sql),
+        "v0 AS MATERIALIZED (SELECT (SELECT min(id) FROM nodes) AS id, 0 AS dist, "
+        "(SELECT min(id) FROM nodes) AS parent)",
+        "f0 AS MATERIALIZED (SELECT * FROM v0)",
+    ]
+    for k in range(1, rounds + 1):
+        parts.append(
+            f"f{k} AS MATERIALIZED (SELECT id, {k} AS dist, parent FROM ("
+            f"SELECT e.dst AS id, min(f.id) AS parent FROM e JOIN f{k-1} f ON e.src = f.id "
+            f"GROUP BY e.dst) x WHERE id NOT IN (SELECT id FROM v{k-1}))"
+        )
+        parts.append(
+            f"v{k} AS MATERIALIZED (SELECT * FROM v{k-1} UNION ALL SELECT * FROM f{k})"
+        )
+    return ", ".join(parts) + f" SELECT id, dist::INT AS dist, parent FROM v{rounds}"
+
+
 def _nf_sql(edge_sql: str, t_max: int) -> str:
     parts = [
         f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edge_sql}))",
@@ -233,198 +475,12 @@ def _nf_sql(edge_sql: str, t_max: int) -> str:
     return ", ".join(parts) + " " + selects
 
 
-# ---------------------------------------------------------------------------
-# driver contract
-# ---------------------------------------------------------------------------
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: converged PageRank on the sf0.001 purchase graph."""
-    g = load_g1(spark, "/root/testdata/sf0.001")
-    ranks = pagerank(g, alpha=ALPHA, tol=1e-9, max_iterations=60, check_every=5)
-    return ranks.select("id", F.round("rank", RND).alias("rank"))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    # ---- whole-graph algorithms (fixed-round forms) ----
-    q["pagerank_g1"] = lambda spark, sf: pagerank(
-        load_g1(spark, sf), alpha=ALPHA, fixed_iterations=PR_ITERS
-    ).select("id", F.round("rank", RND).alias("rank"))
-
-    q["wcc_g2"] = lambda spark, sf: connected_components(
-        load_g2(spark, sf), fixed_iterations=WCC_ITERS
-    ).select("id", "comp")
-
-    q["labelprop_g2"] = lambda spark, sf: label_propagation(
-        load_g2(spark, sf), rounds=LP_ROUNDS
-    ).select("id", "label")
-
-    q["bfs_g2"] = lambda spark, sf: _bfs_query(spark, sf)
-
-    q["triangles_g2"] = lambda spark, sf: (
-        triangle_edges(load_g2(spark, sf))
-        .agg(F.coalesce(F.sum("tri"), F.lit(0)).cast("long").alias("n_triangles"))
-    )
-
-    q["neighbourhood_fn_g1"] = lambda spark, sf: neighbourhood_function_exact(
-        load_g1(spark, sf), NF_T
-    )
-
-    # NeighbourhoodFunction-class statistics (effectiveDiameter /
-    # averageDistance / spid — the utilities the reference's slow tests
-    # drive); truncated-at-NF_T semantics on both engines
-    q["distance_stats_g1"] = lambda spark, sf: distance_stats(
-        neighbourhood_function_exact(load_g1(spark, sf), NF_T)
-    )
-
-    # ---- transforms ----
-    q["transpose_g1"] = lambda spark, sf: tr.transpose(load_g1(spark, sf)).edges
-
-    q["symmetrize_g2"] = lambda spark, sf: tr.symmetrize(load_g2(spark, sf)).edges
-
-    q["simplify_g2"] = lambda spark, sf: tr.simplify(load_g2(spark, sf)).edges
-
-    q["compose_g2_g2"] = lambda spark, sf: tr.compose(
-        load_g2(spark, sf), load_g2(spark, sf)
-    ).edges
-
-    q["compose_minplus_g2"] = lambda spark, sf: _compose_minplus(spark, sf)
-
-    q["filter_arcs_g2"] = lambda spark, sf: tr.filter_arcs(
-        load_g2(spark, sf),
-        (F.col("src") % 2 == 0) & (F.col("dst") - F.col("src") <= 7),
-    ).edges
-
-    q["quotient_nation_g1"] = lambda spark, sf: _quotient_nation(spark, sf)
-
-    q["subgraph_building_g1"] = lambda spark, sf: _subgraph_building(spark, sf)
-
-    q["union_weighted_g1"] = lambda spark, sf: tr.union_labelled(
-        load_g1_weighted(spark, sf, 0),
-        load_g1_weighted(spark, sf, 1),
-        merge={"w": F.sum("w").cast("long").alias("w")},
-    ).edges
-
-    # ---- aggregations / stats / scalar kernels ----
-    q["degree_hist_g1"] = lambda spark, sf: degree_histogram(
-        load_g1(spark, sf), "out", include_zero=True
-    ).select(F.col("deg").cast("long").alias("deg"), F.col("n_nodes").cast("long"))
-
-    q["graph_stats_g1"] = lambda spark, sf: _graph_stats_df(spark, sf)
-
-    q["typed_pack"] = lambda spark, sf: _typed_pack(spark, sf)
-
-    return q
-
-
-def _bfs_query(spark: SparkSession, sf: str) -> DataFrame:
-    g = load_g2(spark, sf)
-    source = g.touched_nodes().agg(F.min("id")).first()[0]
-    return bfs_distances(g, [int(source)], fixed_rounds=BFS_ROUNDS).select(
-        "id", F.col("dist").cast("int").alias("dist")
-    )
-
-
-def _compose_minplus(spark: SparkSession, sf: str) -> DataFrame:
-    g = load_g2(spark, sf)
-    gw = Graph(g.edges.withColumn("w", (F.col("dst") - F.col("src")).cast("long")), dense=False)
-    return tr.compose_semiring(gw, gw, label_col="w").edges
-
-
-def _quotient_nation(spark: SparkSession, sf: str) -> DataFrame:
-    g1 = load_g1(spark, sf)
-    cust = _read(spark, sf, "customer").select(
-        F.col("c_custkey").cast("long").alias("id"),
-        F.col("c_nationkey").cast("long").alias("to"),
-    )
-    supp = _read(spark, sf, "supplier").select(
-        (F.lit(100000) + F.col("s_suppkey")).cast("long").alias("id"),
-        (F.lit(100000) + F.col("s_nationkey")).cast("long").alias("to"),
-    )
-    return tr.quotient_graph(g1, cust.union(supp), weight=True).edges.select(
-        "src", "dst", F.col("weight").cast("long").alias("weight")
-    )
-
-
-def _subgraph_building(spark: SparkSession, sf: str) -> DataFrame:
-    g1 = load_g1(spark, sf)
-    cust = _read(spark, sf, "customer")
-    sub = (
-        cust.filter(F.col("c_mktsegment") == "BUILDING")
-        .select(F.col("c_custkey").cast("long").alias("id"))
-        .union(
-            _read(spark, sf, "supplier").select(
-                (F.lit(100000) + F.col("s_suppkey")).cast("long").alias("id")
-            )
-        )
-    )
-    return tr.induced_subgraph(g1, sub, renumber=True).edges
-
-
-def _graph_stats_df(spark: SparkSession, sf: str) -> DataFrame:
-    """Single-row stats over G1, kept as one declarative plan."""
-    g = load_g1(spark, sf)
-    edges = g.edges
-    nodes = g.touched_nodes()
-    outdeg = nodes.join(
-        edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d")), "id", "left"
-    ).select(F.coalesce("d", F.lit(0)).alias("d"))
-    indeg = nodes.join(
-        edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("d")), "id", "left"
-    ).select(F.coalesce("d", F.lit(0)).alias("d"))
-    a = edges.agg(
-        F.count("*").cast("long").alias("arcs"),
-        F.sum(F.when(F.col("src") == F.col("dst"), 1).otherwise(0)).cast("long").alias("loops"),
-    )
-    b = nodes.agg(F.count("*").cast("long").alias("nodes"))
-    c = outdeg.agg(
-        F.max("d").cast("long").alias("max_outdeg"),
-        F.sum(F.when(F.col("d") == 0, 1).otherwise(0)).cast("long").alias("dangling"),
-    )
-    d = indeg.agg(F.max("d").cast("long").alias("max_indeg"))
-    return a.crossJoin(b).crossJoin(c).crossJoin(d).select(
-        "nodes", "arcs", "loops", "dangling", "max_outdeg", "max_indeg"
-    )
-
-
-def _typed_pack(spark: SparkSession, sf: str) -> DataFrame:
-    cust = _read(spark, sf, "customer").select(
-        F.col("c_custkey").cast("long").alias("id"), F.lit(0).cast("long").alias("typ")
-    )
-    supp = _read(spark, sf, "supplier").select(
-        F.col("s_suppkey").cast("long").alias("id"), F.lit(1).cast("long").alias("typ")
-    )
-    u = cust.union(supp)
-    packed = u.select("id", "typ", wf.pack_node(F.col("typ"), F.col("id")).alias("packed"))
-    return packed.select(
-        "id",
-        "typ",
-        "packed",
-        wf.node_type(F.col("packed")).alias("typ_check"),
-        wf.node_id(F.col("packed")).alias("id_check"),
-    )
-
-
-def oracle_sql() -> dict[str, str]:
-    o: dict[str, str] = {}
-
-    o["pagerank_g1"] = _pagerank_sql(G1_SQL, PR_ITERS, ALPHA)
-    o["wcc_g2"] = _wcc_sql(G2_SQL, WCC_ITERS)
-    o["labelprop_g2"] = _lp_sql(G2_SQL, LP_ROUNDS)
-    o["bfs_g2"] = _bfs_sql(G2_SQL, BFS_ROUNDS)
-    o["triangles_g2"] = (
-        f"WITH e AS ({G2_SQL}) "
-        "SELECT count(*)::BIGINT AS n_triangles FROM e e1 "
-        "JOIN e e2 ON e2.src = e1.dst JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst"
-    )
-    o["neighbourhood_fn_g1"] = _nf_sql(G1_SQL, NF_T)
-
-    # distance statistics from the same exact-NF closure: identical
-    # arithmetic to algorithms.hyperball.distance_stats (rounded mean
-    # reused inside spid, 6-dp rounding) so values hash-match
-    o["distance_stats_g1"] = (
-        f"WITH nfv AS MATERIALIZED ({_nf_sql(G1_SQL, NF_T)}), "
+def _distance_stats_sql(edge_sql: str, t_max: int) -> str:
+    """Distance statistics from the exact-NF closure: identical
+    arithmetic to algorithms.hyperball.distance_stats (rounded mean
+    reused inside spid, 6-dp rounding) so values hash-match."""
+    return (
+        f"WITH nfv AS MATERIALIZED ({_nf_sql(edge_sql, t_max)}), "
         "d AS (SELECT t, nf::DOUBLE AS nf, "
         "      (nf - coalesce(lag(nf) OVER (ORDER BY t), 0))::DOUBLE AS cnt, "
         "      coalesce(lag(nf) OVER (ORDER BY t), 0)::DOUBLE AS pnf FROM nfv), "
@@ -448,363 +504,8 @@ def oracle_sql() -> dict[str, str]:
         "FROM mom, ed"
     )
 
-    o["transpose_g1"] = f"SELECT dst AS src, src AS dst FROM ({G1_SQL})"
-    o["symmetrize_g2"] = (
-        f"WITH _e0 AS ({G2_SQL}) "
-        "SELECT src, dst FROM _e0 UNION SELECT dst AS src, src AS dst FROM _e0"
-    )
-    o["simplify_g2"] = (
-        f"WITH _e0 AS ({G2_SQL}), u AS "
-        "(SELECT src, dst FROM _e0 UNION SELECT dst AS src, src AS dst FROM _e0) "
-        "SELECT src, dst FROM u WHERE src <> dst"
-    )
-    o["compose_g2_g2"] = (
-        f"WITH e AS ({G2_SQL}) "
-        "SELECT DISTINCT a.src, b.dst FROM e a JOIN e b ON a.dst = b.src"
-    )
-    o["compose_minplus_g2"] = (
-        f"WITH e AS (SELECT src, dst, (dst - src)::BIGINT AS w FROM ({G2_SQL})) "
-        "SELECT a.src, b.dst, min(a.w + b.w)::BIGINT AS w FROM e a JOIN e b ON a.dst = b.src "
-        "GROUP BY a.src, b.dst"
-    )
-    o["filter_arcs_g2"] = (
-        f"SELECT src, dst FROM ({G2_SQL}) WHERE src % 2 = 0 AND dst - src <= 7"
-    )
-    o["quotient_nation_g1"] = (
-        f"WITH g AS ({G1_SQL}) "
-        "SELECT c.c_nationkey::BIGINT AS src, (100000 + s.s_nationkey)::BIGINT AS dst, "
-        "count(*)::BIGINT AS weight "
-        "FROM g JOIN customer c ON g.src = c.c_custkey "
-        "JOIN supplier s ON g.dst - 100000 = s.s_suppkey GROUP BY 1, 2"
-    )
-    o["subgraph_building_g1"] = (
-        f"WITH g AS ({G1_SQL}), "
-        "sub AS (SELECT c_custkey AS id FROM customer WHERE c_mktsegment = 'BUILDING' "
-        "UNION SELECT 100000 + s_suppkey FROM supplier), "
-        "remap AS (SELECT id, row_number() OVER (ORDER BY id) - 1 AS t FROM sub) "
-        "SELECT DISTINCT rs.t AS src, rd.t AS dst "
-        "FROM g JOIN remap rs ON g.src = rs.id JOIN remap rd ON g.dst = rd.id"
-    )
-    o["union_weighted_g1"] = (
-        f"WITH a AS ({_g1w_sql(0)}), b AS ({_g1w_sql(1)}), "
-        "u AS (SELECT * FROM a UNION ALL SELECT * FROM b) "
-        "SELECT src, dst, sum(w)::BIGINT AS w FROM u GROUP BY src, dst"
-    )
 
-    o["degree_hist_g1"] = (
-        f"WITH g AS ({G1_SQL}), "
-        "nodes AS (SELECT DISTINCT id FROM (SELECT src AS id FROM g UNION ALL SELECT dst FROM g)), "
-        "deg AS (SELECT n.id, COALESCE(d.c, 0) AS deg FROM nodes n "
-        "LEFT JOIN (SELECT src, count(*) AS c FROM g GROUP BY src) d ON d.src = n.id) "
-        "SELECT deg::BIGINT AS deg, count(*)::BIGINT AS n_nodes FROM deg GROUP BY 1"
-    )
-    o["graph_stats_g1"] = (
-        f"WITH g AS ({G1_SQL}), "
-        "nodes AS (SELECT DISTINCT id FROM (SELECT src AS id FROM g UNION ALL SELECT dst FROM g)), "
-        "od AS (SELECT n.id, COALESCE(d.c, 0) AS d FROM nodes n "
-        "LEFT JOIN (SELECT src, count(*) AS c FROM g GROUP BY src) d ON d.src = n.id), "
-        "idg AS (SELECT n.id, COALESCE(d.c, 0) AS d FROM nodes n "
-        "LEFT JOIN (SELECT dst, count(*) AS c FROM g GROUP BY dst) d ON d.dst = n.id) "
-        "SELECT (SELECT count(*) FROM nodes)::BIGINT AS nodes, "
-        "(SELECT count(*) FROM g)::BIGINT AS arcs, "
-        "(SELECT count(*) FROM g WHERE src = dst)::BIGINT AS loops, "
-        "(SELECT count(*) FROM od WHERE d = 0)::BIGINT AS dangling, "
-        "(SELECT max(d) FROM od)::BIGINT AS max_outdeg, "
-        "(SELECT max(d) FROM idg)::BIGINT AS max_indeg"
-    )
-    o["typed_pack"] = (
-        "WITH u AS (SELECT c_custkey::BIGINT AS id, 0::BIGINT AS typ FROM customer "
-        "UNION ALL SELECT s_suppkey::BIGINT, 1::BIGINT FROM supplier) "
-        "SELECT id, typ, (typ * 281474976710656 + id)::BIGINT AS packed, "
-        "((typ * 281474976710656 + id) // 281474976710656)::BIGINT AS typ_check, "
-        "((typ * 281474976710656 + id) % 281474976710656)::BIGINT AS id_check FROM u"
-    )
-    return o
-
-
-# ===========================================================================
-# Training-data pipeline gates (documents / embeddings tables)
-# ===========================================================================
-
-from webgraph_big_spark.datapipe import dedup as dd  # noqa: E402
-from webgraph_big_spark.datapipe import text as dt  # noqa: E402
-from webgraph_big_spark.datapipe import similarity as ds  # noqa: E402
-from webgraph_big_spark.datapipe import multimodal as dm  # noqa: E402
-
-# shared SQL fragments mirroring the Spark-side constants
-_TOKS = "string_split(lower(text), ' ')"
-_H = lambda x: f"('0x' || substr(md5({x}), 1, 12))::BIGINT"  # noqa: E731
-TOPK_K = 5
-TOPK_RND = 6
-NEAR_DUP_T = 0.05
-
-
-def _docs(spark: SparkSession, sf: str) -> DataFrame:
-    return _read(spark, sf, "documents")
-
-
-def _emb(spark: SparkSession, sf: str) -> DataFrame:
-    return _read(spark, sf, "embeddings")
-
-
-def _datapipe_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    q["dedup_exact"] = lambda spark, sf: dd.exact_duplicates(_docs(spark, sf))
-
-    q["minhash_signatures"] = lambda spark, sf: dd.minhash_signatures(_docs(spark, sf))
-
-    q["lsh_candidates"] = lambda spark, sf: dd.lsh_candidate_pairs(_docs(spark, sf))
-
-    q["near_dup_pairs"] = lambda spark, sf: dd.jaccard_pairs(
-        _docs(spark, sf),
-        candidates=dd.lsh_candidate_pairs(_docs(spark, sf)),
-        threshold=NEAR_DUP_T,
-    )
-
-    q["simhash_docs"] = lambda spark, sf: dd.simhash(_docs(spark, sf))
-
-    q["token_stats"] = lambda spark, sf: dt.token_stats(_docs(spark, sf))
-
-    q["lang_id"] = lambda spark, sf: dt.lang_id(_docs(spark, sf))
-
-    q["quality_score"] = lambda spark, sf: dt.quality_score(_docs(spark, sf))
-
-    q["fingerprint_docs"] = lambda spark, sf: dt.fingerprint(_docs(spark, sf))
-
-    q["embedding_topk"] = lambda spark, sf: ds.brute_force_topk(
-        _emb(spark, sf).filter(F.col("vec_id") < 8), _emb(spark, sf), k=TOPK_K, rnd=TOPK_RND
-    )
-
-    q["embedding_ivf_topk"] = lambda spark, sf: ds.ivf_topk(
-        _emb(spark, sf).filter(F.col("vec_id") < 8),
-        _emb(spark, sf),
-        k=TOPK_K,
-        nprobe=2,
-        rnd=TOPK_RND,
-    )
-
-    q["media_meta"] = lambda spark, sf: dm.text_as_media(_docs(spark, sf)).select(
-        "media_id",
-        F.col("meta.format").alias("format"),
-        F.col("meta.n_bytes").alias("n_bytes"),
-        F.col("meta.checksum").alias("checksum"),
-    )
-
-    return q
-
-
-def _shingle_ctes() -> str:
-    k = dd.SHINGLE_K
-    return (
-        f"_t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents), "
-        "_g AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform("
-        f"generate_series(1, greatest(len(toks) - {k - 1}, 0)), "
-        f"i -> array_to_string(toks[i:i+{k - 1}], ' ')))) AS gram FROM _t), "
-        f"sh AS MATERIALIZED (SELECT DISTINCT doc_id, {_H('gram')} AS sh FROM _g)"
-    )
-
-
-def _sig_cte() -> str:
-    mins = ", ".join(
-        f"min((sh * {dd.MH_A[j]} + {dd.MH_B[j]}) % {dd.MH_P}) AS mh{j}"
-        for j in range(dd.NUM_HASHES)
-    )
-    return (
-        _shingle_ctes()
-        + f", sig AS MATERIALIZED (SELECT doc_id, {mins} FROM sh GROUP BY doc_id)"
-    )
-
-
-def _lsh_pairs_sql_body() -> str:
-    n_bands = dd.NUM_HASHES // dd.LSH_BAND_ROWS
-    unions = []
-    for b in range(n_bands):
-        cols = [f"mh{b * dd.LSH_BAND_ROWS + r}" for r in range(dd.LSH_BAND_ROWS)]
-        on = " AND ".join(f"a.{c} = b.{c}" for c in cols)
-        unions.append(
-            f"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM sig a JOIN sig b "
-            f"ON {on} AND a.doc_id < b.doc_id"
-        )
-    return " UNION ALL ".join(unions)
-
-
-def _datapipe_oracle_sql() -> dict[str, str]:
-    o: dict[str, str] = {}
-
-    o["dedup_exact"] = (
-        "SELECT md5(text) AS text_md5, count(*)::BIGINT AS n_copies, "
-        "min(doc_id) AS keeper FROM documents GROUP BY 1"
-    )
-
-    o["minhash_signatures"] = (
-        "WITH " + _sig_cte() + " SELECT * FROM sig"
-    )
-
-    o["lsh_candidates"] = (
-        "WITH " + _sig_cte()
-        + f", cand AS (SELECT DISTINCT doc_a, doc_b FROM ({_lsh_pairs_sql_body()})) "
-        "SELECT doc_a, doc_b FROM cand"
-    )
-
-    o["near_dup_pairs"] = (
-        "WITH " + _sig_cte()
-        + f", cand AS MATERIALIZED (SELECT DISTINCT doc_a, doc_b FROM ({_lsh_pairs_sql_body()})), "
-        "sz AS MATERIALIZED (SELECT doc_id, count(*)::BIGINT AS sz FROM sh GROUP BY doc_id), "
-        "inter AS MATERIALIZED (SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS i FROM cand c "
-        "JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh "
-        "GROUP BY c.doc_a, c.doc_b) "
-        "SELECT c.doc_a, c.doc_b, "
-        "round(COALESCE(i.i, 0) / (sa.sz + sb.sz - COALESCE(i.i, 0)), 9) AS jaccard "
-        "FROM cand c LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b "
-        "JOIN sz sa ON sa.doc_id = c.doc_a JOIN sz sb ON sb.doc_id = c.doc_b "
-        f"WHERE round(COALESCE(i.i, 0) / (sa.sz + sb.sz - COALESCE(i.i, 0)), 9) >= {NEAR_DUP_T}"
-    )
-
-    sums = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(dd.SIMHASH_BITS)
-    )
-    bits = " + ".join(
-        f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(dd.SIMHASH_BITS)
-    )
-    o["simhash_docs"] = (
-        f"WITH tk AS MATERIALIZED (SELECT doc_id, {_H('tok')} AS h FROM "
-        f"(SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)), "
-        f"s AS (SELECT doc_id, {sums} FROM tk GROUP BY doc_id) "
-        f"SELECT doc_id, ({bits})::BIGINT AS simhash FROM s"
-    )
-
-    o["token_stats"] = (
-        f"SELECT doc_id, len({_TOKS})::BIGINT AS n_tokens, "
-        f"len(list_distinct({_TOKS}))::BIGINT AS n_uniq_tokens, "
-        "length(text)::BIGINT AS n_chars FROM documents"
-    )
-
-    langs = sorted(dt.STOPWORDS)
-    score_cols = ", ".join(
-        "len(list_filter({toks}, x -> x IN ({words})))::BIGINT AS s_{lg}".format(
-            toks=_TOKS,
-            words=", ".join(f"'{w}'" for w in dt.STOPWORDS[lg]),
-            lg=lg,
-        )
-        for lg in langs
-    )
-    cases = []
-    for i, lg in enumerate(langs[:-1]):
-        rest = [f"s_{x}" for x in langs[i + 1 :]]
-        gt = f"greatest({', '.join(rest)})" if len(rest) > 1 else rest[0]
-        cases.append(f"WHEN s_{lg} >= {gt} THEN '{lg}'")
-    case_expr = "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
-    o["lang_id"] = (
-        f"WITH s AS (SELECT doc_id, {score_cols} FROM documents) "
-        f"SELECT doc_id, {case_expr} AS lang_pred, "
-        f"greatest({', '.join('s_' + lg for lg in langs)}) AS best_score FROM s"
-    )
-
-    en_words = ", ".join(f"'{w}'" for w in dt.STOPWORDS["en"])
-    o["quality_score"] = (
-        f"WITH f AS (SELECT doc_id, len({_TOKS})::DOUBLE AS n, "
-        f"len(list_filter({_TOKS}, x -> x IN ({en_words})))::DOUBLE AS stop, "
-        f"len(list_distinct({_TOKS}))::DOUBLE AS uniq FROM documents) "
-        "SELECT doc_id, round(0.3 * least(n / 100.0, 1.0) + 0.4 * (stop / n) "
-        "+ 0.3 * (uniq / n), 9) AS quality FROM f"
-    )
-
-    o["fingerprint_docs"] = (
-        "SELECT doc_id, list_reduce(list_prepend(0::BIGINT, "
-        f"list_transform({_TOKS}, t -> {_H('t')})), "
-        f"(acc, x) -> (acc * {dt.FP_BASE} + x) % {dt.FP_MOD}) AS fp FROM documents"
-    )
-
-    _cos = (
-        "round(list_dot_product(qv, cv) / "
-        "(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), "
-        f"{TOPK_RND})"
-    )
-    o["embedding_topk"] = (
-        "WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8), "
-        "c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings), "
-        f"sims AS (SELECT query_id, neighbor_id, {_cos} AS cos_sim "
-        "FROM q CROSS JOIN c WHERE query_id <> neighbor_id), "
-        "r AS (SELECT *, row_number() OVER (PARTITION BY query_id "
-        "ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM sims) "
-        f"SELECT query_id, neighbor_id, cos_sim, rank::BIGINT AS rank FROM r WHERE rank <= {TOPK_K}"
-    )
-
-    o["embedding_ivf_topk"] = (
-        "WITH dims AS (SELECT unnest(generate_series(1, 64)) AS d), "
-        "cents AS MATERIALIZED (SELECT label, d, avg(embedding[d]::DOUBLE) AS cv "
-        "FROM embeddings CROSS JOIN dims GROUP BY label, d), "
-        "centlist AS MATERIALIZED (SELECT label AS cell, list(cv ORDER BY d) AS centroid FROM cents GROUP BY label), "
-        "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8), "
-        "cellscore AS (SELECT query_id, qv, cell, "
-        "list_dot_product(qv, centroid) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(centroid, centroid))) AS cs "
-        "FROM q CROSS JOIN centlist), "
-        "probed AS (SELECT query_id, qv, cell FROM (SELECT *, row_number() OVER "
-        "(PARTITION BY query_id ORDER BY cs DESC, cell ASC) AS r FROM cellscore) WHERE r <= 2), "
-        "c AS (SELECT vec_id AS neighbor_id, label AS cell, embedding::DOUBLE[] AS cv FROM embeddings), "
-        f"sims AS (SELECT query_id, neighbor_id, {_cos} AS cos_sim "
-        "FROM probed JOIN c USING (cell) WHERE query_id <> neighbor_id), "
-        "r AS (SELECT *, row_number() OVER (PARTITION BY query_id "
-        "ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM sims) "
-        f"SELECT query_id, neighbor_id, cos_sim, rank::BIGINT AS rank FROM r WHERE rank <= {TOPK_K}"
-    )
-
-    o["media_meta"] = (
-        "SELECT doc_id AS media_id, 'text/plain' AS format, "
-        "octet_length(encode(text))::BIGINT AS n_bytes, md5(text) AS checksum FROM documents"
-    )
-    return o
-
-
-_BASE_QUERIES = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = _BASE_QUERIES()
-    q.update(_datapipe_queries())
-    return q
-
-
-_BASE_ORACLES = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = _BASE_ORACLES()
-    o.update(_datapipe_oracle_sql())
-    return o
-
-
-# ===========================================================================
-# SCC + geometric centrality gates
-# ===========================================================================
-
-from webgraph_big_spark.algorithms.scc import strongly_connected_components  # noqa: E402
-from webgraph_big_spark.algorithms.centrality import harmonic_centrality  # noqa: E402
-
-SCC_T = 32
-HC_T = 16
-
-# G3: the band graph plus every 7th edge reversed → nontrivial directed cycles
-G3_SQL = (
-    f"WITH _b AS ({G2_SQL}) "
-    "SELECT src, dst FROM _b UNION "
-    "SELECT dst AS src, src AS dst FROM _b WHERE (src + dst) % 7 = 0"
-)
-
-
-def load_g3(spark: SparkSession, sf: str) -> Graph:
-    b = load_g2(spark, sf).edges
-    rev = b.filter((F.col("src") + F.col("dst")) % 7 == 0).select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    return Graph(b.union(rev).distinct(), dense=False)
-
-
-def _closure_sql(edge_sql: str, t: int) -> str:
-    import math
-
+def _closure_sql(edge_sql: str, t: int) -> tuple[str, str]:
     rounds = max(1, math.ceil(math.log2(t)))
     parts = [
         f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edge_sql}))",
@@ -829,6 +530,17 @@ def _scc_sql(edge_sql: str, t: int) -> str:
     )
 
 
+def _scc_buckets_sql(edge_sql: str, t: int) -> str:
+    return _scc_sql(edge_sql, t).replace(
+        "SELECT x AS id, min(y) AS comp FROM m GROUP BY x",
+        ", comps AS MATERIALIZED (SELECT x AS id, min(y) AS comp FROM m GROUP BY x), "
+        "arcs AS MATERIALIZED (SELECT cs.comp AS c_src, cd.comp AS c_dst FROM e "
+        "JOIN comps cs ON e.src = cs.id JOIN comps cd ON e.dst = cd.id) "
+        "SELECT DISTINCT c_src AS comp FROM arcs WHERE c_src NOT IN "
+        "(SELECT c_src FROM arcs WHERE c_src <> c_dst)",
+    )
+
+
 def _harmonic_sql(edge_sql: str, t: int) -> str:
     parts = [
         f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edge_sql}))",
@@ -847,199 +559,6 @@ def _harmonic_sql(edge_sql: str, t: int) -> str:
         + f" SELECT y AS id, round(sum(1.0 / dist), {RND}) AS harmonic "
         f"FROM d{t} WHERE dist > 0 GROUP BY y"
     )
-
-
-def _scc_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "scc_g3": lambda spark, sf: strongly_connected_components(
-            load_g3(spark, sf), t=SCC_T
-        ),
-        "harmonic_g2": lambda spark, sf: harmonic_centrality(load_g2(spark, sf), t=HC_T),
-    }
-
-
-def _scc_oracles() -> dict[str, str]:
-    return {
-        "scc_g3": _scc_sql(G3_SQL, SCC_T),
-        "harmonic_g2": _harmonic_sql(G2_SQL, HC_T),
-    }
-
-
-_BASE_QUERIES2 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = _BASE_QUERIES2()
-    q.update(_scc_queries())
-    return q
-
-
-_BASE_ORACLES2 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = _BASE_ORACLES2()
-    o.update(_scc_oracles())
-    return o
-
-
-# ===========================================================================
-# Round-2 gates: labelled storage, layout permutations, HyperBall registers,
-# FW-BW SCC + buckets, BFS parents, k-means IVF, bucketed PageRank
-# ===========================================================================
-
-import tempfile  # noqa: E402
-
-from webgraph_big_spark.algorithms.bfs import bfs_distances as _bfs  # noqa: E402
-from webgraph_big_spark.algorithms.hyperball import (  # noqa: E402
-    hyperball,
-    hyperball_registers,
-    hyperball_registers_sql,
-    hyperball_centralities,
-    hyperball_centralities_sql,
-    hyperball_nf_sql,
-)
-from webgraph_big_spark.algorithms.scc import (  # noqa: E402
-    strongly_connected_components_fwbw,
-    scc_buckets,
-)
-
-HB_T = 2
-KM_K = 8
-KM_ITERS = 3
-EMB_DIM = 64
-
-# G5: nation-level quotient of G1 with half the arcs reversed — a tiny
-# (≤50-node) directed graph with nontrivial SCCs and small diameter, the
-# hash-matched fixture for the FW-BW path (whose closure-free oracle
-# stays cheap here; big-graph FW-BW behaviour is pytest-covered).
-G5_SQL = (
-    f"WITH _q AS (SELECT DISTINCT c.c_nationkey::BIGINT AS src, "
-    "(100000 + s.s_nationkey)::BIGINT AS dst "
-    f"FROM ({G1_SQL}) g JOIN customer c ON g.src = c.c_custkey "
-    "JOIN supplier s ON g.dst - 100000 = s.s_suppkey) "
-    "SELECT src, dst FROM _q UNION "
-    "SELECT dst AS src, src AS dst FROM _q WHERE (src + dst) % 2 = 0"
-)
-
-
-def load_g5(spark: SparkSession, sf: str) -> Graph:
-    cust = _read(spark, sf, "customer").select(
-        F.col("c_custkey").cast("long").alias("id"),
-        F.col("c_nationkey").cast("long").alias("to"),
-    )
-    supp = _read(spark, sf, "supplier").select(
-        (F.lit(100000) + F.col("s_suppkey")).cast("long").alias("id"),
-        (F.lit(100000) + F.col("s_nationkey")).cast("long").alias("to"),
-    )
-    q = tr.quotient_graph(load_g1(spark, sf), cust.union(supp)).edges
-    rev = q.filter((F.col("src") + F.col("dst")) % 2 == 0).select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    return Graph(q.union(rev).distinct(), dense=False)
-
-
-def _store_load_weighted(spark: SparkSession, sf: str) -> DataFrame:
-    """Labelled-storage roundtrip: store the weighted purchase graph
-    (gap-encoded CSR + aligned label arrays), load it back, return the
-    arcs — the ``BVGraph.storeLabelled`` gate (identity oracle)."""
-    g = load_g1_weighted(spark, sf, 0)
-    base = tempfile.mkdtemp(prefix="wbs_store_gate_")
-    g.store(base, buckets=8)
-    loaded = Graph.load(spark, base)
-    return loaded.edges.select("src", "dst", F.col("w").cast("long").alias("w"))
-
-
-def _relabel_edges(spark: SparkSession, sf: str, which: str) -> DataFrame:
-    g = load_g2(spark, sf)
-    key = {"lex": tr.lex_key, "gray": tr.gray_key}[which](g)
-    relabeled, _perm = tr.relabel_by_order(g, key)
-    return relabeled.edges
-
-
-def _relabel_random(spark: SparkSession, sf: str) -> DataFrame:
-    g = load_g2(spark, sf)
-    relabeled, _perm = tr.relabel_by_order(g, tr.random_key(g, seed=0))
-    return relabeled.edges
-
-
-def _bfs_parents(spark: SparkSession, sf: str) -> DataFrame:
-    g = load_g2(spark, sf)
-    source = g.touched_nodes().agg(F.min("id")).first()[0]
-    return _bfs(g, [int(source)], fixed_rounds=BFS_ROUNDS, parents=True).select(
-        "id", F.col("dist").cast("int").alias("dist"), "parent"
-    )
-
-
-def _r2_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    q["store_load_weighted_g1"] = _store_load_weighted
-    q["relabel_lex_g2"] = lambda spark, sf: _relabel_edges(spark, sf, "lex")
-    q["relabel_gray_g2"] = lambda spark, sf: _relabel_edges(spark, sf, "gray")
-    q["relabel_random_g2"] = _relabel_random
-    q["bfs_parents_g2"] = _bfs_parents
-
-    q["hyperball_regs_g2"] = lambda spark, sf: hyperball_registers(
-        load_g2(spark, sf), HB_T
-    )
-    # reference-ctor precision knob (HyperBall.java:217 log2m): the m=16
-    # variant exercises the parameterized register width end to end
-    q["hyperball_regs_m16_g2"] = lambda spark, sf: hyperball_registers(
-        load_g2(spark, sf), HB_T, log2m=4
-    )
-    # registers are packed 8 six-bit fields per long (bit-sliced
-    # max-merge, plan width O(1) in m): the *_packed_* gate names predate
-    # the single engine and run the same function; the m=256 gate
-    # exercises a precision above the default
-    q["hyperball_regs_packed_g2"] = lambda spark, sf: hyperball_registers(
-        load_g2(spark, sf), HB_T
-    )
-    q["hyperball_regs_packed_m256_g2"] = lambda spark, sf: hyperball_registers(
-        load_g2(spark, sf), HB_T, log2m=8
-    )
-    # the NF estimator (per-row partial sums + absent-slot correction):
-    # rounded to 3 dp so the float fold-order difference vs the oracle's
-    # balanced per-node tree is absorbed — registers themselves are
-    # gated integer-exact above
-    q["hyperball_packed_nf_g2"] = lambda spark, sf: hyperball(
-        load_g2(spark, sf), HB_T
-    ).select("t", F.round("nf", 3).alias("nf"))
-    # HLL centralities: the estimator is a deterministic SQL expression,
-    # so the unrolled transpose-side register recursion + per-round est
-    # deltas reproduce it exactly (hyperball_centralities_sql).  All five
-    # columns are gated; the ratio-derived ones (closeness/lin/
-    # discounted) quantize at 2 dp — ratios amplify libm ULP divergence
-    # between JVM and DuckDB, so the hash gate uses a coarser digit there.
-    q["hyperball_centralities_g2"] = lambda spark, sf: hyperball_centralities(
-        load_g2(spark, sf), t_max=4, discount=lambda t: 0.5**t
-    ).select("id", F.round("reachable", 3).alias("reachable"),
-             F.round("harmonic", 3).alias("harmonic"),
-             F.round("closeness", 2).alias("closeness"),
-             F.round("lin", 2).alias("lin"),
-             F.round("discounted", 2).alias("discounted"))
-
-    q["scc_fwbw_g5"] = lambda spark, sf: strongly_connected_components_fwbw(
-        load_g5(spark, sf)
-    )
-    q["scc_buckets_g3"] = lambda spark, sf: scc_buckets(
-        load_g3(spark, sf),
-        strongly_connected_components(load_g3(spark, sf), t=SCC_T),
-    ).select(F.col("comp").cast("long"))
-
-    q["pagerank_bucketed_g1"] = lambda spark, sf: pagerank(
-        load_g1(spark, sf),
-        alpha=ALPHA,
-        fixed_iterations=PR_ITERS,
-        broadcast_threshold_bytes=1,  # force the co-partitioned path
-    ).select("id", F.round("rank", RND).alias("rank"))
-
-    q["kmeans_cells"] = lambda spark, sf: ds.kmeans_assign(
-        _emb(spark, sf),
-        ds.kmeans_fit(_emb(spark, sf), k=KM_K, iters=KM_ITERS),
-    ).select(F.col("_pid").alias("vec_id"), "cell")
-
-    return q
 
 
 def _perm_sql(edge_sql: str, key_expr: str) -> str:
@@ -1085,183 +604,6 @@ def _random_perm_sql(edge_sql: str, seed: int) -> str:
     )
 
 
-def _bfs_parents_sql(edge_sql: str, rounds: int) -> str:
-    parts = [
-        "WITH " + _sym_cte(edge_sql),
-        "v0 AS MATERIALIZED (SELECT (SELECT min(id) FROM nodes) AS id, 0 AS dist, "
-        "(SELECT min(id) FROM nodes) AS parent)",
-        "f0 AS MATERIALIZED (SELECT * FROM v0)",
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f"f{k} AS MATERIALIZED (SELECT id, {k} AS dist, parent FROM ("
-            f"SELECT e.dst AS id, min(f.id) AS parent FROM e JOIN f{k-1} f ON e.src = f.id "
-            f"GROUP BY e.dst) x WHERE id NOT IN (SELECT id FROM v{k-1}))"
-        )
-        parts.append(
-            f"v{k} AS MATERIALIZED (SELECT * FROM v{k-1} UNION ALL SELECT * FROM f{k})"
-        )
-    return ", ".join(parts) + f" SELECT id, dist::INT AS dist, parent FROM v{rounds}"
-
-
-def _kmeans_ctes(k: int, iters: int, dim: int) -> tuple[str, str]:
-    """Unrolled Lloyd iterations mirroring ds.kmeans_fit exactly;
-    returns (cte_block, final_centroid_cte_name)."""
-    h = "('0x' || substr(md5('km:' || pid::VARCHAR), 1, 12))::BIGINT"
-    d2 = (
-        "round(list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.centroid) "
-        "+ list_dot_product(c.centroid, c.centroid), 9)"
-    )
-    parts = [
-        "pts AS MATERIALIZED (SELECT vec_id AS pid, embedding::DOUBLE[] AS v FROM embeddings)",
-        f"dims AS MATERIALIZED (SELECT unnest(generate_series(1, {dim})) AS pos)",
-        f"seeds AS MATERIALIZED (SELECT pid, v, {h} AS hh FROM pts ORDER BY hh, pid LIMIT {k})",
-        "c0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY hh, pid) - 1 AS cell, "
-        "list_transform(v, x -> round(x, 9)) AS centroid FROM seeds)",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"a{i} AS MATERIALIZED (SELECT pid, cell FROM ("
-            f"SELECT p.pid, c.cell, row_number() OVER (PARTITION BY p.pid "
-            f"ORDER BY {d2} ASC, c.cell ASC) AS rn FROM pts p CROSS JOIN c{i-1} c) WHERE rn = 1)"
-        )
-        parts.append(
-            f"c{i} AS MATERIALIZED (SELECT cell, list(vv ORDER BY pos) AS centroid FROM ("
-            f"SELECT a.cell, dims.pos, round(avg(p.v[dims.pos]), 9) AS vv "
-            f"FROM a{i} a JOIN pts p USING (pid) CROSS JOIN dims "
-            "GROUP BY a.cell, dims.pos) GROUP BY cell)"
-        )
-    return ", ".join(parts), f"c{iters}"
-
-
-def _kmeans_assign_sql(k: int, iters: int, dim: int) -> str:
-    ctes, cfin = _kmeans_ctes(k, iters, dim)
-    d2 = (
-        "round(list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.centroid) "
-        "+ list_dot_product(c.centroid, c.centroid), 9)"
-    )
-    return (
-        "WITH " + ctes + " SELECT pid AS vec_id, cell FROM ("
-        "SELECT p.pid, c.cell, row_number() OVER (PARTITION BY p.pid "
-        f"ORDER BY {d2} ASC, c.cell ASC) AS rn FROM pts p CROSS JOIN {cfin} c) WHERE rn = 1"
-    )
-
-
-def _ivf_kmeans_sql(k_cells: int, iters: int, dim: int, topk: int, nprobe: int) -> str:
-    ctes, cfin = _kmeans_ctes(k_cells, iters, dim)
-    d2 = (
-        "round(list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.centroid) "
-        "+ list_dot_product(c.centroid, c.centroid), 9)"
-    )
-    _cos_qc = (
-        "round(list_dot_product(q.qv, c.centroid) / "
-        "(sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.centroid, c.centroid))), 9)"
-    )
-    _cos_qn = (
-        "round(list_dot_product(qv, cv) / "
-        f"(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), {TOPK_RND})"
-    )
-    return (
-        "WITH " + ctes + ", "
-        "assign AS MATERIALIZED (SELECT pid, cell FROM ("
-        "SELECT p.pid, c.cell, row_number() OVER (PARTITION BY p.pid "
-        f"ORDER BY {d2} ASC, c.cell ASC) AS rn FROM pts p CROSS JOIN {cfin} c) WHERE rn = 1), "
-        "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8), "
-        f"cellscore AS (SELECT q.query_id, q.qv, c.cell, {_cos_qc} AS cs "
-        f"FROM q CROSS JOIN {cfin} c), "
-        "probed AS (SELECT query_id, qv, cell FROM (SELECT *, row_number() OVER "
-        f"(PARTITION BY query_id ORDER BY cs DESC, cell ASC) AS r FROM cellscore) WHERE r <= {nprobe}), "
-        "cc AS (SELECT p.pid AS neighbor_id, a.cell, p.v AS cv FROM pts p JOIN assign a USING (pid)), "
-        f"sims AS (SELECT query_id, neighbor_id, {_cos_qn} AS cos_sim "
-        "FROM probed JOIN cc USING (cell) WHERE query_id <> neighbor_id), "
-        "r AS (SELECT *, row_number() OVER (PARTITION BY query_id "
-        "ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM sims) "
-        f"SELECT query_id, neighbor_id, cos_sim, rank::BIGINT AS rank FROM r WHERE rank <= {topk}"
-    )
-
-
-def _r2_oracles() -> dict[str, str]:
-    o: dict[str, str] = {}
-
-    o["store_load_weighted_g1"] = _g1w_sql(0)
-    o["relabel_lex_g2"] = _perm_sql(G2_SQL, _lex_key_sql())
-    o["relabel_gray_g2"] = _perm_sql(G2_SQL, _gray_key_sql())
-    o["relabel_random_g2"] = _random_perm_sql(G2_SQL, 0)
-    o["bfs_parents_g2"] = _bfs_parents_sql(G2_SQL, BFS_ROUNDS)
-    o["hyperball_regs_g2"] = hyperball_registers_sql(G2_SQL, HB_T)
-    o["hyperball_regs_m16_g2"] = hyperball_registers_sql(G2_SQL, HB_T, log2m=4)
-    # the *_packed_* gates run the same engine as the two above and hash
-    # against the SAME unrolled register oracle
-    o["hyperball_regs_packed_g2"] = hyperball_registers_sql(G2_SQL, HB_T)
-    o["hyperball_regs_packed_m256_g2"] = hyperball_registers_sql(
-        G2_SQL, HB_T, log2m=8
-    )
-    o["hyperball_packed_nf_g2"] = hyperball_nf_sql(G2_SQL, HB_T)
-    o["hyperball_centralities_g2"] = hyperball_centralities_sql(
-        G2_SQL, 4, full=True, discount_weights=[0.5**t for t in range(1, 5)]
-    )
-    o["scc_fwbw_g5"] = _scc_sql(G5_SQL, 8)
-    o["scc_buckets_g3"] = (
-        _scc_sql(G3_SQL, SCC_T).replace(
-            "SELECT x AS id, min(y) AS comp FROM m GROUP BY x",
-            ", comps AS MATERIALIZED (SELECT x AS id, min(y) AS comp FROM m GROUP BY x), "
-            "arcs AS MATERIALIZED (SELECT cs.comp AS c_src, cd.comp AS c_dst FROM e "
-            "JOIN comps cs ON e.src = cs.id JOIN comps cd ON e.dst = cd.id) "
-            "SELECT DISTINCT c_src AS comp FROM arcs WHERE c_src NOT IN "
-            "(SELECT c_src FROM arcs WHERE c_src <> c_dst)",
-        )
-    )
-    o["pagerank_bucketed_g1"] = _pagerank_sql(G1_SQL, PR_ITERS, ALPHA)
-    o["kmeans_cells"] = _kmeans_assign_sql(KM_K, KM_ITERS, EMB_DIM)
-    # recomputed ivf oracle: trained quantizer instead of the label column
-    o["embedding_ivf_topk"] = _ivf_kmeans_sql(KM_K, KM_ITERS, EMB_DIM, TOPK_K, 2)
-    # quality guard: empty docs score 0 on both engines now
-    o["quality_score"] = (
-        "WITH f AS (SELECT doc_id, len(" + _TOKS + ")::DOUBLE AS n, "
-        "len(list_filter(" + _TOKS + ", x -> x IN ("
-        + ", ".join(f"'{w}'" for w in dt.STOPWORDS["en"])
-        + ")))::DOUBLE AS stop, "
-        "len(list_distinct(" + _TOKS + "))::DOUBLE AS uniq FROM documents) "
-        "SELECT doc_id, CASE WHEN n = 0 THEN 0.0 ELSE "
-        "round(0.3 * least(n / 100.0, 1.0) + 0.4 * (stop / n) + 0.3 * (uniq / n), 9) "
-        "END AS quality FROM f"
-    )
-    return o
-
-
-_BASE_QUERIES3 = queries
-
-
-# ===========================================================================
-# round 3: typed per-type-pair conversion gate
-# ===========================================================================
-
-from webgraph_big_spark import typed as ty  # noqa: E402
-
-
-def _typed_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Convert G1 to a typed graph (customers type 0, suppliers type 1),
-    store partitioned by (src_type, dst_type), and return per-pair arc
-    counts + the sum of per-type-dense dst ids from the STORED table —
-    gating both the pair partitioning and the ConvertToTypedGraph
-    renumbering (``typed/ConvertToTypedGraph.java:95``)."""
-    g = load_g1(spark, sf)
-    nt = g.nodes().select(
-        "id",
-        F.when(F.col("id") < 100000, 0).otherwise(1).cast("int").alias("type"),
-    )
-    base = tempfile.mkdtemp(prefix="wbs_typed_gate_")
-    ty.convert_to_typed(g, nt, base)
-    arcs = spark.read.parquet(base + "/arcs")
-    return arcs.groupBy(
-        F.col("src_type").cast("long").alias("src_type"),
-        F.col("dst_type").cast("long").alias("dst_type"),
-    ).agg(
-        F.count("*").alias("arcs"),
-        F.sum(F.col("dst_tid").cast("double")).alias("sum_tdst"),
-    )
-
-
 _TYPED_PAIRS_SQL = (
     f"WITH e AS MATERIALIZED (SELECT src, dst FROM ({G1_SQL})), "
     "nodes AS MATERIALIZED (SELECT DISTINCT id FROM "
@@ -1276,19 +618,486 @@ _TYPED_PAIRS_SQL = (
     "GROUP BY ts.type, td.type"
 )
 
+# --- training-data pipeline fragments, mirroring the Spark-side constants
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = _BASE_QUERIES3()
-    q.update(_r2_queries())
-    q["typed_pairs_g1"] = _typed_pairs
-    return q
+_TOKS = "string_split(lower(text), ' ')"
+_COS = (
+    "round(list_dot_product(qv, cv) / "
+    "(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), "
+    f"{TOPK_RND})"
+)
+# squared distance point → centroid, as ds.kmeans_fit rounds it
+_KM_D2 = (
+    "round(list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.centroid) "
+    "+ list_dot_product(c.centroid, c.centroid), 9)"
+)
 
 
-_BASE_ORACLES3 = oracle_sql
+def _h(x: str) -> str:
+    return f"('0x' || substr(md5({x}), 1, 12))::BIGINT"
 
 
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = _BASE_ORACLES3()
-    o.update(_r2_oracles())
-    o["typed_pairs_g1"] = _TYPED_PAIRS_SQL
-    return o
+def _shingle_ctes() -> str:
+    k = dd.SHINGLE_K
+    return (
+        f"_t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents), "
+        "_g AS MATERIALIZED (SELECT doc_id, unnest(list_distinct(list_transform("
+        f"generate_series(1, greatest(len(toks) - {k - 1}, 0)), "
+        f"i -> array_to_string(toks[i:i+{k - 1}], ' ')))) AS gram FROM _t), "
+        f"sh AS MATERIALIZED (SELECT DISTINCT doc_id, {_h('gram')} AS sh FROM _g)"
+    )
+
+
+def _sig_cte() -> str:
+    mins = ", ".join(
+        f"min((sh * {dd.MH_A[j]} + {dd.MH_B[j]}) % {dd.MH_P}) AS mh{j}"
+        for j in range(dd.NUM_HASHES)
+    )
+    return (
+        _shingle_ctes()
+        + f", sig AS MATERIALIZED (SELECT doc_id, {mins} FROM sh GROUP BY doc_id)"
+    )
+
+
+def _lsh_pairs_sql_body() -> str:
+    n_bands = dd.NUM_HASHES // dd.LSH_BAND_ROWS
+    unions = []
+    for b in range(n_bands):
+        cols = [f"mh{b * dd.LSH_BAND_ROWS + r}" for r in range(dd.LSH_BAND_ROWS)]
+        on = " AND ".join(f"a.{c} = b.{c}" for c in cols)
+        unions.append(
+            f"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM sig a JOIN sig b "
+            f"ON {on} AND a.doc_id < b.doc_id"
+        )
+    return " UNION ALL ".join(unions)
+
+
+def _simhash_sql() -> str:
+    sums = ", ".join(
+        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
+        for b in range(dd.SIMHASH_BITS)
+    )
+    bits = " + ".join(
+        f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(dd.SIMHASH_BITS)
+    )
+    return (
+        f"WITH tk AS MATERIALIZED (SELECT doc_id, {_h('tok')} AS h FROM "
+        f"(SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)), "
+        f"s AS (SELECT doc_id, {sums} FROM tk GROUP BY doc_id) "
+        f"SELECT doc_id, ({bits})::BIGINT AS simhash FROM s"
+    )
+
+
+def _lang_id_sql() -> str:
+    langs = sorted(dt.STOPWORDS)
+    score_cols = ", ".join(
+        "len(list_filter({toks}, x -> x IN ({words})))::BIGINT AS s_{lg}".format(
+            toks=_TOKS,
+            words=", ".join(f"'{w}'" for w in dt.STOPWORDS[lg]),
+            lg=lg,
+        )
+        for lg in langs
+    )
+    cases = []
+    for i, lg in enumerate(langs[:-1]):
+        rest = [f"s_{x}" for x in langs[i + 1 :]]
+        gt = f"greatest({', '.join(rest)})" if len(rest) > 1 else rest[0]
+        cases.append(f"WHEN s_{lg} >= {gt} THEN '{lg}'")
+    case_expr = "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
+    return (
+        f"WITH s AS (SELECT doc_id, {score_cols} FROM documents) "
+        f"SELECT doc_id, {case_expr} AS lang_pred, "
+        f"greatest({', '.join('s_' + lg for lg in langs)}) AS best_score FROM s"
+    )
+
+
+def _kmeans_ctes(k: int, iters: int, dim: int) -> tuple[str, str]:
+    """Unrolled Lloyd iterations mirroring ds.kmeans_fit exactly;
+    returns (cte_block, final_centroid_cte_name)."""
+    h = "('0x' || substr(md5('km:' || pid::VARCHAR), 1, 12))::BIGINT"
+    parts = [
+        "pts AS MATERIALIZED (SELECT vec_id AS pid, embedding::DOUBLE[] AS v FROM embeddings)",
+        f"dims AS MATERIALIZED (SELECT unnest(generate_series(1, {dim})) AS pos)",
+        f"seeds AS MATERIALIZED (SELECT pid, v, {h} AS hh FROM pts ORDER BY hh, pid LIMIT {k})",
+        "c0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY hh, pid) - 1 AS cell, "
+        "list_transform(v, x -> round(x, 9)) AS centroid FROM seeds)",
+    ]
+    for i in range(1, iters + 1):
+        parts.append(
+            f"a{i} AS MATERIALIZED (SELECT pid, cell FROM ("
+            f"SELECT p.pid, c.cell, row_number() OVER (PARTITION BY p.pid "
+            f"ORDER BY {_KM_D2} ASC, c.cell ASC) AS rn FROM pts p CROSS JOIN c{i-1} c) WHERE rn = 1)"
+        )
+        parts.append(
+            f"c{i} AS MATERIALIZED (SELECT cell, list(vv ORDER BY pos) AS centroid FROM ("
+            f"SELECT a.cell, dims.pos, round(avg(p.v[dims.pos]), 9) AS vv "
+            f"FROM a{i} a JOIN pts p USING (pid) CROSS JOIN dims "
+            "GROUP BY a.cell, dims.pos) GROUP BY cell)"
+        )
+    return ", ".join(parts), f"c{iters}"
+
+
+def _kmeans_assign_sql(k: int, iters: int, dim: int) -> str:
+    ctes, cfin = _kmeans_ctes(k, iters, dim)
+    return (
+        "WITH " + ctes + " SELECT pid AS vec_id, cell FROM ("
+        "SELECT p.pid, c.cell, row_number() OVER (PARTITION BY p.pid "
+        f"ORDER BY {_KM_D2} ASC, c.cell ASC) AS rn FROM pts p CROSS JOIN {cfin} c) WHERE rn = 1"
+    )
+
+
+def _ivf_kmeans_sql(k_cells: int, iters: int, dim: int, topk: int, nprobe: int) -> str:
+    """IVF top-k over a trained quantizer (the k-means cells of
+    ``_kmeans_ctes``), not the table's label column."""
+    ctes, cfin = _kmeans_ctes(k_cells, iters, dim)
+    _cos_qc = (
+        "round(list_dot_product(q.qv, c.centroid) / "
+        "(sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.centroid, c.centroid))), 9)"
+    )
+    return (
+        "WITH " + ctes + ", "
+        "assign AS MATERIALIZED (SELECT pid, cell FROM ("
+        "SELECT p.pid, c.cell, row_number() OVER (PARTITION BY p.pid "
+        f"ORDER BY {_KM_D2} ASC, c.cell ASC) AS rn FROM pts p CROSS JOIN {cfin} c) WHERE rn = 1), "
+        "q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8), "
+        f"cellscore AS (SELECT q.query_id, q.qv, c.cell, {_cos_qc} AS cs "
+        f"FROM q CROSS JOIN {cfin} c), "
+        "probed AS (SELECT query_id, qv, cell FROM (SELECT *, row_number() OVER "
+        f"(PARTITION BY query_id ORDER BY cs DESC, cell ASC) AS r FROM cellscore) WHERE r <= {nprobe}), "
+        "cc AS (SELECT p.pid AS neighbor_id, a.cell, p.v AS cv FROM pts p JOIN assign a USING (pid)), "
+        f"sims AS (SELECT query_id, neighbor_id, {_COS} AS cos_sim "
+        "FROM probed JOIN cc USING (cell) WHERE query_id <> neighbor_id), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY query_id "
+        "ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM sims) "
+        f"SELECT query_id, neighbor_id, cos_sim, rank::BIGINT AS rank FROM r WHERE rank <= {topk}"
+    )
+
+
+# ---------------------------------------------------------------------------
+# driver contract
+# ---------------------------------------------------------------------------
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: converged PageRank on the sf0.001 purchase graph."""
+    g = load_g1(spark, "/root/testdata/sf0.001")
+    ranks = pagerank(g, alpha=ALPHA, tol=1e-9, max_iterations=60, check_every=5)
+    return ranks.select("id", F.round("rank", RND).alias("rank"))
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {
+        # ---- whole-graph algorithms (fixed-round forms) ----
+        "pagerank_g1": lambda spark, sf: pagerank(
+            load_g1(spark, sf), alpha=ALPHA, fixed_iterations=PR_ITERS
+        ).select("id", F.round("rank", RND).alias("rank")),
+        "pagerank_bucketed_g1": lambda spark, sf: pagerank(
+            load_g1(spark, sf),
+            alpha=ALPHA,
+            fixed_iterations=PR_ITERS,
+            broadcast_threshold_bytes=1,  # force the co-partitioned path
+        ).select("id", F.round("rank", RND).alias("rank")),
+        "wcc_g2": lambda spark, sf: connected_components(
+            load_g2(spark, sf), fixed_iterations=WCC_ITERS
+        ).select("id", "comp"),
+        "labelprop_g2": lambda spark, sf: label_propagation(
+            load_g2(spark, sf), rounds=LP_ROUNDS
+        ).select("id", "label"),
+        "bfs_g2": lambda spark, sf: _bfs_g2(spark, sf),
+        "bfs_parents_g2": lambda spark, sf: _bfs_g2(spark, sf, parents=True),
+        "triangles_g2": lambda spark, sf: (
+            triangle_edges(load_g2(spark, sf))
+            .agg(F.coalesce(F.sum("tri"), F.lit(0)).cast("long").alias("n_triangles"))
+        ),
+        "neighbourhood_fn_g1": lambda spark, sf: neighbourhood_function_exact(
+            load_g1(spark, sf), NF_T
+        ),
+        # NeighbourhoodFunction-class statistics (effectiveDiameter /
+        # averageDistance / spid — the utilities the reference's slow tests
+        # drive); truncated-at-NF_T semantics on both engines
+        "distance_stats_g1": lambda spark, sf: distance_stats(
+            neighbourhood_function_exact(load_g1(spark, sf), NF_T)
+        ),
+        "scc_g3": lambda spark, sf: strongly_connected_components(
+            load_g3(spark, sf), t=SCC_T
+        ),
+        "scc_fwbw_g5": lambda spark, sf: strongly_connected_components_fwbw(
+            load_g5(spark, sf)
+        ),
+        "scc_buckets_g3": lambda spark, sf: scc_buckets(
+            load_g3(spark, sf),
+            strongly_connected_components(load_g3(spark, sf), t=SCC_T),
+        ).select(F.col("comp").cast("long")),
+        "harmonic_g2": lambda spark, sf: harmonic_centrality(load_g2(spark, sf), t=HC_T),
+        # ---- HyperBall ----
+        "hyperball_regs_g2": lambda spark, sf: hyperball_registers(load_g2(spark, sf), HB_T),
+        # reference-ctor precision knob (HyperBall.java:217 log2m): the m=16
+        # variant exercises the parameterized register width end to end
+        "hyperball_regs_m16_g2": lambda spark, sf: hyperball_registers(
+            load_g2(spark, sf), HB_T, log2m=4
+        ),
+        # registers are packed 8 six-bit fields per long (bit-sliced
+        # max-merge, plan width O(1) in m): the *_packed_* gate names predate
+        # the single engine and run the same function; the m=256 gate
+        # exercises a precision above the default
+        "hyperball_regs_packed_g2": lambda spark, sf: hyperball_registers(
+            load_g2(spark, sf), HB_T
+        ),
+        "hyperball_regs_packed_m256_g2": lambda spark, sf: hyperball_registers(
+            load_g2(spark, sf), HB_T, log2m=8
+        ),
+        # the NF estimator (per-row partial sums + absent-slot correction):
+        # rounded to 3 dp so the float fold-order difference vs the oracle's
+        # balanced per-node tree is absorbed — registers themselves are
+        # gated integer-exact above
+        "hyperball_packed_nf_g2": lambda spark, sf: hyperball(
+            load_g2(spark, sf), HB_T
+        ).select("t", F.round("nf", 3).alias("nf")),
+        # HLL centralities: the estimator is a deterministic SQL expression,
+        # so the unrolled transpose-side register recursion + per-round est
+        # deltas reproduce it exactly (hyperball_centralities_sql).  All five
+        # columns are gated; the ratio-derived ones (closeness/lin/
+        # discounted) quantize at 2 dp — ratios amplify libm ULP divergence
+        # between JVM and DuckDB, so the hash gate uses a coarser digit there.
+        "hyperball_centralities_g2": lambda spark, sf: hyperball_centralities(
+            load_g2(spark, sf), t_max=4, discount=lambda t: 0.5**t
+        ).select("id", F.round("reachable", 3).alias("reachable"),
+                 F.round("harmonic", 3).alias("harmonic"),
+                 F.round("closeness", 2).alias("closeness"),
+                 F.round("lin", 2).alias("lin"),
+                 F.round("discounted", 2).alias("discounted")),
+        # ---- transforms ----
+        "transpose_g1": lambda spark, sf: tr.transpose(load_g1(spark, sf)).edges,
+        "symmetrize_g2": lambda spark, sf: tr.symmetrize(load_g2(spark, sf)).edges,
+        "simplify_g2": lambda spark, sf: tr.simplify(load_g2(spark, sf)).edges,
+        "compose_g2_g2": lambda spark, sf: tr.compose(
+            load_g2(spark, sf), load_g2(spark, sf)
+        ).edges,
+        "compose_minplus_g2": _compose_minplus,
+        "filter_arcs_g2": lambda spark, sf: tr.filter_arcs(
+            load_g2(spark, sf),
+            (F.col("src") % 2 == 0) & (F.col("dst") - F.col("src") <= 7),
+        ).edges,
+        "quotient_nation_g1": _quotient_nation,
+        "subgraph_building_g1": _subgraph_building,
+        "union_weighted_g1": lambda spark, sf: tr.union_labelled(
+            load_g1_weighted(spark, sf, 0),
+            load_g1_weighted(spark, sf, 1),
+            merge={"w": F.sum("w").cast("long").alias("w")},
+        ).edges,
+        "relabel_lex_g2": lambda spark, sf: _relabel_g2(spark, sf, "lex"),
+        "relabel_gray_g2": lambda spark, sf: _relabel_g2(spark, sf, "gray"),
+        "relabel_random_g2": lambda spark, sf: _relabel_g2(spark, sf, "random"),
+        # ---- storage, aggregations, stats, scalar kernels ----
+        "store_load_weighted_g1": _store_load_weighted,
+        "typed_pairs_g1": _typed_pairs,
+        "degree_hist_g1": lambda spark, sf: degree_histogram(
+            load_g1(spark, sf), "out", include_zero=True
+        ).select(F.col("deg").cast("long").alias("deg"), F.col("n_nodes").cast("long")),
+        "graph_stats_g1": _graph_stats_df,
+        "typed_pack": _typed_pack,
+        # ---- training-data pipeline ----
+        "dedup_exact": lambda spark, sf: dd.exact_duplicates(_docs(spark, sf)),
+        "minhash_signatures": lambda spark, sf: dd.minhash_signatures(_docs(spark, sf)),
+        "lsh_candidates": lambda spark, sf: dd.lsh_candidate_pairs(_docs(spark, sf)),
+        "near_dup_pairs": lambda spark, sf: dd.jaccard_pairs(
+            _docs(spark, sf),
+            candidates=dd.lsh_candidate_pairs(_docs(spark, sf)),
+            threshold=NEAR_DUP_T,
+        ),
+        "simhash_docs": lambda spark, sf: dd.simhash(_docs(spark, sf)),
+        "token_stats": lambda spark, sf: dt.token_stats(_docs(spark, sf)),
+        "lang_id": lambda spark, sf: dt.lang_id(_docs(spark, sf)),
+        "quality_score": lambda spark, sf: dt.quality_score(_docs(spark, sf)),
+        "fingerprint_docs": lambda spark, sf: dt.fingerprint(_docs(spark, sf)),
+        "embedding_topk": lambda spark, sf: ds.brute_force_topk(
+            _emb(spark, sf).filter(F.col("vec_id") < 8), _emb(spark, sf), k=TOPK_K, rnd=TOPK_RND
+        ),
+        "embedding_ivf_topk": lambda spark, sf: ds.ivf_topk(
+            _emb(spark, sf).filter(F.col("vec_id") < 8),
+            _emb(spark, sf),
+            k=TOPK_K,
+            nprobe=2,
+            rnd=TOPK_RND,
+        ),
+        "kmeans_cells": lambda spark, sf: ds.kmeans_assign(
+            _emb(spark, sf),
+            ds.kmeans_fit(_emb(spark, sf), k=KM_K, iters=KM_ITERS),
+        ).select(F.col("_pid").alias("vec_id"), "cell"),
+        "media_meta": lambda spark, sf: dm.text_as_media(_docs(spark, sf)).select(
+            "media_id",
+            F.col("meta.format").alias("format"),
+            F.col("meta.n_bytes").alias("n_bytes"),
+            F.col("meta.checksum").alias("checksum"),
+        ),
+    }
+
+
+def oracle_sql() -> dict[str, str]:
+    en_words = ", ".join(f"'{w}'" for w in dt.STOPWORDS["en"])
+    return {
+        # ---- whole-graph algorithms ----
+        "pagerank_g1": _pagerank_sql(G1_SQL, PR_ITERS, ALPHA),
+        "pagerank_bucketed_g1": _pagerank_sql(G1_SQL, PR_ITERS, ALPHA),
+        "wcc_g2": _wcc_sql(G2_SQL, WCC_ITERS),
+        "labelprop_g2": _lp_sql(G2_SQL, LP_ROUNDS),
+        "bfs_g2": _bfs_sql(G2_SQL, BFS_ROUNDS),
+        "bfs_parents_g2": _bfs_parents_sql(G2_SQL, BFS_ROUNDS),
+        "triangles_g2": (
+            f"WITH e AS ({G2_SQL}) "
+            "SELECT count(*)::BIGINT AS n_triangles FROM e e1 "
+            "JOIN e e2 ON e2.src = e1.dst JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst"
+        ),
+        "neighbourhood_fn_g1": _nf_sql(G1_SQL, NF_T),
+        "distance_stats_g1": _distance_stats_sql(G1_SQL, NF_T),
+        "scc_g3": _scc_sql(G3_SQL, SCC_T),
+        "scc_fwbw_g5": _scc_sql(G5_SQL, 8),
+        "scc_buckets_g3": _scc_buckets_sql(G3_SQL, SCC_T),
+        "harmonic_g2": _harmonic_sql(G2_SQL, HC_T),
+        # ---- HyperBall: the *_packed_* gates run the same engine as the
+        # two unpacked names and hash against the SAME register oracle ----
+        "hyperball_regs_g2": hyperball_registers_sql(G2_SQL, HB_T),
+        "hyperball_regs_m16_g2": hyperball_registers_sql(G2_SQL, HB_T, log2m=4),
+        "hyperball_regs_packed_g2": hyperball_registers_sql(G2_SQL, HB_T),
+        "hyperball_regs_packed_m256_g2": hyperball_registers_sql(G2_SQL, HB_T, log2m=8),
+        "hyperball_packed_nf_g2": hyperball_nf_sql(G2_SQL, HB_T),
+        "hyperball_centralities_g2": hyperball_centralities_sql(
+            G2_SQL, 4, full=True, discount_weights=[0.5**t for t in range(1, 5)]
+        ),
+        # ---- transforms ----
+        "transpose_g1": f"SELECT dst AS src, src AS dst FROM ({G1_SQL})",
+        "symmetrize_g2": (
+            f"WITH _e0 AS ({G2_SQL}) "
+            "SELECT src, dst FROM _e0 UNION SELECT dst AS src, src AS dst FROM _e0"
+        ),
+        "simplify_g2": (
+            f"WITH _e0 AS ({G2_SQL}), u AS "
+            "(SELECT src, dst FROM _e0 UNION SELECT dst AS src, src AS dst FROM _e0) "
+            "SELECT src, dst FROM u WHERE src <> dst"
+        ),
+        "compose_g2_g2": (
+            f"WITH e AS ({G2_SQL}) "
+            "SELECT DISTINCT a.src, b.dst FROM e a JOIN e b ON a.dst = b.src"
+        ),
+        "compose_minplus_g2": (
+            f"WITH e AS (SELECT src, dst, (dst - src)::BIGINT AS w FROM ({G2_SQL})) "
+            "SELECT a.src, b.dst, min(a.w + b.w)::BIGINT AS w FROM e a JOIN e b ON a.dst = b.src "
+            "GROUP BY a.src, b.dst"
+        ),
+        "filter_arcs_g2": (
+            f"SELECT src, dst FROM ({G2_SQL}) WHERE src % 2 = 0 AND dst - src <= 7"
+        ),
+        "quotient_nation_g1": (
+            f"WITH g AS ({G1_SQL}) "
+            "SELECT c.c_nationkey::BIGINT AS src, (100000 + s.s_nationkey)::BIGINT AS dst, "
+            "count(*)::BIGINT AS weight "
+            "FROM g JOIN customer c ON g.src = c.c_custkey "
+            "JOIN supplier s ON g.dst - 100000 = s.s_suppkey GROUP BY 1, 2"
+        ),
+        "subgraph_building_g1": (
+            f"WITH g AS ({G1_SQL}), "
+            "sub AS (SELECT c_custkey AS id FROM customer WHERE c_mktsegment = 'BUILDING' "
+            "UNION SELECT 100000 + s_suppkey FROM supplier), "
+            "remap AS (SELECT id, row_number() OVER (ORDER BY id) - 1 AS t FROM sub) "
+            "SELECT DISTINCT rs.t AS src, rd.t AS dst "
+            "FROM g JOIN remap rs ON g.src = rs.id JOIN remap rd ON g.dst = rd.id"
+        ),
+        "union_weighted_g1": (
+            f"WITH a AS ({_g1w_sql(0)}), b AS ({_g1w_sql(1)}), "
+            "u AS (SELECT * FROM a UNION ALL SELECT * FROM b) "
+            "SELECT src, dst, sum(w)::BIGINT AS w FROM u GROUP BY src, dst"
+        ),
+        "relabel_lex_g2": _perm_sql(G2_SQL, _lex_key_sql()),
+        "relabel_gray_g2": _perm_sql(G2_SQL, _gray_key_sql()),
+        "relabel_random_g2": _random_perm_sql(G2_SQL, 0),
+        # ---- storage, aggregations, stats, scalar kernels ----
+        "store_load_weighted_g1": _g1w_sql(0),
+        "typed_pairs_g1": _TYPED_PAIRS_SQL,
+        "degree_hist_g1": (
+            f"WITH g AS ({G1_SQL}), "
+            "nodes AS (SELECT DISTINCT id FROM (SELECT src AS id FROM g UNION ALL SELECT dst FROM g)), "
+            "deg AS (SELECT n.id, COALESCE(d.c, 0) AS deg FROM nodes n "
+            "LEFT JOIN (SELECT src, count(*) AS c FROM g GROUP BY src) d ON d.src = n.id) "
+            "SELECT deg::BIGINT AS deg, count(*)::BIGINT AS n_nodes FROM deg GROUP BY 1"
+        ),
+        "graph_stats_g1": (
+            f"WITH g AS ({G1_SQL}), "
+            "nodes AS (SELECT DISTINCT id FROM (SELECT src AS id FROM g UNION ALL SELECT dst FROM g)), "
+            "od AS (SELECT n.id, COALESCE(d.c, 0) AS d FROM nodes n "
+            "LEFT JOIN (SELECT src, count(*) AS c FROM g GROUP BY src) d ON d.src = n.id), "
+            "idg AS (SELECT n.id, COALESCE(d.c, 0) AS d FROM nodes n "
+            "LEFT JOIN (SELECT dst, count(*) AS c FROM g GROUP BY dst) d ON d.dst = n.id) "
+            "SELECT (SELECT count(*) FROM nodes)::BIGINT AS nodes, "
+            "(SELECT count(*) FROM g)::BIGINT AS arcs, "
+            "(SELECT count(*) FROM g WHERE src = dst)::BIGINT AS loops, "
+            "(SELECT count(*) FROM od WHERE d = 0)::BIGINT AS dangling, "
+            "(SELECT max(d) FROM od)::BIGINT AS max_outdeg, "
+            "(SELECT max(d) FROM idg)::BIGINT AS max_indeg"
+        ),
+        "typed_pack": (
+            "WITH u AS (SELECT c_custkey::BIGINT AS id, 0::BIGINT AS typ FROM customer "
+            "UNION ALL SELECT s_suppkey::BIGINT, 1::BIGINT FROM supplier) "
+            "SELECT id, typ, (typ * 281474976710656 + id)::BIGINT AS packed, "
+            "((typ * 281474976710656 + id) // 281474976710656)::BIGINT AS typ_check, "
+            "((typ * 281474976710656 + id) % 281474976710656)::BIGINT AS id_check FROM u"
+        ),
+        # ---- training-data pipeline ----
+        "dedup_exact": (
+            "SELECT md5(text) AS text_md5, count(*)::BIGINT AS n_copies, "
+            "min(doc_id) AS keeper FROM documents GROUP BY 1"
+        ),
+        "minhash_signatures": "WITH " + _sig_cte() + " SELECT * FROM sig",
+        "lsh_candidates": (
+            "WITH " + _sig_cte()
+            + f", cand AS (SELECT DISTINCT doc_a, doc_b FROM ({_lsh_pairs_sql_body()})) "
+            "SELECT doc_a, doc_b FROM cand"
+        ),
+        "near_dup_pairs": (
+            "WITH " + _sig_cte()
+            + f", cand AS MATERIALIZED (SELECT DISTINCT doc_a, doc_b FROM ({_lsh_pairs_sql_body()})), "
+            "sz AS MATERIALIZED (SELECT doc_id, count(*)::BIGINT AS sz FROM sh GROUP BY doc_id), "
+            "inter AS MATERIALIZED (SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS i FROM cand c "
+            "JOIN sh a ON a.doc_id = c.doc_a JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh "
+            "GROUP BY c.doc_a, c.doc_b) "
+            "SELECT c.doc_a, c.doc_b, "
+            "round(COALESCE(i.i, 0) / (sa.sz + sb.sz - COALESCE(i.i, 0)), 9) AS jaccard "
+            "FROM cand c LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b "
+            "JOIN sz sa ON sa.doc_id = c.doc_a JOIN sz sb ON sb.doc_id = c.doc_b "
+            f"WHERE round(COALESCE(i.i, 0) / (sa.sz + sb.sz - COALESCE(i.i, 0)), 9) >= {NEAR_DUP_T}"
+        ),
+        "simhash_docs": _simhash_sql(),
+        "token_stats": (
+            f"SELECT doc_id, len({_TOKS})::BIGINT AS n_tokens, "
+            f"len(list_distinct({_TOKS}))::BIGINT AS n_uniq_tokens, "
+            "length(text)::BIGINT AS n_chars FROM documents"
+        ),
+        "lang_id": _lang_id_sql(),
+        # empty docs score 0 on both engines
+        "quality_score": (
+            f"WITH f AS (SELECT doc_id, len({_TOKS})::DOUBLE AS n, "
+            f"len(list_filter({_TOKS}, x -> x IN ({en_words})))::DOUBLE AS stop, "
+            f"len(list_distinct({_TOKS}))::DOUBLE AS uniq FROM documents) "
+            "SELECT doc_id, CASE WHEN n = 0 THEN 0.0 ELSE "
+            "round(0.3 * least(n / 100.0, 1.0) + 0.4 * (stop / n) + 0.3 * (uniq / n), 9) "
+            "END AS quality FROM f"
+        ),
+        "fingerprint_docs": (
+            "SELECT doc_id, list_reduce(list_prepend(0::BIGINT, "
+            f"list_transform({_TOKS}, t -> {_h('t')})), "
+            f"(acc, x) -> (acc * {dt.FP_BASE} + x) % {dt.FP_MOD}) AS fp FROM documents"
+        ),
+        "embedding_topk": (
+            "WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 8), "
+            "c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings), "
+            f"sims AS (SELECT query_id, neighbor_id, {_COS} AS cos_sim "
+            "FROM q CROSS JOIN c WHERE query_id <> neighbor_id), "
+            "r AS (SELECT *, row_number() OVER (PARTITION BY query_id "
+            "ORDER BY cos_sim DESC, neighbor_id ASC) AS rank FROM sims) "
+            f"SELECT query_id, neighbor_id, cos_sim, rank::BIGINT AS rank FROM r WHERE rank <= {TOPK_K}"
+        ),
+        "embedding_ivf_topk": _ivf_kmeans_sql(KM_K, KM_ITERS, EMB_DIM, TOPK_K, 2),
+        "kmeans_cells": _kmeans_assign_sql(KM_K, KM_ITERS, EMB_DIM),
+        "media_meta": (
+            "SELECT doc_id AS media_id, 'text/plain' AS format, "
+            "octet_length(encode(text))::BIGINT AS n_bytes, md5(text) AS checksum FROM documents"
+        ),
+    }

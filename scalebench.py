@@ -176,8 +176,8 @@ def main() -> None:
 
     runs = arg("--runs", 2)
     # the N / 4N pair: default local[8] vs local[32]; --lo 2 --hi 8 keeps
-    # both legs under the hypervisor's granted-core ceiling (cpuprobe has
-    # measured ~21-28/32 effective cores → a 32-thread leg can be
+    # both legs under the hypervisor's granted-core ceiling (windowprobe
+    # has measured ~21-28/32 effective cores → a 32-thread leg can be
     # capacity-capped no matter how well the software scales)
     lo, hi = arg("--lo", 8), arg("--hi", 32)
     assert hi == 4 * lo, "the rule's criterion is N vs 4N"

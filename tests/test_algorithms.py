@@ -139,3 +139,25 @@ def test_degree_histogram_and_stats(spark):
     assert s["nodes"] == 20 and s["arcs"] == 38
     assert s["max_outdegree"] == 19 and s["argmax_outdegree"] == 0
     assert s["dangling"] == 0 and s["loops"] == 0
+
+
+def test_graph_stats_releases_caches_on_failure(spark, monkeypatch):
+    """An action failing midway through graph_stats (its third
+    ``first()``) still releases both caches it made."""
+    edges, n = FAMILIES["star"]
+    g = _g(spark, edges, n)
+    spark.catalog.clearCache()  # only this call's caches are under test
+    cls = type(g.edges)
+    original = cls.first
+    calls = []
+
+    def failing(self):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected failure")
+        return original(self)
+
+    monkeypatch.setattr(cls, "first", failing)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        graph_stats(g)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

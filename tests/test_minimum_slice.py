@@ -32,6 +32,21 @@ def test_extraction_reproduces_graph(spark, fixture_graph):
     assert g.num_nodes() == n
 
 
+def test_build_graph_leaves_no_cache(spark, fixture_graph):
+    """The id map is pinned by a checkpoint, not a session cache entry
+    that outlives the call; the graph and its node count are unchanged."""
+    edges, n = fixture_graph
+    repos = synth.repos_table(spark, edges, n)
+    spark.catalog.clearCache()  # only this call's caches are under test
+    g, id_map = build_graph(repos)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert g.num_nodes() == n
+    assert {r["id"] for r in id_map.collect()} == set(range(n))
+    assert {(r["src"], r["dst"]) for r in g.edges.collect()} == {
+        (int(s), int(d)) for s, d in edges
+    }
+
+
 def test_sha256_ingest_invariant(spark, fixture_graph):
     edges, n = fixture_graph
     pdf = synth.repos_pdf(edges, n)

@@ -1,10 +1,8 @@
 """Round 5: FW-BW SCC durable checkpoints + hoisted edge pins,
-sort_by_size without a single-task global window, streaming legacy
-manifest adoption, discount-weight validation."""
+sort_by_size without a single-task global window, discount-weight
+validation."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -101,59 +99,6 @@ def test_sort_by_size_no_single_partition_exchange(spark):
     assert got == {1: 0, 2: 0, 3: 0, 4: 1, 5: 1, 6: 2, 8: 2, 0: 3}
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
-
-
-# ---------------------------------------------------------------------------
-# streaming: legacy manifest adoption
-# ---------------------------------------------------------------------------
-
-
-def test_legacy_manifest_without_checkpoint_id_requires_rebind(spark, tmp_path):
-    """A NON-EMPTY state table written before checkpoint lineage was
-    recorded (no checkpoint_id key) must NOT be adopted silently: the
-    manifest cannot prove which checkpoint its last_batch_id belongs to,
-    and under a fresh checkpoint (batch ids restart at 0) the replay
-    guard would drop the first legitimate batches (round-5 ADVICE —
-    supersedes the round-5 behavior this test used to pin).  The
-    deliberate path is rebind_state_checkpoint."""
-    import webgraph_big_spark.streaming as st
-
-    state = str(tmp_path / "legacy_state")
-    ck = os.path.abspath(str(tmp_path / "ck"))
-    b0 = spark.createDataFrame([(0, 1)], "src long, dst long")
-    st._merge_degree_batch(b0, 0, state, ck, n_buckets=2)
-    # simulate the pre-lineage manifest format
-    manifest = st._read_manifest(state)
-    del manifest["checkpoint_id"]
-    st._write_manifest(state, manifest)
-    # next delivery — even from the same checkpoint path — fails loudly:
-    # the manifest cannot prove the lineage matches
-    b1 = spark.createDataFrame([(0, 2)], "src long, dst long")
-    with pytest.raises(RuntimeError, match="rebind_state_checkpoint"):
-        st._merge_degree_batch(b1, 1, state, ck, n_buckets=2)
-    # state untouched by the refused batch
-    got = {r["id"]: (r["outdeg"], r["indeg"])
-           for r in st.read_degree_state(spark, state).collect()}
-    assert got == {0: (1, 0), 1: (0, 1)}
-    # deliberate adoption, then the delivery applies
-    st.rebind_state_checkpoint(state, ck)
-    st._merge_degree_batch(b1, 1, state, ck, n_buckets=2)
-    manifest = st._read_manifest(state)
-    assert manifest["checkpoint_id"] == ck
-    assert manifest["last_batch_id"] == 1
-    got = {r["id"]: (r["outdeg"], r["indeg"])
-           for r in st.read_degree_state(spark, state).collect()}
-    assert got == {0: (2, 0), 1: (0, 1), 2: (0, 1)}
-    # replay of batch 1 is a no-op under the rebound lineage
-    st._merge_degree_batch(b1, 1, state, ck, n_buckets=2)
-    got2 = {r["id"]: (r["outdeg"], r["indeg"])
-            for r in st.read_degree_state(spark, state).collect()}
-    assert got2 == got
-    # a DIFFERENT checkpoint still fails loudly
-    with pytest.raises(RuntimeError, match="refusing to apply"):
-        st._merge_degree_batch(
-            b1, 0, state, os.path.abspath(str(tmp_path / "other_ck")), n_buckets=2
-        )
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,10 @@ neither."""
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
+from pathlib import Path
 
 import __spark_entry__ as entry
 
@@ -22,3 +24,18 @@ def test_query_and_oracle_registries_agree():
 def test_oracle_sql_text_unchanged():
     text = json.dumps(entry.oracle_sql(), sort_keys=True)
     assert hashlib.sha256(text.encode()).hexdigest() == ORACLE_SQL_SHA256
+
+
+def test_one_registry_and_imports_on_top():
+    """``queries`` and ``oracle_sql`` are each defined once, and every
+    top-level import precedes the first top-level function."""
+    tree = ast.parse(Path(entry.__file__).read_text())
+    defs = [n.name for n in tree.body if isinstance(n, ast.FunctionDef)]
+    assert defs.count("queries") == 1 and defs.count("oracle_sql") == 1
+    first_def = next(i for i, n in enumerate(tree.body) if isinstance(n, ast.FunctionDef))
+    late = [
+        n.lineno
+        for n in tree.body[first_def:]
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+    ]
+    assert late == []

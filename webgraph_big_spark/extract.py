@@ -20,7 +20,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 from pyspark.sql.window import Window
 
 from webgraph_big_spark.graph import Graph
@@ -132,9 +132,18 @@ def build_graph(repos: DataFrame) -> tuple[Graph, DataFrame]:
     dense-id join on both endpoints → dedup.  The ``.ids`` inverse file of
     the reference (``ScatteredArcsASCIIGraph.java:148-153``) is the
     returned ``id_map``.
+
+    The id map is an eager ``localCheckpoint`` (its row count observed by
+    that same job), so both endpoint joins and the returned map read one
+    fixed numbering and no session cache entry is left behind.
     """
     defs = file_symbols(repos)
-    id_map = assign_dense_ids(defs.select("symbol").distinct()).cache()
+    sized = Observation()
+    id_map = (
+        assign_dense_ids(defs.select("symbol").distinct())
+        .observe(sized, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     refs = extract_references(repos)
     edges = (
         refs.join(
@@ -148,5 +157,4 @@ def build_graph(repos: DataFrame) -> tuple[Graph, DataFrame]:
         .select("src", "dst")
         .distinct()
     )
-    n = id_map.count()
-    return Graph(edges, num_nodes=n), id_map
+    return Graph(edges, num_nodes=sized.get["n"]), id_map

@@ -185,13 +185,6 @@ def global_cumsum(
     )
 
 
-def url_host(url: Column) -> Column:
-    """URL → host — the ``BuildHostMap`` key (``BuildHostMap.java:75-96``).
-    ``parse_url`` is JVM-side; for the top-private-domain variant see
-    :func:`top_private_domain`."""
-    return F.parse_url(url, F.lit("HOST"))
-
-
 # A small built-in public-suffix list (the reference's topPrivateDomain
 # mode relies on Guava's bundled copy of publicsuffix.org,
 # BuildHostMap.java:87-96).  Production deployments pass the full list.

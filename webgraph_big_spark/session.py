@@ -12,6 +12,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_driver_memory() -> str:
+    """Half the host's physical memory, at most 32g: a driver heap the
+    JVM can reach without being OOM-killed, so it collects garbage
+    instead."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{min(kb // 2048, 32 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "webgraph_big_spark",
     cpus: int | None = None,
@@ -20,12 +29,14 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else 32.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else the
+    cores this process may run on; the driver heap to
+    ``$SPARK_DRIVER_MEMORY`` else half the host's memory, at most 32g.
     ``shuffle_partitions`` defaults to ``cpus`` — on a real cluster this
     would be ~2-3x total cores; AQE coalesces down at runtime either way.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 
@@ -60,7 +71,7 @@ def get_spark(
         .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

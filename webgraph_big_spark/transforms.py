@@ -34,41 +34,6 @@ def no_loops(g: Graph) -> Graph:
     return filter_arcs(g, F.col("src") != F.col("dst"))
 
 
-def node_class_filter(g: Graph, classes: DataFrame, same_class: bool = True) -> Graph:
-    """Keep arcs within (or across) node classes.
-
-    ``Transform.NodeClassFilter`` (``Transform.java:154-194``): ``classes``
-    is a (id, cls) DataFrame (the side file), broadcast-joined on both
-    endpoints — small-dimension broadcast, no shuffle of the edge table.
-    """
-    c_src = F.broadcast(classes.select(F.col("id").alias("src"), F.col("cls").alias("_cls_src")))
-    c_dst = F.broadcast(classes.select(F.col("id").alias("dst"), F.col("cls").alias("_cls_dst")))
-    joined = g.edges.join(c_src, "src").join(c_dst, "dst")
-    cond = F.col("_cls_src") == F.col("_cls_dst")
-    if not same_class:
-        cond = ~cond
-    return Graph(joined.filter(cond).select(g.edges.columns), g._num_nodes, dense=g.dense)
-
-
-def label_lower_bound(g: Graph, label_col: str, bound) -> Graph:
-    """Keep arcs with label ≥ bound — ``Transform.LowerBound``
-    (``Transform.java:197-215``)."""
-    return filter_arcs(g, F.col(label_col) >= F.lit(bound))
-
-
-def label_in(g: Graph, label_col: str, values: list) -> Graph:
-    """Keep arcs whose label is in a value set —
-    ``labelling/IntegerLabelFilter.java:23``."""
-    return filter_arcs(g, F.col(label_col).isin(values))
-
-
-def drop_labels(g: Graph) -> Graph:
-    """Project a labelled graph to its underlying graph
-    (``ArcLabelledImmutableGraph`` *is a* ``ImmutableGraph``,
-    ``labelling/ArcLabelledImmutableGraph.java:69``)."""
-    return Graph(g.edges.select("src", "dst"), g._num_nodes, dense=g.dense)
-
-
 def relabel_arc_labels(g: Graph, conversions: dict) -> Graph:
     """Label-type conversion view —
     ``labelling/ArcRelabelledImmutableGraph.java`` (wraps a labelled
