@@ -28,6 +28,7 @@ each gate name maps to a Spark query and to its DuckDB oracle.
 from __future__ import annotations
 
 import math
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -322,9 +323,15 @@ def _store_load_weighted(spark: SparkSession, sf: str) -> DataFrame:
     arcs — the ``BVGraph.storeLabelled`` gate (identity oracle)."""
     g = load_g1_weighted(spark, sf, 0)
     base = tempfile.mkdtemp(prefix="wbs_store_gate_")
-    g.store(base, buckets=8)
-    loaded = Graph.load(spark, base)
-    return loaded.edges.select("src", "dst", F.col("w").cast("long").alias("w"))
+    try:
+        g.store(base, buckets=8)
+        loaded = Graph.load(spark, base)
+        # materialized before the stored copy is removed
+        return loaded.edges.select(
+            "src", "dst", F.col("w").cast("long").alias("w")
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _relabel_g2(spark: SparkSession, sf: str, which: str) -> DataFrame:
@@ -346,15 +353,19 @@ def _typed_pairs(spark: SparkSession, sf: str) -> DataFrame:
         F.when(F.col("id") < 100000, 0).otherwise(1).cast("int").alias("type"),
     )
     base = tempfile.mkdtemp(prefix="wbs_typed_gate_")
-    ty.convert_to_typed(g, nt, base)
-    arcs = spark.read.parquet(base + "/arcs")
-    return arcs.groupBy(
-        F.col("src_type").cast("long").alias("src_type"),
-        F.col("dst_type").cast("long").alias("dst_type"),
-    ).agg(
-        F.count("*").alias("arcs"),
-        F.sum(F.col("dst_tid").cast("double")).alias("sum_tdst"),
-    )
+    try:
+        ty.convert_to_typed(g, nt, base)
+        arcs = spark.read.parquet(base + "/arcs")
+        # materialized before the stored copy is removed
+        return arcs.groupBy(
+            F.col("src_type").cast("long").alias("src_type"),
+            F.col("dst_type").cast("long").alias("dst_type"),
+        ).agg(
+            F.count("*").alias("arcs"),
+            F.sum(F.col("dst_tid").cast("double")).alias("sum_tdst"),
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,9 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+Without ``$SPARK_GRAFT_CPUS`` it uses ``get_spark``'s default: the cores
+this process may run on.
+
 Headline metric (BASELINE.md): PageRank throughput in edges/sec per
 iteration on the purchase graph + total convergence wall-time, plus the
 rest of the suite timed individually.
@@ -22,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     from pyspark.sql import functions as F
@@ -37,7 +39,8 @@ def main() -> None:
     from webgraph_big_spark.algorithms.hyperball import hyperball
     from webgraph_big_spark import transforms as tr
 
-    spark = get_spark("wbs-bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("wbs-bench", cpus=None)
+    cpus = spark.sparkContext.defaultParallelism
 
     queries: dict[str, float] = {}
     extra: dict[str, float] = {}

@@ -182,14 +182,15 @@ def test_star_resumes_after_kill(spark, tmp_path, monkeypatch):
 
 
 def test_hashmin_jobs_per_round(spark):
-    """Three more hash-min rounds (a chain three nodes longer) cost 15
-    Spark jobs: each round is one checkpoint action run as 5 jobs, and
+    """Three more hash-min rounds (a chain three nodes longer) cost 12
+    Spark jobs: each round is one checkpoint action run as 4 jobs, and
     the count that ends the loop is observed on it.  Before, a separate
-    join-and-count probe made it 27 (9 per round)."""
+    join-and-count probe made it 27 (9 per round), and a sort-merge
+    state join 15 (5 per round)."""
 
     def run(n):
         g = _g(spark, [(i, i + 1) for i in range(n - 1)], n)
         g.num_arcs()
         return _jobs(spark, f"hashmin_chain_{n}", lambda: connected_components(g).collect())
 
-    assert run(13) - run(10) == 15
+    assert run(13) - run(10) == 12

@@ -17,6 +17,7 @@ from webgraph_big_spark.algorithms.components import (
 from webgraph_big_spark.algorithms.hyperball import hyperball
 from webgraph_big_spark.algorithms.labelprop import label_propagation
 from webgraph_big_spark.algorithms.pagerank import pagerank
+from webgraph_big_spark.algorithms.scc import strongly_connected_components_fwbw
 from webgraph_big_spark.algorithms.triangles import node_triangles, triangle_edges
 from webgraph_big_spark.graph import (
     Graph,
@@ -97,6 +98,11 @@ def test_loops_run_no_emptiness_probe(spark, monkeypatch):
     assert [t for t, _ in conv] == list(range(7))
     assert conv == bounded[:7]
 
+    # FW-BW: a pivot round resolves {0, 1, 2}, a colouring round {3, 4, 5}
+    cycles = Graph.from_pairs(spark, [(i, i + 1) for i in range(5)] + [(2, 0), (5, 3)])
+    got = {r["id"]: r["comp"] for r in strongly_connected_components_fwbw(cycles).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3}
+
 
 def test_bfs_jobs_per_level(spark):
     """Three more BFS levels cost 12 Spark jobs: each level is one
@@ -120,7 +126,15 @@ CACHED_RUNS = {
     "connected_components": lambda g: connected_components(g),
     "label_propagation": lambda g: label_propagation(g, rounds=4),
     "connected_components_star": lambda g: connected_components_star(g),
+    "hyperball": lambda g: hyperball(g, None),
+    # the chain with every arc both ways is one SCC: coloring resolves it
+    "scc_fwbw": lambda g: strongly_connected_components_fwbw(
+        Graph(g.edges.union(g.edges.select("dst", "src")), num_nodes=8), giant_pivots=0
+    ),
 }
+# the checkpoint that raises: the third, or for FW-BW one inside its
+# coloring loop, while both edge pins are held
+FAIL_AT = {"scc_fwbw": 7}
 
 
 @pytest.mark.parametrize("algo", sorted(CACHED_RUNS))
@@ -136,7 +150,7 @@ def test_caches_released_when_loop_raises(spark, monkeypatch, algo):
 
     def failing(self, *args, **kwargs):
         calls.append(1)
-        if len(calls) == 3:
+        if len(calls) == FAIL_AT.get(algo, 3):
             raise RuntimeError("injected failure")
         return original(self, *args, **kwargs)
 

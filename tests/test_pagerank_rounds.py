@@ -118,16 +118,18 @@ def test_pagerank_tol_on_random_graph(spark, tmp_path):
     np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-15)
 
 
-@pytest.mark.parametrize("rounds,every", [(7, 3), (6, 3)])
+@pytest.mark.parametrize("rounds,every", [(7, 3), (6, 3), (7, 1)])
 def test_pagerank_resume_after_checkpoints(spark, tmp_path, rounds, every):
     """Resume from the last checkpoint whether or not ``every`` divides
-    the round count; a dividing count writes its last round once."""
+    the round count; a dividing count writes its last round once, and
+    only the newest three complete checkpoints are kept."""
     edges = synth.erdos_renyi(30, 0.15, seed=4)
     g = _g(spark, edges, 30)
     run_dir = str(tmp_path / "pr")
     pagerank(g, fixed_iterations=rounds, run_dir=run_dir, checkpoint_every=every)
     written = sorted(_manifests(run_dir))
-    assert written == sorted(set(range(every, rounds + 1, every)) | {rounds})
+    assert written == sorted(set(range(every, rounds + 1, every)) | {rounds})[-3:]
+    assert len([d for d in os.listdir(run_dir) if d.startswith("iter_")]) == len(written)
     assert IterativeRunner(spark, run_dir=run_dir).latest_checkpoint() == rounds
     got = _ranks(pagerank(g, fixed_iterations=rounds + 4, run_dir=run_dir, checkpoint_every=every), 30)
     np.testing.assert_allclose(

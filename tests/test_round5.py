@@ -9,10 +9,8 @@ from pyspark.sql import functions as F
 
 from webgraph_big_spark.graph import Graph
 from webgraph_big_spark.algorithms.components import sort_by_size
-from webgraph_big_spark.algorithms.scc import (
-    _fwbw_latest,
-    strongly_connected_components_fwbw,
-)
+from webgraph_big_spark.algorithms.scc import strongly_connected_components_fwbw
+from webgraph_big_spark.checkpoint import IterativeRunner
 
 
 def _g(spark, edges):
@@ -41,7 +39,7 @@ def test_fwbw_checkpoint_roundtrip(spark, tmp_path):
         ).collect()
     }
     assert got == CHAINED_EXPECTED
-    assert _fwbw_latest(run_dir) is not None
+    assert IterativeRunner(spark, run_dir=run_dir).latest_checkpoint() is not None
 
 
 def test_fwbw_resumes_from_interrupted_run(spark, tmp_path):
@@ -54,7 +52,8 @@ def test_fwbw_resumes_from_interrupted_run(spark, tmp_path):
         strongly_connected_components_fwbw(
             g, giant_pivots=0, max_outer=1, run_dir=run_dir
         )
-    assert _fwbw_latest(run_dir) == 0  # round 0 committed before the kill
+    # round 0 committed before the kill (the runner counts rounds from 1)
+    assert IterativeRunner(spark, run_dir=run_dir).latest_checkpoint() == 1
     phases = []
     got = {
         r["id"]: r["comp"]

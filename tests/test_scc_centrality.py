@@ -43,6 +43,9 @@ def test_trim_removes_dag_fringe(spark):
     edges, n = CASES["dag"]
     trimmed = trim(_g(spark, edges, n), rounds=4)
     assert trimmed.edges.isEmpty()  # a tree has no 2-cycles at all
+    # zero rounds return the edges unchanged
+    kept = trim(_g(spark, edges, n), rounds=0).edges.collect()
+    assert sorted(map(tuple, kept)) == sorted((int(s), int(d)) for s, d in edges)
 
 
 def test_harmonic_vs_oracle(spark):

@@ -33,7 +33,9 @@ function of cnr-2000 that the reference embeds in
 diameter at alpha=.9 within ±1 of the true value; that test runs
 HyperBall at log2m=8, so pass ``--hb-log2m 8`` to reproduce it);
 --scc-run-dir makes the FW-BW outer loop durably checkpointed/resumable,
-so a host-window kill costs at most one outer round)
+so a host-window kill costs at most one outer round; the directory holds
+the loop driver's iter_* checkpoints, the newest 3 kept, and runs.jsonl
+with one record per outer round — an older outer_* layout is not read)
 """
 
 from __future__ import annotations

@@ -27,7 +27,10 @@ sys.path.insert(0, REPO)
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int, default=None,
+        help="local[N] cores (default: $SPARK_GRAFT_CPUS, else the cores this process may run on)",
+    )
     ap.add_argument(
         "--graph", default="g2", choices=["g1", "g2", "cnr2000"],
         help="cnr2000 = the reference's golden web graph (its published "

@@ -36,7 +36,10 @@ REPEAT = 10
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cpus", type=int, default=None,
+        help="local[N] cores (default: $SPARK_GRAFT_CPUS, else the cores this process may run on)",
+    )
     ap.add_argument("--random", type=int, default=1000)
     args = ap.parse_args()
 

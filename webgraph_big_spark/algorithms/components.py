@@ -12,7 +12,8 @@ Two implementations:
 
 - ``connected_components`` (hash-min): comp ← min(comp, min over
   neighbours comp) each round; converges in O(diameter) rounds.  One
-  join + one groupBy-min + one state join per round; the count of
+  join + one groupBy-min + one state join per round
+  (:func:`label_round`, shared with SCC colouring); the count of
   lowered labels that ends the loop is observed on the round's own
   checkpoint job.
 - ``connected_components_star`` (Stergiou-style large-star/small-star,
@@ -36,6 +37,41 @@ from webgraph_big_spark.graph import Graph, co_partitioned
 
 # rounds between durable checkpoints of connected_components_star's run_dir
 STAR_CHECKPOINT_EVERY = 8
+
+
+def label_round(
+    edges: DataFrame, state: DataFrame, label: str, lowest: bool
+) -> tuple[DataFrame, Observation]:
+    """One round of label propagation along ``edges(src, dst)`` pinned by
+    ``src`` (:func:`~webgraph_big_spark.graph.co_partitioned`): every
+    ``state(id, <label>)`` row takes the least (``lowest``) or greatest
+    of its own label and its in-neighbours' labels.  Returns the round's
+    plan and an Observation whose ``n`` counts the labels it changed,
+    filled by the job that materializes the plan (the runner's
+    checkpoint), so the exit test costs no job.  Hash-min WCC and SCC
+    colouring both run on it."""
+    pick, better, keep = (
+        (F.min, F.col("nbr") < F.col(label), F.least)
+        if lowest
+        else (F.max, F.col("nbr") > F.col(label), F.greatest)
+    )
+    # shuffle_hash on the state side: post-checkpoint state has no stats
+    # → without the hint Catalyst plans SMJ and re-Exchanges the pinned
+    # edge table every round
+    msgs = (
+        edges.join(
+            state.select(F.col("id").alias("src"), label).hint("shuffle_hash"), "src"
+        )
+        .groupBy(F.col("dst").alias("id"))
+        .agg(pick(label).alias("nbr"))
+    )
+    moved = Observation()
+    new_state = (
+        state.join(msgs.hint("shuffle_hash"), "id", "left")
+        .observe(moved, F.count_if(better).alias("n"))
+        .select("id", keep(label, F.coalesce("nbr", label)).alias(label))
+    )
+    return new_state, moved
 
 
 def connected_components(
@@ -85,25 +121,7 @@ def connected_components(
 
     def step(state: DataFrame, it: int):
         nonlocal moved
-        # shuffle_hash on the state side: post-checkpoint state has no
-        # stats → without the hint Catalyst plans SMJ and re-Exchanges
-        # the cached edge table every round
-        msgs = (
-            edges.join(
-                state.select(F.col("id").alias("src"), "comp").hint("shuffle_hash"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr_min"))
-        )
-        # rows this round lowers, counted by the round's own checkpoint
-        # job (a null nbr_min is no change)
-        moved = Observation()
-        new_state = (
-            state.join(msgs, "id", "left")
-            .observe(moved, F.count_if(F.col("nbr_min") < F.col("comp")).alias("n"))
-            .select("id", F.least("comp", F.coalesce("nbr_min", "comp")).alias("comp"))
-        )
+        new_state, moved = label_round(edges, state, "comp", lowest=True)
         if fixed_iterations is not None:
             return new_state, (None if it + 1 < fixed_iterations else 0)
         return new_state, None

@@ -51,10 +51,12 @@ from __future__ import annotations
 
 import functools
 import math
+import sys
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from webgraph_big_spark.checkpoint import IterativeRunner
 from webgraph_big_spark.functions import stable_long_hash
 from webgraph_big_spark.graph import Graph, co_partitioned
 from webgraph_big_spark.transforms import BidirectionalGraph
@@ -314,61 +316,71 @@ def _packed_init(g: Graph, log2m: int) -> DataFrame:
 
 
 def _packed_loop(g: Graph, t_max: int | None, log2m: int, on_round=None):
-    """Systolic driver over sparse (id, slot, packed) rows.  Returns the
-    final state.  Hot path: two joins + one (id, slot) groupBy with
-    8 algebraic max aggregates — all codegen'd, O(1) plan width in m.
-    ``on_round(t, state)`` is called after each merge; the loop ends
-    when no packed word changed or t_max is hit."""
+    """Systolic driver over sparse (id, slot, packed) rows, run on
+    ``IterativeRunner``.  Returns the final state.  Hot path: two joins
+    + one (id, slot) groupBy with 8 algebraic max aggregates — all
+    codegen'd, O(1) plan width in m.  ``on_round(t, state)`` is called
+    after each merge; the loop ends when no packed word changed or
+    t_max is hit (``None`` runs to that fixpoint, which always comes:
+    registers only grow and are bounded)."""
     # no ``distinct()`` before the pin: the field-wise max merge is
     # idempotent, duplicate arcs cannot change any register (guide §2.4)
     edges = co_partitioned(g.edges.select("src", "dst"), "dst")
+    max_aggs = [F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)]
+    differs = F.col("packed") != F.col("old_packed")
+    moved = None  # the latest round's observed changed-word count
+
+    def initial() -> DataFrame:
+        # round 0: every row is new (a packed word is never 0: rho ≥ 1)
+        return _packed_init(g, log2m).select(
+            "id", "slot", F.lit(0).cast("long").alias("old_packed"), "packed"
+        )
+
+    def step(state: DataFrame, t: int):
+        nonlocal moved
+        changed = state.filter(differs)
+        # regs travel dst→src (x absorbs its successors' balls); the
+        # groupBy-max gets partial aggregation, so hub fan-in
+        # collapses map-side
+        msgs = (
+            edges.join(
+                changed.select(F.col("id").alias("dst"), "slot", "packed").hint("shuffle_hash"),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("id"), "slot")
+            .agg(*max_aggs)
+            .selectExpr(
+                "id",
+                "slot",
+                f"{_repack([f'_f{j}' for j in range(K)])} AS mpacked",
+            )
+        )
+        # the changed-word count rides on the checkpoint job: the
+        # fixpoint test costs no job of its own
+        moved = Observation()
+        merged = (
+            state.select("id", "slot", "packed")
+            .join(msgs.hint("shuffle_hash"), ["id", "slot"], "full")
+            .selectExpr(
+                "id",
+                "slot",
+                "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
+                f"{_greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed",
+            )
+            .observe(moved, F.count_if(differs).alias("n"))
+        )
+        return merged, None
+
+    def check(old: DataFrame, new: DataFrame, t: int) -> int:
+        if on_round is not None:
+            on_round(t + 1, new.select("id", "slot", "packed"))
+        return moved.get["n"]
+
+    runner = IterativeRunner(
+        g.edges.sparkSession, max_iterations=sys.maxsize if t_max is None else t_max
+    )
     try:
-        state = _packed_init(g, log2m).localCheckpoint(eager=True)
-        changed = state  # round 0: every row is new
-        t = 0
-        max_aggs = [
-            F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)
-        ]
-        while t_max is None or t < t_max:
-            t += 1
-            # regs travel dst→src (x absorbs its successors' balls); the
-            # groupBy-max gets partial aggregation, so hub fan-in
-            # collapses map-side
-            msgs = (
-                edges.join(
-                    changed.withColumnRenamed("id", "dst").hint("shuffle_hash"),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("id"), "slot")
-                .agg(*max_aggs)
-                .selectExpr(
-                    "id",
-                    "slot",
-                    f"{_repack([f'_f{j}' for j in range(K)])} AS mpacked",
-                )
-            )
-            # the changed-word count rides on the checkpoint job: the
-            # fixpoint test costs no job of its own
-            moved = Observation()
-            differs = F.col("packed") != F.col("old_packed")
-            merged = (
-                state.join(msgs.hint("shuffle_hash"), ["id", "slot"], "full")
-                .selectExpr(
-                    "id",
-                    "slot",
-                    "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
-                    f"{_greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed",
-                )
-                .observe(moved, F.count_if(differs).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            changed = merged.filter(differs).select("id", "slot", "packed")
-            state = merged.select("id", "slot", "packed")
-            if on_round is not None:
-                on_round(t, state)
-            if moved.get["n"] == 0:
-                break
-        return state
+        return runner.run(initial, step, check=check).state.select("id", "slot", "packed")
     finally:
         edges.unpersist()
 

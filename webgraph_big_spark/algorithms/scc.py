@@ -10,22 +10,26 @@ whenever t ≥ the graph's diameter.
 Scale notes: closure pairs are O(Σ|ball|) — fine on sparse/banded
 graphs and on pruned subgraphs, quadratic on dense cores.  For web-scale
 SCC the standard trick composes this with trimming (degree-0 peeling)
-and the giant-SCC FW-BW split from one pivot; ``trim`` implements the
+and the giant-SCC FW-BW split from one pivot; ``trim`` exposes the
 peeling.  The reference's "buckets" (terminal non-dangling components,
 ``StronglyConnectedComponents``) derive from the same labels + the
 quotient DAG.
+
+:func:`strongly_connected_components_fwbw` runs its outer rounds, and
+its coloring, on ``IterativeRunner``; its ``run_dir`` is the runner's
+(``iter_*`` checkpoints of the ``(id, comp)`` state and ``runs.jsonl``
+with one record per outer round).  ``outer_*`` directories of the
+earlier layout are not read, so a run over one starts fresh.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from webgraph_big_spark.algorithms.components import label_round
+from webgraph_big_spark.checkpoint import IterativeRunner
 from webgraph_big_spark.graph import (
     Graph,
     broadcast_threshold,
@@ -95,31 +99,40 @@ def _reach(seeds: DataFrame, forward: bool, pinned: DataFrame) -> DataFrame:
     return frontier_reach(seeds.select("id").distinct(), expand)
 
 
-def _peel_trivial(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_rounds: int = 64,
-    broadcast_core: bool = False,
-):
+def _between(edges: DataFrame, ids: DataFrame, how: str) -> DataFrame:
+    """The arcs of ``edges`` kept (``left_semi``) or dropped
+    (``left_anti``) by both endpoints' membership in ``ids(id)``."""
+    return (
+        edges.join(ids.select(F.col("id").alias("src")), "src", how)
+        .join(ids.select(F.col("id").alias("dst")), "dst", how)
+        .select("src", "dst")
+    )
+
+
+def _peel_trivial(edges: DataFrame, max_rounds: int = 64):
     """Iteratively peel nodes with in- or out-degree 0 inside the current
-    node set — each is a singleton SCC.  Returns (remaining_edges,
-    remaining_nodes, peeled_nodes).
+    arc set — each is a singleton SCC.  Returns ``(remaining_edges,
+    core, seen)``: ``core(id)`` holds the nodes left, and ``seen`` the
+    core's size ``n`` and least id ``lo`` plus the remaining arc count
+    ``arcs``, all observed on the checkpoint jobs that build them (no
+    job of their own).  With ``max_rounds=0`` the edges come back
+    unchanged and ``core`` and ``seen`` are None.
 
     The per-round peeled set is never needed individually (every peeled
     node gets ``comp = id``), so the loop tracks ONLY the shrinking
     ``core`` (endpoints with both degrees, ONE flag-max aggregation —
     not two distincts + a join) and edge set.  ``core`` shrinks
     monotonically, so an unchanged COUNT means an unchanged set — the
-    fixpoint test costs a cached count, the final round skips its
+    fixpoint test reads an observed count, the final round skips its
     identity semi-join entirely, and the fixpoint core IS the remaining
-    node set (no separate end-of-loop aggregation).  ``core`` is
-    checkpointed so the two semi joins share one computation, and
-    broadcast when the caller certifies the node set fits
-    (``broadcast_core``) — the edge table then never shuffles during
-    peeling."""
-    prev_core_cnt = None
-    core = None
+    node set.  ``core`` is checkpointed so the two semi joins share one
+    computation, and broadcast when its observed size fits the
+    session's broadcast threshold (the rule pagerank applies to its
+    rank side) — the edge table then never shuffles during peeling."""
+    limit = broadcast_threshold(edges.sparkSession)
+    core = seen = None
     for _ in range(max_rounds):
+        size = Observation()
         core = (
             edges.select(F.col("src").alias("id"), F.lit(1).alias("_o"), F.lit(0).alias("_i"))
             .unionAll(edges.select(F.col("dst").alias("id"), F.lit(0).alias("_o"), F.lit(1).alias("_i")))
@@ -127,74 +140,22 @@ def _peel_trivial(
             .agg(F.max("_o").alias("_o"), F.max("_i").alias("_i"))
             .filter((F.col("_o") == 1) & (F.col("_i") == 1))
             .select("id")
+            .observe(size, F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"))
             .localCheckpoint(eager=True)
         )
-        cnt = core.count()
-        if cnt == prev_core_cnt:
+        if seen is not None and size.get["n"] == seen["n"]:
             # core ⊆ previous core (edges only shrink): same count ⇔
             # same set ⇔ the semi join below would be the identity
             break
-        prev_core_cnt = cnt
-        core_side = F.broadcast(core) if broadcast_core else core
+        seen = dict(size.get)
+        arcs = Observation()
         edges = (
-            edges.join(core_side.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(core_side.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
+            _between(edges, F.broadcast(core) if 0 < seen["n"] * 32 <= limit else core, "left_semi")
+            .observe(arcs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-    peeled = nodes.join(core, "id", "left_anti").localCheckpoint(eager=True)
-    return edges, core, peeled
-
-
-def _fwbw_checkpoint(
-    run_dir: str, outer: int, done: DataFrame, nodes: DataFrame, edges: DataFrame,
-    keep_last: int = 3,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Durably checkpoint the FW-BW outer-loop state (manifest written
-    LAST, so its presence proves a complete round — same commit protocol
-    as :class:`webgraph_big_spark.checkpoint.IterativeRunner`).  Returns
-    the three relations re-read from parquet (lineage fully truncated;
-    the checkpoint is now the source of truth for resume)."""
-    spark = done.sparkSession
-    d = os.path.join(run_dir, f"outer_{outer:05d}")
-    out = {}
-    for name, df in (("done", done), ("nodes", nodes), ("edges", edges)):
-        path = os.path.join(d, name)
-        df.write.mode("overwrite").parquet(path)
-        out[name] = spark.read.parquet(path)
-    manifest = {
-        "outer": outer,
-        "done_rows": out["done"].count(),
-        "nodes_rows": out["nodes"].count(),
-        "edges_rows": out["edges"].count(),
-        "ts": time.time(),
-    }
-    tmp = os.path.join(d, "manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(d, "manifest.json"))  # commit point
-    # prune superseded rounds, keeping the last few complete ones
-    complete = sorted(
-        int(n.split("_")[1])
-        for n in os.listdir(run_dir)
-        if n.startswith("outer_")
-        and os.path.exists(os.path.join(run_dir, n, "manifest.json"))
-    )
-    for old in complete[:-keep_last]:
-        shutil.rmtree(os.path.join(run_dir, f"outer_{old:05d}"), ignore_errors=True)
-    return out["done"], out["nodes"], out["edges"]
-
-
-def _fwbw_latest(run_dir: str) -> int | None:
-    if not os.path.isdir(run_dir):
-        return None
-    its = [
-        int(n.split("_")[1])
-        for n in os.listdir(run_dir)
-        if n.startswith("outer_")
-        and os.path.exists(os.path.join(run_dir, n, "manifest.json"))
-    ]
-    return max(its) if its else None
+        seen["arcs"] = arcs.get["n"]
+    return edges, core, seen
 
 
 def strongly_connected_components_fwbw(
@@ -224,90 +185,65 @@ def strongly_connected_components_fwbw(
 
     All phases are frontier loops: state never exceeds O(n) rows.
 
-    The loop runs until every node is assigned (each coloring round
-    resolves at least the color roots' SCCs, so outer rounds are bounded
-    by #SCCs — pathological on a chain of cycles with ids decreasing
-    along it).  ``max_outer`` is a safety bound: exceeding it RAISES
-    rather than returning a silent partial labelling.
+    The outer rounds run on ``IterativeRunner`` over one n-row state
+    ``(id, comp)``, where a null comp marks an unassigned node; the loop
+    ends when the count of unassigned nodes, observed on the round's
+    own checkpoint, is 0.  Each coloring round resolves at least the
+    color roots' SCCs, so outer rounds are bounded by #SCCs —
+    pathological on a chain of cycles with ids decreasing along it.
+    ``max_outer`` is a safety bound: round ``max_outer`` RAISES after
+    its peel if nodes remain, rather than returning a silent partial
+    labelling.
 
     ``progress`` (optional callable str → None) receives one line per
     phase transition — long-running full-graph runs are otherwise opaque
     from outside the Spark UI.
 
-    ``run_dir`` (optional): durable resumability.  Every
-    ``checkpoint_every`` outer rounds the loop state (``done``/``nodes``/
-    ``edges``) is written to parquet with a commit-last manifest; a new
-    call with the same ``run_dir`` resumes from the latest complete
-    round instead of restarting (a host-killed multi-hour run loses at
-    most ``checkpoint_every`` rounds).  Pass a fresh/empty directory for
-    a fresh run.
+    ``run_dir`` (optional): durable resumability in the runner's layout
+    — an ``iter_<k>`` checkpoint of the state after outer rounds
+    0..k−1 every ``checkpoint_every`` rounds (commit-last manifest, the
+    newest three kept) and ``runs.jsonl`` with one record per outer
+    round.  A new call with the same ``run_dir`` resumes from the latest
+    complete checkpoint instead of restarting (a host-killed multi-hour
+    run loses at most ``checkpoint_every`` rounds).  ``outer_*``
+    directories of the earlier layout are not read: a run over one
+    starts fresh.
 
-    The edge table is pinned hash-partitioned ONCE per outer round in
-    each direction (``src`` for forward/coloring, ``dst`` for backward)
-    and shared by every phase in that round — the per-phase repartition+
-    cache+count that round 4 paid (twice per pivot, once per coloring
-    phase) is gone; pins are released in ``finally`` even on error.
+    The round's arcs (distinct, loop-free, both endpoints unassigned)
+    are carried from round to round, and rebuilt from the state after a
+    resume.  They are pinned hash-partitioned ONCE per outer round in
+    each direction (``src`` for forward/coloring, ``dst`` for backward),
+    sized by the arc count the peel observed, shared by every phase in
+    that round and released in ``finally`` even on error.
     """
     say = progress or (lambda msg: None)
     spark = g.edges.sparkSession
-    outer = -1
-    latest = _fwbw_latest(run_dir) if run_dir else None
-    if latest is not None:
-        say(f"resuming from checkpointed outer round {latest}")
-        d = os.path.join(run_dir, f"outer_{latest:05d}")
-        done = spark.read.parquet(os.path.join(d, "done")).localCheckpoint(eager=True)
-        nodes = spark.read.parquet(os.path.join(d, "nodes")).localCheckpoint(eager=True)
-        edges = spark.read.parquet(os.path.join(d, "edges")).localCheckpoint(eager=True)
-        outer = latest
-        if nodes.isEmpty():
-            return done
-    else:
-        edges = (
-            g.edges.select("src", "dst")
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        nodes = g.nodes().localCheckpoint(eager=True)
-        done = spark.createDataFrame([], "id long, comp long")
+    base = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    edges = None  # the next round's arcs between unassigned nodes
+    left = None  # the latest round's observed count of unassigned nodes
 
-    # memory-aware broadcast decision for the peel-phase semi joins: the
-    # core set is ≤ |nodes| ids; broadcast it (edge table never shuffles
-    # while peeling) exactly when it fits the session's broadcast
-    # threshold — the same rule pagerank applies to its rank side
-    n_nodes0 = nodes.count()
-    bcast_core = 0 < n_nodes0 * 32 <= broadcast_threshold(spark)
+    def initial() -> DataFrame:
+        return g.nodes().select("id", F.lit(None).cast("long").alias("comp"))
 
-    while True:
-        outer += 1
-        say(f"outer {outer}: peeling")
-        edges, nodes, peeled = _peel_trivial(edges, nodes, broadcast_core=bcast_core)
-        if not peeled.isEmpty():
-            done = done.union(peeled.select("id", F.col("id").alias("comp")))
-        if nodes.isEmpty():
-            break
-        if outer >= max_outer:
-            raise RuntimeError(
-                f"FW-BW SCC: {nodes.count()} nodes unassigned after "
-                f"max_outer={max_outer} outer rounds — raise max_outer "
-                "(bounded by the number of SCCs in the worst case)"
-            )
-
+    def resolve(edges: DataFrame, core: DataFrame, seen: dict, outer: int) -> DataFrame:
+        """(id, comp) of the SCCs one outer round resolves inside the
+        peeled core."""
         # ONE pin per direction per outer round, shared by all phases;
-        # the two repartition+cache+count materializations are
-        # independent — overlap them (guide §2.6)
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _fwd_f = _pool.submit(co_partitioned, edges, "src")
-            _bwd_f = _pool.submit(co_partitioned, edges, "dst")
-            fwd, bwd = _fwd_f.result(), _bwd_f.result()
+        # the two materializations are independent — overlap them
+        # (guide §2.6)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fwd_f = pool.submit(co_partitioned, edges, "src", rows=seen["arcs"])
+            bwd_f = pool.submit(co_partitioned, edges, "dst", rows=seen["arcs"])
+            fwd, bwd = fwd_f.result(), bwd_f.result()
         try:
             if outer < giant_pivots:
-                # FW-BW from the deterministic pivot (min id) — catches
-                # the giant SCC in O(diam) rounds without touching the
-                # rest.
-                pivot = nodes.agg(F.min("id")).first()[0]
+                # FW-BW from the deterministic pivot, the core's least id
+                # — catches the giant SCC in O(diam) rounds without
+                # touching the rest; that SCC lies inside the core, so
+                # the pivot is its min id
+                pivot = seen["lo"]
                 say(f"outer {outer}: FW-BW pivot {pivot}")
-                seed = spark.createDataFrame([(int(pivot),)], "id long")
+                seed = spark.createDataFrame([(pivot,)], "id long")
                 # forward and backward reachability are independent jobs
                 # over different pins — overlap them (guide §2.6) so one
                 # reach's per-level driver latency backfills the other's
@@ -315,43 +251,28 @@ def strongly_connected_components_fwbw(
                     fw_f = pool.submit(_reach, seed, True, fwd)
                     bw_f = pool.submit(_reach, seed, False, bwd)
                     fw, bw = fw_f.result(), bw_f.result()
-                scc = fw.join(bw, "id").localCheckpoint(eager=True)
-                comp = scc.agg(F.min("id")).first()[0]
-                done = done.union(scc.select("id", F.lit(int(comp)).alias("comp")))
-                assigned_ids = scc
+                assigned = fw.join(bw, "id").select("id", F.lit(pivot).alias("comp"))
             else:
                 # coloring phase: forward max-propagation to fixpoint —
                 # only color rows move against the pinned edge side
                 say(f"outer {outer}: coloring")
-                color = nodes.select("id", F.col("id").alias("color")).localCheckpoint(
-                    eager=True
+                moved = None
+
+                def colour_round(color: DataFrame, _: int):
+                    nonlocal moved
+                    new, moved = label_round(fwd, color, "color", lowest=False)
+                    return new, None
+
+                # a color settles within the longest path, ≤ n − 1 rounds
+                color = (
+                    IterativeRunner(spark, max_iterations=seen["n"] + 1)
+                    .run(
+                        lambda: core.select("id", F.col("id").alias("color")),
+                        colour_round,
+                        check=lambda old, new, it: moved.get["n"],
+                    )
+                    .state
                 )
-                while True:
-                    msgs = (
-                        fwd.join(
-                            color.select(F.col("id").alias("src"), "color").hint(
-                                "shuffle_hash"
-                            ),
-                            "src",
-                        )
-                        .groupBy(F.col("dst").alias("id"))
-                        .agg(F.max("color").alias("mx"))
-                    )
-                    # a color changed ⇔ an incoming max exceeded it; the
-                    # count rides on the checkpoint job, no probe job
-                    moved = Observation()
-                    grew = F.count_if(F.col("mx") > F.col("color")).alias("n")
-                    color = (
-                        color.join(msgs.hint("shuffle_hash"), "id", "left")
-                        .observe(moved, grew)
-                        .select(
-                            "id",
-                            F.greatest("color", F.coalesce("mx", "color")).alias("color"),
-                        )
-                        .localCheckpoint(eager=True)
-                    )
-                    if moved.get["n"] == 0:
-                        break
 
                 # multi-source backward reach from every color root,
                 # within its color class
@@ -378,39 +299,50 @@ def strongly_connected_components_fwbw(
                 # comp label = min id within each discovered SCC
                 say(f"outer {outer}: assigning color-root SCCs")
                 comp_of = member.groupBy("color").agg(F.min("id").alias("comp"))
-                assigned = (
-                    member.join(comp_of, "color")
-                    .select("id", "comp")
-                    .localCheckpoint(eager=True)
-                )
-                done = done.union(assigned)
-                assigned_ids = assigned.select("id")
+                assigned = member.join(comp_of, "color").select("id", "comp")
+            return assigned.localCheckpoint(eager=True)
         finally:
             fwd.unpersist()
             bwd.unpersist()
 
-        nodes = nodes.join(assigned_ids, "id", "left_anti").localCheckpoint(eager=True)
-        done = done.localCheckpoint(eager=True)
-        if nodes.isEmpty():
-            # terminal round: every node is assigned, so the edge trim
-            # below would be a full double anti-join pass producing an
-            # EMPTY relation — skip the work and checkpoint an empty
-            # edge table (resume reads `done` and returns immediately
-            # when nodes is empty; edges are never consulted)
-            if run_dir:
-                empty_edges = spark.createDataFrame([], "src long, dst long")
-                _fwbw_checkpoint(run_dir, outer, done, nodes, empty_edges)
-            break
-        edges = (
-            edges.join(
-                assigned_ids.select(F.col("id").alias("src")), "src", "left_anti"
+    def step(state: DataFrame, outer: int):
+        nonlocal edges, left
+        if edges is None:
+            # a fresh run starts with every node unassigned
+            edges = base if outer == 0 else _between(
+                base, state.filter(F.col("comp").isNull()), "left_semi"
             )
-            .join(assigned_ids.select(F.col("id").alias("dst")), "dst", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if run_dir and ((outer + 1) % checkpoint_every == 0):
-            done, nodes, edges = _fwbw_checkpoint(run_dir, outer, done, nodes, edges)
-    return done
+        say(f"outer {outer}: peeling")
+        edges, core, seen = _peel_trivial(edges.localCheckpoint(eager=True))
+        if seen["n"] and outer >= max_outer:
+            raise RuntimeError(
+                f"FW-BW SCC: {seen['n']} nodes unassigned after "
+                f"max_outer={max_outer} outer rounds — raise max_outer "
+                "(bounded by the number of SCCs in the worst case)"
+            )
+        # peeled nodes (unassigned, outside the core) are singleton SCCs
+        if seen["n"]:
+            assigned = resolve(edges, core, seen, outer)
+            edges = _between(edges, assigned, "left_anti")
+            labels = core.join(assigned, "id", "left").select(
+                "id", F.col("comp").alias("_c"), F.lit(True).alias("_core")
+            )
+            new = state.join(labels.hint("shuffle_hash"), "id", "left").select(
+                "id",
+                F.coalesce("comp", F.when(F.col("_core").isNull(), F.col("id")), "_c").alias("comp"),
+            )
+        else:
+            new = state.select("id", F.coalesce("comp", "id").alias("comp"))
+        left = Observation()
+        return new.observe(left, F.count_if(F.col("comp").isNull()).alias("n")), None
+
+    runner = IterativeRunner(
+        spark, run_dir=run_dir, checkpoint_every=checkpoint_every, max_iterations=max_outer + 1
+    )
+    latest = runner.latest_checkpoint()
+    if latest is not None:
+        say(f"resuming from checkpointed outer round {latest - 1}")
+    return runner.run(initial, step, check=lambda old, new, it: left.get["n"]).state
 
 
 def scc_buckets(g: Graph, components: DataFrame) -> DataFrame:
@@ -439,17 +371,8 @@ def scc_buckets(g: Graph, components: DataFrame) -> DataFrame:
 
 
 def trim(g: Graph, rounds: int = 3) -> Graph:
-    """Iteratively peel nodes with in- or out-degree 0 — they are
-    singleton SCCs; the standard preprocessing that shrinks real graphs
-    drastically before closure/FW-BW."""
-    edges = g.edges.select("src", "dst")
-    for _ in range(rounds):
-        srcs = edges.select(F.col("src").alias("id")).distinct()
-        dsts = edges.select(F.col("dst").alias("id")).distinct()
-        core = srcs.join(dsts, "id", "inner")
-        edges = (
-            edges.join(core.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(core.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
-    return Graph(edges, dense=False)
+    """Iteratively peel nodes with in- or out-degree 0, at most
+    ``rounds`` times — they are singleton SCCs; the standard
+    preprocessing that shrinks real graphs drastically before
+    closure/FW-BW."""
+    return Graph(_peel_trivial(g.edges.select("src", "dst"), max_rounds=rounds)[0], dense=False)

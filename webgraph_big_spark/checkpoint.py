@@ -15,7 +15,11 @@ does not give for free (SURVEY.md §4):
   ``partition_sizes`` (rows per written part file, read from the parquet
   footers, so the manifest costs no Spark job).  A new run with the same
   ``run_dir`` restarts from the latest complete checkpoint and
-  reproduces the same final state.
+  reproduces the same final state.  Only the newest
+  ``KEEP_CHECKPOINTS`` complete checkpoints are kept: once a new
+  manifest has committed, every older ``iter_*`` directory is deleted,
+  so a loop that checkpoints every round holds a bounded amount of disk
+  and a kill during a write still leaves a complete one to resume from.
 - **per-iteration metrics**: rows (an ``observe``-d ``count(*)`` read
   off the round's own ``localCheckpoint``, so no extra job), rows
   changed and wall time — kept in ``IterationResult.metrics`` and, with
@@ -39,6 +43,9 @@ from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+# complete checkpoints a run_dir keeps; older ones go once a newer commits
+KEEP_CHECKPOINTS = 3
 
 
 @dataclass
@@ -75,18 +82,23 @@ class IterativeRunner:
     def _manifest_path(self, it: int) -> str:
         return os.path.join(self._ckpt_dir(it), "manifest.json")
 
-    def latest_checkpoint(self) -> int | None:
-        """Latest iteration with a *complete* manifest (manifest is written
-        after the parquet commit, so its presence proves completeness)."""
+    def _complete(self) -> list[int]:
+        """Iterations with a *complete* manifest, ascending (the manifest
+        is written after the parquet commit, so its presence proves
+        completeness)."""
         if not self.run_dir or not os.path.isdir(self.run_dir):
-            return None
-        its = []
-        for name in os.listdir(self.run_dir):
-            if name.startswith("iter_") and os.path.exists(
-                os.path.join(self.run_dir, name, "manifest.json")
-            ):
-                its.append(int(name.split("_")[1]))
-        return max(its) if its else None
+            return []
+        return sorted(
+            int(name.split("_")[1])
+            for name in os.listdir(self.run_dir)
+            if name.startswith("iter_")
+            and os.path.exists(os.path.join(self.run_dir, name, "manifest.json"))
+        )
+
+    def latest_checkpoint(self) -> int | None:
+        """Latest iteration with a complete checkpoint."""
+        its = self._complete()
+        return its[-1] if its else None
 
     def _write_checkpoint(self, state: DataFrame, it: int, extra: dict) -> None:
         d = self._ckpt_dir(it)
@@ -108,6 +120,10 @@ class IterativeRunner:
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, self._manifest_path(it))  # commit point
+        kept = self._complete()[-KEEP_CHECKPOINTS:]
+        for name in os.listdir(self.run_dir):
+            if name.startswith("iter_") and int(name.split("_")[1]) < kept[0]:
+                shutil.rmtree(os.path.join(self.run_dir, name), ignore_errors=True)
 
     def _load_checkpoint(self, it: int) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._ckpt_dir(it), "state"))
@@ -189,7 +205,3 @@ class IterativeRunner:
             # final checkpoint so a resumed run sees the converged state
             self._write_checkpoint(to_disk(state), it, {"final": True})
         return IterationResult(state=state, iterations=it, converged=converged, metrics=metrics)
-
-    def clear(self) -> None:
-        if self.run_dir and os.path.isdir(self.run_dir):
-            shutil.rmtree(self.run_dir)
