@@ -12,7 +12,7 @@ from webgraph_big_spark.session import get_spark  # noqa: E402
 def spark():
     # tiny fixtures: fewer shuffle partitions = fewer tasks = faster jobs;
     # AQE would coalesce anyway but starting small avoids the task churn.
-    s = get_spark("wbs-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")), shuffle_partitions=2)
+    s = get_spark("wbs-tests", shuffle_partitions=2)
     yield s
     s.stop()
 

@@ -8,9 +8,16 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle import neighbourhood_function_oracle, pagerank_oracle
+from tests.oracle import (
+    components_oracle,
+    label_propagation_oracle,
+    neighbourhood_function_oracle,
+    pagerank_oracle,
+)
 from webgraph_big_spark import synth
 from webgraph_big_spark.graph import Graph
+from webgraph_big_spark.algorithms.components import connected_components
+from webgraph_big_spark.algorithms.labelprop import label_propagation
 from webgraph_big_spark.algorithms.pagerank import pagerank
 from webgraph_big_spark.algorithms.hyperball import (
     hyperball,
@@ -67,12 +74,43 @@ def test_pagerank_resume_matches_uninterrupted(spark, tmp_path):
     assert runner.latest_checkpoint() == 6
     resumed = {
         r["id"]: r["rank"]
-        for r in pagerank(g, fixed_iterations=12, run_dir=run_dir, resume=True).collect()
+        for r in pagerank(g, fixed_iterations=12, run_dir=run_dir).collect()
     }
     assert all(abs(full[i] - resumed[i]) < 1e-12 for i in full)
     # runs.jsonl has the per-iteration lineage/metrics records
     lines = [json.loads(l) for l in open(os.path.join(run_dir, "runs.jsonl"))]
     assert {rec["iteration"] for rec in lines} >= set(range(1, 13)) - set(range(1, 7))
+
+
+PATH_12 = np.array([(i, i + 1) for i in range(11)], dtype=np.int64)
+
+# (first call, second call over the same run_dir, column, wanted labels):
+# a fixed-round first call ends unconverged, so the second call resumes
+# from its last round instead of returning that round's state as final
+FIXED_THEN_RESUMED = {
+    "hashmin": (
+        lambda g, d: connected_components(g, fixed_iterations=2, run_dir=d),
+        lambda g, d: connected_components(g, run_dir=d),
+        "comp",
+        components_oracle(PATH_12, 12),
+    ),
+    "labelprop": (
+        lambda g, d: label_propagation(g, rounds=2, run_dir=d, checkpoint_every=1),
+        lambda g, d: label_propagation(g, rounds=5, run_dir=d, checkpoint_every=1),
+        "label",
+        label_propagation_oracle(PATH_12, 12, rounds=5),
+    ),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(FIXED_THEN_RESUMED))
+def test_fixed_round_run_dir_resumes(spark, tmp_path, loop):
+    first, second, col, want = FIXED_THEN_RESUMED[loop]
+    g = _g(spark, PATH_12, 12)
+    run_dir = str(tmp_path / loop)
+    first(g, run_dir).collect()
+    got = {r["id"]: r[col] for r in second(g, run_dir).collect()}
+    assert got == {i: int(want[i]) for i in range(12)}
 
 
 def test_checkpoint_manifest_partition_metrics(spark, tmp_path):

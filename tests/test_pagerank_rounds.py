@@ -116,6 +116,10 @@ def test_pagerank_tol_on_random_graph(spark, tmp_path):
     recs = [json.loads(line) for line in open(os.path.join(run_dir, "runs.jsonl"))]
     assert recs[-1]["iteration"] == k
     np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-15)
+    # the converged run_dir resumes straight to its result: no new round
+    again = _ranks(pagerank(_g(spark, edges, 40), tol=1e-7, check_every=4, run_dir=run_dir), 40)
+    np.testing.assert_allclose(again, got, rtol=1e-12, atol=1e-15)
+    assert len(open(os.path.join(run_dir, "runs.jsonl")).readlines()) == len(recs)
 
 
 @pytest.mark.parametrize("rounds,every", [(7, 3), (6, 3), (7, 1)])

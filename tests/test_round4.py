@@ -93,7 +93,7 @@ def test_co_partitioned_preserves_partitioning(spark):
     requirement from the cache: the join plan contains no Exchange above
     the InMemoryTableScan edge side."""
     g = Graph.from_pairs(spark, [(i, (i + 1) % 50) for i in range(50)], num_nodes=50)
-    edges = co_partitioned(g.edges.select("src", "dst"), "src", num_partitions=4)
+    edges = co_partitioned(g.edges.select("src", "dst"), "src", rows=50)
     try:
         state = (
             g.nodes()

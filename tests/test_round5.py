@@ -4,6 +4,8 @@ validation."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,19 +29,35 @@ CHAINED_CYCLES = [(10, 11), (11, 10), (0, 1), (1, 0), (11, 0)]
 CHAINED_EXPECTED = {10: 10, 11: 10, 0: 0, 1: 0}
 
 
+def _run_dir_listing(run_dir):
+    with open(os.path.join(run_dir, "runs.jsonl")) as fh:
+        records = len(fh.readlines())
+    return records, sorted(d for d in os.listdir(run_dir) if d.startswith("iter_"))
+
+
 def test_fwbw_checkpoint_roundtrip(spark, tmp_path):
     """A run with run_dir produces the same labelling as without, and
-    leaves a complete (manifest-committed) checkpoint behind."""
+    leaves a complete (manifest-committed) checkpoint behind.  A second
+    call over the converged run_dir returns that labelling without
+    running a round."""
     run_dir = str(tmp_path / "scc_run")
     g = _g(spark, CHAINED_CYCLES)
-    got = {
-        r["id"]: r["comp"]
-        for r in strongly_connected_components_fwbw(
-            g, giant_pivots=0, run_dir=run_dir
-        ).collect()
-    }
-    assert got == CHAINED_EXPECTED
+
+    def labels(progress=None):
+        return {
+            r["id"]: r["comp"]
+            for r in strongly_connected_components_fwbw(
+                g, giant_pivots=0, run_dir=run_dir, progress=progress
+            ).collect()
+        }
+
+    assert labels() == CHAINED_EXPECTED
     assert IterativeRunner(spark, run_dir=run_dir).latest_checkpoint() is not None
+    before = _run_dir_listing(run_dir)
+    phases = []
+    assert labels(phases.append) == CHAINED_EXPECTED
+    assert _run_dir_listing(run_dir) == before
+    assert not any("peeling" in p for p in phases), phases
 
 
 def test_fwbw_resumes_from_interrupted_run(spark, tmp_path):

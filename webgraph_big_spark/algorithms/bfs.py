@@ -4,7 +4,9 @@ Analogue of ``ParallelBreadthFirstVisit`` (``algo/ParallelBreadthFirstVisit.java
 its shared queue + CAS ``marker`` array + per-level CyclicBarrier map to a
 ``visited`` state DataFrame, a ``frontier`` DataFrame and one Spark job
 per level: the frontier's checkpoint, whose observed row count also ends
-the loop (``graph.frontier_reach``; SURVEY.md §3.3).  ``visit_all``
+the loop (``graph.frontier_reach``; SURVEY.md §3.3).  There is no depth
+cap: a search always ends on an empty frontier, as the reference's
+visit ends on an empty queue, at most n levels in.  ``visit_all``
 reproduces ``visitAll()`` (``:272``): restart from the smallest
 unvisited node until every node is reached; the per-node "round" is the
 BFS index — which is exactly how the reference derives WCC
@@ -22,7 +24,6 @@ def bfs_distances(
     g: Graph,
     sources: list[int] | DataFrame,
     symmetric: bool = False,
-    max_depth: int = 10_000,
     fixed_rounds: int | None = None,
     parents: bool = False,
 ) -> DataFrame:
@@ -30,7 +31,7 @@ def bfs_distances(
     (multi-source BFS).
 
     Unreached nodes are absent from the result (dist would be ∞).
-    ``fixed_rounds`` runs exactly k expansion rounds (oracle gate mode).
+    ``fixed_rounds`` runs at most k expansion rounds (oracle gate mode).
     ``parents=True`` adds the BFS-tree parent — the reference's
     ``marker`` holding the parent instead of the round
     (``ParallelBreadthFirstVisit.java:183``); ties are broken
@@ -81,11 +82,7 @@ def bfs_distances(
         )
 
     try:
-        return frontier_reach(
-            src_df.select(*first_cols),
-            expand,
-            fixed_rounds if fixed_rounds is not None else max_depth,
-        )
+        return frontier_reach(src_df.select(*first_cols), expand, fixed_rounds)
     finally:
         edges.unpersist()
 

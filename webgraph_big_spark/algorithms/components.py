@@ -81,13 +81,14 @@ def connected_components(
     run_dir: str | None = None,
     checkpoint_every: int = 8,
     fixed_iterations: int | None = None,
-    include_isolated: bool = True,
 ) -> DataFrame:
     """Returns (id, comp) with comp = min id of the weak component.
 
     ``symmetric=True`` promises g already equals its transpose (the
     reference requires this of its input, ``algo/ConnectedComponents.java:49``);
     otherwise arcs are used in both directions (WCC semantics).
+    ``fixed_iterations`` runs exactly that many rounds (the oracle gate's
+    form), so a later call over the same ``run_dir`` resumes from them.
     """
     spark = g.edges.sparkSession
     if symmetric:
@@ -107,12 +108,9 @@ def connected_components(
     )
 
     # dense graphs expose the FULL [0, n) node set whether or not n was
-    # declared (g.nodes() derives it) — so isolated/gap ids get the same
-    # treatment here as in pagerank()/nodes(); only scattered-id graphs
-    # fall back to touched endpoints.
-    nodes = (
-        g.nodes() if include_isolated and g.dense else g.touched_nodes()
-    ).cache()
+    # declared, so isolated/gap ids get the same treatment here as in
+    # pagerank(); scattered-id graphs have their touched endpoints
+    nodes = g.nodes().cache()
 
     moved = None  # the latest round's observed change count
 
@@ -122,11 +120,9 @@ def connected_components(
     def step(state: DataFrame, it: int):
         nonlocal moved
         new_state, moved = label_round(edges, state, "comp", lowest=True)
-        if fixed_iterations is not None:
-            return new_state, (None if it + 1 < fixed_iterations else 0)
-        return new_state, None
+        return new_state
 
-    def check(old: DataFrame, new: DataFrame, it: int) -> int:
+    def check(new: DataFrame, it: int) -> int:
         return moved.get["n"]
 
     runner = IterativeRunner(
@@ -217,19 +213,16 @@ def connected_components_star(
         # BOTH is ~2^-64.  Decimal(38) accumulator: exact and
         # overflow-free under ANSI mode at any row count.
         sig = Observation()
-        return (
-            new_rel.observe(
-                sig,
-                F.count(F.lit(1)).alias("c"),
-                F.coalesce(
-                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("s"),
-            ),
-            None,
+        return new_rel.observe(
+            sig,
+            F.count(F.lit(1)).alias("c"),
+            F.coalesce(
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
+            ).alias("s"),
         )
 
-    def check(old: DataFrame, new: DataFrame, it: int) -> int | None:
+    def check(new: DataFrame, it: int) -> int | None:
         # a round's output depends only on the SET of its input rows, so
         # two equal signatures in a row mean a fixed point; the first
         # round (and the first after a resume) has nothing to compare

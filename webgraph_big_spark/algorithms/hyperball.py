@@ -369,9 +369,9 @@ def _packed_loop(g: Graph, t_max: int | None, log2m: int, on_round=None):
             )
             .observe(moved, F.count_if(differs).alias("n"))
         )
-        return merged, None
+        return merged
 
-    def check(old: DataFrame, new: DataFrame, t: int) -> int:
+    def check(new: DataFrame, t: int) -> int:
         if on_round is not None:
             on_round(t + 1, new.select("id", "slot", "packed"))
         return moved.get["n"]

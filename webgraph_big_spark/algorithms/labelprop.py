@@ -14,6 +14,13 @@ Semantics (documented to match the pure-Python oracle exactly):
 Synchronous rounds + total-order tie-break make runs reproducible across
 partitionings/cluster sizes (SURVEY.md §7 hard part 5).
 
+The loop runs a fixed number of rounds and has no "until stable" mode:
+synchronous propagation need not reach a fixpoint.  On a single arc the
+two endpoints swap labels every round (each sees only the other's
+label), a period-2 oscillation that never settles, so a run-to-fixpoint
+loop would spend its whole round cap and return a labelling that is not
+a fixpoint, with nothing to say so.
+
 Per round: one join (labels → edges) + one count aggregation + one
 argmax aggregation (max of a (cnt, -label) struct — partial-aggregated,
 no window sort).  The argmax runs over the (node, label, cnt) table,
@@ -33,32 +40,20 @@ from webgraph_big_spark.transforms import symmetrize
 def label_propagation(
     g: Graph,
     rounds: int = 10,
-    symmetric: bool = False,
-    until_stable: bool = False,
     run_dir: str | None = None,
     checkpoint_every: int = 5,
-    initial_labels: DataFrame | None = None,
 ) -> DataFrame:
-    """Returns (id, label) after ``rounds`` synchronous rounds (or at the
-    fixpoint if ``until_stable``)."""
+    """Returns (id, label) after ``rounds`` synchronous rounds."""
     spark = g.edges.sparkSession
-    gs = g if symmetric else symmetrize(g)
+    gs = symmetrize(g)
     # hash-partitioned by the per-round join key and pinned: only label
     # rows move per round (see co_partitioned for the full recipe).  Sized
     # from the input's arc count: the symmetrized table has at most twice
     # as many rows, and counting it would run its dedup one extra time.
-    edges = co_partitioned(
-        gs.edges.select("src", "dst"),
-        "src",
-        rows=g.num_arcs() * (1 if symmetric else 2),
-    )
+    edges = co_partitioned(gs.edges.select("src", "dst"), "src", rows=g.num_arcs() * 2)
     nodes = g.nodes().cache()
 
     def initial() -> DataFrame:
-        if initial_labels is not None:
-            return nodes.join(initial_labels, "id", "left").select(
-                "id", F.coalesce("label", "id").alias("label")
-            )
         return nodes.select("id", F.col("id").alias("label"))
 
     # every node WITH a neighbour receives ≥1 vote every round, so the
@@ -98,26 +93,13 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("_nl"))).alias("_w"))
             .select("id", (-F.col("_w._nl")).alias("label"))
         )
-        new_labels = winner.unionByName(isolated)
-        if not until_stable:
-            return new_labels, (None if it + 1 < rounds else 0)
-        return new_labels, None
-
-    def check(old: DataFrame, new: DataFrame, it: int) -> int:
-        return (
-            new.join(old.withColumnRenamed("label", "prev").hint("shuffle_hash"), "id")
-            .filter(F.col("label") != F.col("prev"))
-            .count()
-        )
+        return winner.unionByName(isolated)
 
     runner = IterativeRunner(
-        spark,
-        run_dir=run_dir,
-        checkpoint_every=checkpoint_every,
-        max_iterations=rounds if not until_stable else 1000,
+        spark, run_dir=run_dir, checkpoint_every=checkpoint_every, max_iterations=rounds
     )
     try:
-        return runner.run(initial, step, check=check if until_stable else None).state
+        return runner.run(initial, step).state
     finally:
         edges.unpersist()
         nodes.unpersist()

@@ -60,7 +60,6 @@ def pagerank(
     max_iterations: int = 200,
     run_dir: str | None = None,
     checkpoint_every: int = 20,
-    resume: bool = True,
     fixed_iterations: int | None = None,
     check_every: int = 4,
     broadcast_threshold_bytes: int | None = None,
@@ -200,14 +199,12 @@ def pagerank(
             )
             observed += [F.max("_d").alias("dmax"), F.min("_d").alias("dmin")]
         obs = Observation()
-        return new_u.observe(obs, *observed).select("id", "rank"), None
+        return new_u.observe(obs, *observed).select("id", "rank")
 
-    def check(old: DataFrame, new: DataFrame, it: int):
+    def check(new: DataFrame, it: int):
         nonlocal c
         m = obs.get
         c = (1.0 - m["mass"]) / n
-        if fixed_iterations is not None:
-            return None if it + 1 < fixed_iterations else 0
         if "dmax" not in m:
             return None
         delta = max(abs(m["dmax"] + c), abs(m["dmin"] + c))
@@ -223,7 +220,7 @@ def pagerank(
         max_iterations=fixed_iterations or max_iterations,
     )
     try:
-        result = runner.run(initial, step, check=check, resume=resume, durable=with_c)
+        result = runner.run(initial, step, check=check, durable=with_c)
     finally:
         if not use_broadcast:
             # don't leave the degree-joined edge table pinned in executor

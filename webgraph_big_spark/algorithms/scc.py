@@ -261,7 +261,7 @@ def strongly_connected_components_fwbw(
                 def colour_round(color: DataFrame, _: int):
                     nonlocal moved
                     new, moved = label_round(fwd, color, "color", lowest=False)
-                    return new, None
+                    return new
 
                 # a color settles within the longest path, ≤ n − 1 rounds
                 color = (
@@ -269,7 +269,7 @@ def strongly_connected_components_fwbw(
                     .run(
                         lambda: core.select("id", F.col("id").alias("color")),
                         colour_round,
-                        check=lambda old, new, it: moved.get["n"],
+                        check=lambda new, it: moved.get["n"],
                     )
                     .state
                 )
@@ -334,7 +334,7 @@ def strongly_connected_components_fwbw(
         else:
             new = state.select("id", F.coalesce("comp", "id").alias("comp"))
         left = Observation()
-        return new.observe(left, F.count_if(F.col("comp").isNull()).alias("n")), None
+        return new.observe(left, F.count_if(F.col("comp").isNull()).alias("n"))
 
     runner = IterativeRunner(
         spark, run_dir=run_dir, checkpoint_every=checkpoint_every, max_iterations=max_outer + 1
@@ -342,7 +342,7 @@ def strongly_connected_components_fwbw(
     latest = runner.latest_checkpoint()
     if latest is not None:
         say(f"resuming from checkpointed outer round {latest - 1}")
-    return runner.run(initial, step, check=lambda old, new, it: left.get["n"]).state
+    return runner.run(initial, step, check=lambda new, it: left.get["n"]).state
 
 
 def scc_buckets(g: Graph, components: DataFrame) -> DataFrame:

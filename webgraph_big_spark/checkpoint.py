@@ -9,17 +9,28 @@ does not give for free (SURVEY.md §4):
 - **lineage truncation**: iterative plans grow unboundedly, so every
   round's state is eagerly ``localCheckpoint``-ed (the Spark analogue of
   the reference's in-place arrays).
+- **one way to end**: ``step`` returns only the round's plan, and
+  ``check(new, it)`` is the only channel for the round's change count,
+  read after the checkpoint (typically from an ``observe``-d metric of
+  that same job).  A count of 0 is a fixpoint and ends the loop; a fixed
+  round count ends on ``max_iterations`` alone, so ``converged`` means
+  a real fixpoint, never "ran out of rounds".
 - **resumability** (north rule): every ``checkpoint_every`` rounds the
   state is written to parquet — exactly one Spark job, the write itself.
-  Each checkpoint directory carries a manifest: iteration, ``rows`` and
+  Each checkpoint directory carries a manifest: iteration, ``rows``,
   ``partition_sizes`` (rows per written part file, read from the parquet
-  footers, so the manifest costs no Spark job).  A new run with the same
+  footers, so the manifest costs no Spark job), the round's ``changed``
+  and ``converged`` (its ``check`` returned 0).  A new run with the same
   ``run_dir`` restarts from the latest complete checkpoint and
-  reproduces the same final state.  Only the newest
-  ``KEEP_CHECKPOINTS`` complete checkpoints are kept: once a new
-  manifest has committed, every older ``iter_*`` directory is deleted,
-  so a loop that checkpoints every round holds a bounded amount of disk
-  and a kill during a write still leaves a complete one to resume from.
+  reproduces the same final state; when that checkpoint is marked
+  ``converged`` it returns the checkpointed state at once, running no
+  round, appending no ``runs.jsonl`` record and writing no checkpoint.
+  A manifest without the key (an older run dir) resumes as unconverged.
+  Only the newest ``KEEP_CHECKPOINTS`` complete checkpoints are kept:
+  once a new manifest has committed, every older ``iter_*`` directory is
+  deleted, so a loop that checkpoints every round holds a bounded amount
+  of disk and a kill during a write still leaves a complete one to
+  resume from.
 - **per-iteration metrics**: rows (an ``observe``-d ``count(*)`` read
   off the round's own ``localCheckpoint``, so no extra job), rows
   changed and wall time — kept in ``IterationResult.metrics`` and, with
@@ -57,11 +68,8 @@ class IterationResult:
 
 
 class IterativeRunner:
-    """Run ``state = step(state)`` until convergence with checkpoints.
-
-    ``step(state, iteration) -> (new_state, changed_count_or_None)``;
-    convergence = ``changed == 0`` (or a custom ``converged`` callable).
-    """
+    """Run ``state = step(state, it)`` until ``check`` reports no change
+    or ``max_iterations`` rounds have run, with checkpoints."""
 
     def __init__(
         self,
@@ -100,7 +108,7 @@ class IterativeRunner:
         its = self._complete()
         return its[-1] if its else None
 
-    def _write_checkpoint(self, state: DataFrame, it: int, extra: dict) -> None:
+    def _write_checkpoint(self, state: DataFrame, it: int, changed: int | None) -> None:
         d = self._ckpt_dir(it)
         data = os.path.join(d, "state")
         state.write.mode("overwrite").parquet(data)
@@ -114,7 +122,8 @@ class IterativeRunner:
             "rows": sum(part_sizes),
             "partition_sizes": part_sizes,
             "ts": time.time(),
-            **extra,
+            "changed": changed,
+            "converged": changed == 0,
         }
         tmp = self._manifest_path(it) + ".tmp"
         with open(tmp, "w") as fh:
@@ -138,18 +147,19 @@ class IterativeRunner:
     def run(
         self,
         initial: Callable[[], DataFrame],
-        step: Callable[[DataFrame, int], tuple[DataFrame, int | None]],
-        check: Callable[[DataFrame, DataFrame, int], int | None] | None = None,
-        resume: bool = True,
+        step: Callable[[DataFrame, int], DataFrame],
+        check: Callable[[DataFrame, int], int | None] | None = None,
         durable: Callable[[DataFrame], DataFrame] | None = None,
     ) -> IterationResult:
-        """``step(state, it) -> (new_state_plan, changed_or_None)``;
-        ``check(old, new, it) -> changed_or_None`` runs *after* the new
-        state is materialized (so convergence probes hit cached data, not
-        a recompute, and metrics the step ``observe``-d are readable).
-        Convergence = changed == 0.  ``durable(state)`` is what a durable
-        checkpoint writes and a resumed run starts from (default: the
-        state itself).
+        """``step(state, it) -> new_state_plan``; ``check(new, it) ->
+        changed_or_None`` runs *after* the new state is materialized (so
+        metrics the step ``observe``-d are readable and a probe hits
+        checkpointed data, not a recompute).  ``check`` is the only way a
+        round reports a change count: 0 is a fixpoint and ends the loop,
+        None means unknown.  A fixed round count ends on
+        ``max_iterations`` alone, and then ``converged`` is False.
+        ``durable(state)`` is what a durable checkpoint writes and a
+        resumed run starts from (default: the state itself).
 
         Every iteration the new state is **eagerly localCheckpoint-ed**:
         iterative DataFrame plans otherwise grow without bound and
@@ -157,34 +167,35 @@ class IterativeRunner:
         (SURVEY.md §7 hard part 4 — the Spark analogue of the reference's
         in-place big arrays).  Durable parquet checkpoints (resume path)
         happen every ``checkpoint_every`` rounds on top, and once more at
-        the end unless the last round was just written.
+        the end unless the last round was just written.  A resumed run
+        whose checkpoint is marked ``converged`` runs no round.
         """
         metrics: list[dict] = []
-        start_iter = 0
-        written = None  # iteration whose state is already durable
-        if self.run_dir:
-            os.makedirs(self.run_dir, exist_ok=True)
-        latest = self.latest_checkpoint() if (resume and self.run_dir) else None
+        it = written = 0  # written: iteration whose state is already durable
+        converged = False
+        latest = self.latest_checkpoint()
         if latest is not None:
             state = self._load_checkpoint(latest)
-            start_iter = written = latest
+            it = written = latest
+            with open(self._manifest_path(latest)) as fh:
+                converged = json.load(fh).get("converged", False)
         else:
             state = initial()
         state = state.localCheckpoint(eager=True)
         to_disk = durable or (lambda s: s)
 
-        converged = False
-        it = start_iter
-        while it < self.max_iterations:
+        changed = None
+        while not converged and it < self.max_iterations:
             t0 = time.time()
-            new_plan, changed = step(state, it)
             rows = Observation()
             # truncate lineage; the row count rides on the same job
-            new_state = new_plan.observe(rows, F.count(F.lit(1)).alias("rows")).localCheckpoint(
-                eager=True
+            state = (
+                step(state, it)
+                .observe(rows, F.count(F.lit(1)).alias("rows"))
+                .localCheckpoint(eager=True)
             )
-            if changed is None and check is not None:
-                changed = check(state, new_state, it)
+            changed = check(state, it) if check is not None else None
+            converged = changed == 0
             it += 1
             rec = {
                 "iteration": it,
@@ -194,14 +205,10 @@ class IterativeRunner:
             }
             metrics.append(rec)
             self._log_run(rec)
-            if self.run_dir and (it % self.checkpoint_every == 0):
-                self._write_checkpoint(to_disk(new_state), it, {"changed": changed})
+            if self.run_dir and it % self.checkpoint_every == 0:
+                self._write_checkpoint(to_disk(state), it, changed)
                 written = it
-            state = new_state
-            if changed is not None and changed == 0:
-                converged = True
-                break
         if self.run_dir and written != it:
-            # final checkpoint so a resumed run sees the converged state
-            self._write_checkpoint(to_disk(state), it, {"final": True})
+            # final checkpoint so a resumed run sees the last state
+            self._write_checkpoint(to_disk(state), it, changed)
         return IterationResult(state=state, iterations=it, converged=converged, metrics=metrics)

@@ -45,9 +45,7 @@ TARGET_PIN_PARTITION_BYTES = 32 * 1024 * 1024
 _PIN_ROW_BYTES_PER_COL = 16  # long column in an UnsafeRow, incl. overhead
 
 
-def co_partitioned(
-    df: DataFrame, *keys: str, num_partitions: int | None = None, rows: int | None = None
-) -> DataFrame:
+def co_partitioned(df: DataFrame, *keys: str, rows: int | None = None) -> DataFrame:
     """Pin a STATIC relation hash-partitioned by ``keys`` for an
     iterative loop — the shared recipe behind every per-round join that
     must NOT re-exchange the big side (PageRank, HyperBall, WCC, label
@@ -71,10 +69,9 @@ def co_partitioned(
 
     Callers own the cache: ``unpersist()`` when the loop finishes.
 
-    ``num_partitions`` defaults to a SIZE-DERIVED count (guide §2.2:
-    partition by bytes, not by a constant tuned to either local mode or
-    one cluster): ``rows`` sizes the pin at
-    ~``TARGET_PIN_PARTITION_BYTES`` per partition.  A 20 MB sf0.1 edge
+    The partition count is SIZE-DERIVED (guide §2.2: partition by bytes,
+    not by a constant tuned to either local mode or one cluster): ``rows``
+    sizes the pin at ~``TARGET_PIN_PARTITION_BYTES`` per partition.  A 20 MB sf0.1 edge
     table pins as TWO partitions — every per-round join stage then runs
     two real tasks instead of `cpus` near-empty ones — while a 2 TB
     production table pins as ~64k partitions, with no config change.
@@ -88,12 +85,10 @@ def co_partitioned(
     bound is fine): counting ``df`` itself when it is omitted runs the
     whole upstream plan once more before the pin runs it.
     """
-    k = num_partitions
-    if k is None:
-        if rows is None:
-            rows = df.count()
-        est_bytes = rows * _PIN_ROW_BYTES_PER_COL * max(len(df.columns), 1)
-        k = -(-est_bytes // TARGET_PIN_PARTITION_BYTES)
+    if rows is None:
+        rows = df.count()
+    est_bytes = rows * _PIN_ROW_BYTES_PER_COL * max(len(df.columns), 1)
+    k = -(-est_bytes // TARGET_PIN_PARTITION_BYTES)
     pinned = df.repartition(max(2, int(k)), *keys).cache()
     pinned.count()
     return pinned
@@ -529,12 +524,3 @@ class Graph:
             *[F.col(f"_l_{c}").alias(c) for c in label_cols],
         )
         return cls(decoded, num_nodes=meta["nodes"])
-
-    # convenience -------------------------------------------------------
-    def cache(self) -> "Graph":
-        self.edges = self.edges.cache()
-        return self
-
-    def unpersist(self) -> "Graph":
-        self.edges = self.edges.unpersist()
-        return self
