@@ -122,6 +122,28 @@ def test_pagerank_tol_on_random_graph(spark, tmp_path):
     assert len(open(os.path.join(run_dir, "runs.jsonl")).readlines()) == len(recs)
 
 
+@pytest.mark.parametrize("rule", ["tol", "alpha", "fixed_iterations"])
+def test_pagerank_converged_run_dir_other_rule_resumes(spark, tmp_path, rule):
+    """A run dir converged at tol=1e-3 is only a starting point for a
+    call with another stop rule: it resumes and runs to that rule."""
+    edges = synth.erdos_renyi(40, 0.08, seed=21)
+    run_dir = str(tmp_path / "pr")
+    pagerank(_g(spark, edges, 40), tol=1e-3, check_every=4, run_dir=run_dir)
+    k, _ = _probe_round(edges, 40, 1e-3, 4)
+    kwargs, want = {
+        "tol": ({"tol": 1e-12}, pagerank_oracle(edges, 40, tol=1e-12)),
+        "alpha": ({"alpha": 0.5, "tol": 1e-12}, pagerank_oracle(edges, 40, alpha=0.5, tol=1e-12)),
+        "fixed_iterations": (
+            {"fixed_iterations": k + 3},
+            pagerank_oracle(edges, 40, fixed_iterations=k + 3),
+        ),
+    }[rule]
+    got = _ranks(pagerank(_g(spark, edges, 40), check_every=4, run_dir=run_dir, **kwargs), 40)
+    np.testing.assert_allclose(got, want, rtol=0, atol=1e-10)
+    recs = [json.loads(line) for line in open(os.path.join(run_dir, "runs.jsonl"))]
+    assert recs[-1]["iteration"] > k
+
+
 @pytest.mark.parametrize("rounds,every", [(7, 3), (6, 3), (7, 1)])
 def test_pagerank_resume_after_checkpoints(spark, tmp_path, rounds, every):
     """Resume from the last checkpoint whether or not ``every`` divides

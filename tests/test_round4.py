@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from webgraph_big_spark import typed as ty
 from webgraph_big_spark.functions import global_cumsum
-from webgraph_big_spark.graph import Graph, co_partitioned
+from webgraph_big_spark.graph import TARGET_PIN_PARTITION_BYTES, Graph, co_partitioned
 
 
 def test_typed_conversion_splits_pairs_across_tasks(spark, tmp_path):
@@ -93,7 +93,13 @@ def test_co_partitioned_preserves_partitioning(spark):
     requirement from the cache: the join plan contains no Exchange above
     the InMemoryTableScan edge side."""
     g = Graph.from_pairs(spark, [(i, (i + 1) % 50) for i in range(50)], num_nodes=50)
-    edges = co_partitioned(g.edges.select("src", "dst"), "src", rows=50)
+    # size the pin (two long columns, 32 B a row) as 4 partitions against
+    # the session's 2 shuffle partitions: the join must take its
+    # distribution from the pin, not from spark.sql.shuffle.partitions
+    edges = co_partitioned(
+        g.edges.select("src", "dst"), "src", rows=4 * TARGET_PIN_PARTITION_BYTES // 32
+    )
+    assert edges.rdd.getNumPartitions() == 4
     try:
         state = (
             g.nodes()

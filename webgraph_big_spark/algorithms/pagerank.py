@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
-from webgraph_big_spark.checkpoint import IterativeRunner
+from webgraph_big_spark.checkpoint import IterativeRunner, record_params
 from webgraph_big_spark.graph import Graph, broadcast_threshold, co_partitioned
 
 
@@ -213,6 +213,9 @@ def pagerank(
     def with_c(state: DataFrame) -> DataFrame:
         return state.select("id", (F.col("rank") + F.lit(c)).alias("rank"))
 
+    if run_dir:
+        # a run dir converged under another stop rule resumes unconverged
+        record_params(run_dir, tol=tol, alpha=alpha, fixed_iterations=fixed_iterations)
     runner = IterativeRunner(
         spark,
         run_dir=run_dir,

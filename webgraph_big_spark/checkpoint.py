@@ -26,6 +26,10 @@ does not give for free (SURVEY.md §4):
   ``converged`` it returns the checkpointed state at once, running no
   round, appending no ``runs.jsonl`` record and writing no checkpoint.
   A manifest without the key (an older run dir) resumes as unconverged.
+  ``converged`` holds only under the parameters the manifest copies from
+  the run dir's ``params.json`` (written by :func:`record_params`, e.g.
+  PageRank's ``tol``, ``alpha``, ``fixed_iterations``); a call whose
+  ``params.json`` differs resumes as unconverged.
   Only the newest ``KEEP_CHECKPOINTS`` complete checkpoints are kept:
   once a new manifest has committed, every older ``iter_*`` directory is
   deleted, so a loop that checkpoints every round holds a bounded amount
@@ -57,6 +61,19 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 # complete checkpoints a run_dir keeps; older ones go once a newer commits
 KEEP_CHECKPOINTS = 3
+
+PARAMS_FILE = "params.json"
+
+
+def record_params(run_dir: str, **params) -> None:
+    """Write the parameters that decide a loop's result to ``run_dir``;
+    a converged checkpoint written under other parameters then resumes
+    as unconverged."""
+    os.makedirs(run_dir, exist_ok=True)
+    tmp = os.path.join(run_dir, PARAMS_FILE + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump(params, fh, sort_keys=True)
+    os.replace(tmp, os.path.join(run_dir, PARAMS_FILE))
 
 
 @dataclass
@@ -124,6 +141,7 @@ class IterativeRunner:
             "ts": time.time(),
             "changed": changed,
             "converged": changed == 0,
+            "params": self._params(),
         }
         tmp = self._manifest_path(it) + ".tmp"
         with open(tmp, "w") as fh:
@@ -133,6 +151,13 @@ class IterativeRunner:
         for name in os.listdir(self.run_dir):
             if name.startswith("iter_") and int(name.split("_")[1]) < kept[0]:
                 shutil.rmtree(os.path.join(self.run_dir, name), ignore_errors=True)
+
+    def _params(self) -> dict | None:
+        path = os.path.join(self.run_dir, PARAMS_FILE)
+        if not os.path.exists(path):
+            return None
+        with open(path) as fh:
+            return json.load(fh)
 
     def _load_checkpoint(self, it: int) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._ckpt_dir(it), "state"))
@@ -168,7 +193,8 @@ class IterativeRunner:
         in-place big arrays).  Durable parquet checkpoints (resume path)
         happen every ``checkpoint_every`` rounds on top, and once more at
         the end unless the last round was just written.  A resumed run
-        whose checkpoint is marked ``converged`` runs no round.
+        whose checkpoint is marked ``converged`` under the run dir's
+        current ``params.json`` runs no round.
         """
         metrics: list[dict] = []
         it = written = 0  # written: iteration whose state is already durable
@@ -178,7 +204,10 @@ class IterativeRunner:
             state = self._load_checkpoint(latest)
             it = written = latest
             with open(self._manifest_path(latest)) as fh:
-                converged = json.load(fh).get("converged", False)
+                manifest = json.load(fh)
+            # a fixpoint of another stop rule is only a starting point
+            same_rule = manifest.get("params") == self._params()
+            converged = manifest.get("converged", False) and same_rule
         else:
             state = initial()
         state = state.localCheckpoint(eager=True)
