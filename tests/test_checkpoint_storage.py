@@ -5,6 +5,7 @@ import json
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +15,7 @@ from tests.oracle import (
     neighbourhood_function_oracle,
     pagerank_oracle,
 )
-from webgraph_big_spark import synth
+from webgraph_big_spark import synth, typed
 from webgraph_big_spark.graph import Graph
 from webgraph_big_spark.algorithms.components import connected_components
 from webgraph_big_spark.algorithms.labelprop import label_propagation
@@ -46,6 +47,64 @@ def test_store_load_roundtrip(spark, tmp_path):
     g2 = Graph.load(spark, base)
     assert g2.same_graph(g)
     assert g2.num_nodes() == 25
+
+
+def _column_chunks(path):
+    """(column, compression, encodings) of every column chunk in the
+    non-empty parquet files under ``path``."""
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            md = pq.read_metadata(os.path.join(root, name))
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                out += [
+                    (rg.column(j).path_in_schema, rg.column(j).compression, rg.column(j).encodings)
+                    for j in range(rg.num_columns)
+                ]
+    assert out, f"no column chunks under {path}"
+    return out
+
+
+def test_engine_parquet_writes_are_v2_zstd(spark, tmp_path):
+    """Every parquet file the engine writes is zstd-compressed: a stored
+    graph's ``adj/`` (whose ascending ``src`` is delta-coded, a v2-page
+    encoding), a durable checkpoint's ``state/`` and a typed graph's
+    ``arcs/`` and ``ids/``."""
+    edges = synth.erdos_renyi(200, 0.03, seed=6)
+    g = _g(spark, edges, 200)
+    base = str(tmp_path / "graph")
+    g.store(base)
+    adj = _column_chunks(os.path.join(base, "adj"))
+    run_dir = str(tmp_path / "pr")
+    pagerank(g, fixed_iterations=2, run_dir=run_dir, checkpoint_every=1)
+    state = _column_chunks(os.path.join(run_dir, "iter_000002", "state"))
+    nt = g.nodes().select("id", (F.col("id") % 3).cast("int").alias("type"))
+    typed.convert_to_typed(g, nt, str(tmp_path / "typed"))
+    typed_chunks = _column_chunks(str(tmp_path / "typed"))
+    for col, codec, _enc in adj + state + typed_chunks:
+        assert codec == "ZSTD", (col, codec)
+    assert {c for c, _, _ in adj} == {"src", "outdeg", "dst_gaps.list.element"}
+    assert all("DELTA_BINARY_PACKED" in enc for c, _, enc in adj if c == "src")
+
+
+def test_store_written_v1_snappy_still_loads(spark, tmp_path):
+    """An ``adj/`` written with Spark's default parquet options (v1 pages,
+    snappy) loads through the same decoder."""
+    edges = synth.erdos_renyi(40, 0.1, seed=7)
+    g = _g(spark, edges, 40)
+    base = str(tmp_path / "graph")
+    g.store(base)
+    legacy = tmp_path / "legacy"
+    spark.read.parquet(os.path.join(base, "adj")).write.parquet(str(legacy / "adj"))
+    (legacy / "meta.json").write_text(open(os.path.join(base, "meta.json")).read())
+    chunks = _column_chunks(str(legacy / "adj"))
+    assert {codec for _, codec, _ in chunks} == {"SNAPPY"}
+    assert not any("DELTA_BINARY_PACKED" in enc for _, _, enc in chunks)
+    back = Graph.load(spark, str(legacy))
+    assert back.same_graph(g) and back.num_nodes() == 40
 
 
 def test_successor_access_paths_agree(spark):

@@ -122,6 +122,22 @@ def test_pagerank_tol_on_random_graph(spark, tmp_path):
     assert len(open(os.path.join(run_dir, "runs.jsonl")).readlines()) == len(recs)
 
 
+@pytest.mark.parametrize("path", sorted(PATHS))
+def test_pagerank_converged_run_dir_skips_setup(spark, tmp_path, path):
+    """A call on a converged run_dir runs no round and builds no setup
+    (degree-joined edges, no-in-arc set): at most its checkpoint load,
+    and it returns the first call's ranks."""
+    edges = synth.erdos_renyi(40, 0.08, seed=21)
+    g = _g(spark, edges, 40)
+    g.num_nodes()
+    run_dir = str(tmp_path / "pr")
+    kw = dict(tol=1e-3, check_every=4, run_dir=run_dir, **PATHS[path])
+    first = _ranks(pagerank(g, **kw), 40)
+    out = {}
+    assert _jobs(spark, f"pr_conv_{path}", lambda: out.setdefault("df", pagerank(g, **kw))) <= 2
+    np.testing.assert_allclose(_ranks(out["df"], 40), first, rtol=0, atol=0)
+
+
 @pytest.mark.parametrize("rule", ["tol", "alpha", "fixed_iterations"])
 def test_pagerank_converged_run_dir_other_rule_resumes(spark, tmp_path, rule):
     """A run dir converged at tol=1e-3 is only a starting point for a

@@ -5,7 +5,9 @@
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_pagerank_rounds import _jobs
 from webgraph_big_spark import synth, transforms as tr
+from webgraph_big_spark.algorithms.pagerank import pagerank
 from webgraph_big_spark.graph import Graph
 
 
@@ -49,6 +51,59 @@ def test_union_and_filters(spark, er):
     assert _arcs(nl) == {(0, 1)}
     evens = tr.filter_arcs(g, (F.col("src") % 2 == 0))
     assert _arcs(evens) == {(a, b) for a, b in _arcs(g) if a % 2 == 0}
+
+
+# a scattered-id graph: node 40's only arc leaves from node 20
+SCATTERED = [(10, 20), (20, 30), (30, 10), (20, 40)]
+
+
+def test_filter_of_scattered_graph_counts_its_own_nodes(spark):
+    """Dropping node 20's out-arcs also drops node 40, so the filtered
+    graph has 3 nodes even after the parent's count of 4 was memoized,
+    and PageRank over it sums to 1."""
+    g = Graph.from_pairs(spark, SCATTERED)
+    assert g.num_nodes() == 4
+    h = tr.filter_arcs(g, F.col("src") != 20)
+    ranks = pagerank(h, fixed_iterations=5).collect()
+    assert h.num_nodes() == h.nodes().count() == len(ranks) == 3
+    assert sum(r["rank"] for r in ranks) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_union_of_scattered_graphs_counts_the_union(spark):
+    g0 = Graph.from_pairs(spark, [(1, 2), (2, 3)])
+    g1 = Graph.from_pairs(spark, [(3, 4), (5, 6)])
+    assert (g0.num_nodes(), g1.num_nodes()) == (3, 4)
+    u = tr.union_graphs(g0, g1)
+    assert u.num_nodes() == u.nodes().count() == 6
+    # dense graphs keep n = max(n0, n1), isolated nodes included
+    d = tr.union_graphs(_g(spark, [(0, 1)], 5), _g(spark, [(2, 3)], 9))
+    assert d.num_nodes() == 9
+
+
+def test_reassigned_edges_drop_derived_memos(spark):
+    """Reassigning ``edges`` recounts nodes, touched nodes and arcs; a
+    node count the caller declared stays."""
+    g = Graph.from_pairs(spark, SCATTERED)
+    assert (g.num_nodes(), g.touched_nodes().count(), g.num_arcs()) == (4, 4, 4)
+    g.edges = g.edges.filter(F.col("dst") != 40)
+    assert (g.num_nodes(), g.touched_nodes().count(), g.num_arcs()) == (3, 3, 3)
+    dense = Graph(g.edges, dense=True)
+    assert dense.num_nodes() == 31
+    dense.edges = dense.edges.filter(F.col("src") != 30)
+    assert dense.num_nodes() == 31 and dense.num_arcs() == 2
+    dense.edges = dense.edges.filter(F.col("src") != 20)
+    assert dense.num_nodes() == 21
+    declared = _g(spark, SCATTERED, 50)
+    declared.edges = declared.edges.filter(F.col("dst") != 40)
+    assert declared.num_nodes() == 50
+
+
+def test_num_arcs_counts_once_per_arc_table(spark):
+    g = _g(spark, SCATTERED, 41)
+    assert g.num_arcs() == 4
+    assert _jobs(spark, "num_arcs_memo", g.num_arcs) == 0
+    g.edges = g.edges.filter(F.col("src") != 20)
+    assert g.num_arcs() == 2
 
 
 def test_compose_is_two_hop(spark, er):

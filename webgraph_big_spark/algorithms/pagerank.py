@@ -101,34 +101,56 @@ def pagerank(
     RANK_ROW_BYTES = 32  # 8B id + 8B rank + row overhead, conservative
     use_broadcast = n * RANK_ROW_BYTES <= broadcast_threshold_bytes
 
-    if use_broadcast:
-        # broadcast path: the degree side is ≤ n rows — the SAME bound
-        # that qualified the rank side for broadcast — so attach outdeg
-        # with a broadcast join instead of a src-shuffle SMJ: the edge
-        # table is never exchanged at setup (guide §2.4/§3.1; the old
-        # path paid degree-shuffle + SMJ + a round-robin rebalance, three
-        # full passes of the edge table, before the loop even started).
-        # Input partitioning is whatever the source scan produced, which
-        # is round-robin-ish — no hub concentration to undo.
-        edges_base = g.edges.select("src", "dst").join(
-            F.broadcast(g.out_degrees().withColumnRenamed("id", "src")), "src"
-        )
-        edges_w = edges_base.localCheckpoint(eager=True)
-    else:
-        edges_base = g.edges.select("src", "dst").join(
-            g.out_degrees().withColumnRenamed("id", "src"), "src"
-        )
-        # co-partition path — see co_partitioned for the full recipe:
-        # each iteration's join satisfies its distribution requirement
-        # from the cache and only the rank side is exchanged.
-        if salt_buckets:
-            edges_base = edges_base.withColumn(
-                "_salt",
-                F.pmod(F.xxhash64("dst"), F.lit(salt_buckets)).cast("int"),
+    # The setup — the degree-joined edge table and the no-in-arc set — is
+    # built by the first round, so a call whose run_dir is already
+    # converged (it runs no round) builds neither.
+    setup: dict[str, DataFrame] = {}
+
+    def built() -> tuple[DataFrame, DataFrame]:
+        if setup:
+            return setup["edges"], setup["no_in"]
+        if use_broadcast:
+            # broadcast path: the degree side is ≤ n rows — the SAME bound
+            # that qualified the rank side for broadcast — so attach outdeg
+            # with a broadcast join instead of a src-shuffle SMJ: the edge
+            # table is never exchanged at setup (guide §2.4/§3.1; the old
+            # path paid degree-shuffle + SMJ + a round-robin rebalance,
+            # three full passes of the edge table, before the loop even
+            # started).  Input partitioning is whatever the source scan
+            # produced, which is round-robin-ish — no hub concentration to
+            # undo.
+            edges_base = g.edges.select("src", "dst").join(
+                F.broadcast(g.out_degrees().withColumnRenamed("id", "src")), "src"
             )
-            edges_w = co_partitioned(edges_base, "src", "_salt", rows=g.num_arcs())
+            edges_w = edges_base.localCheckpoint(eager=True)
         else:
-            edges_w = co_partitioned(edges_base, "src", rows=g.num_arcs())
+            edges_base = g.edges.select("src", "dst").join(
+                g.out_degrees().withColumnRenamed("id", "src"), "src"
+            )
+            # co-partition path — see co_partitioned for the full recipe:
+            # each iteration's join satisfies its distribution requirement
+            # from the cache and only the rank side is exchanged.
+            if salt_buckets:
+                edges_base = edges_base.withColumn(
+                    "_salt",
+                    F.pmod(F.xxhash64("dst"), F.lit(salt_buckets)).cast("int"),
+                )
+                edges_w = co_partitioned(edges_base, "src", "_salt", rows=g.num_arcs())
+            else:
+                edges_w = co_partitioned(edges_base, "src", rows=g.num_arcs())
+        setup["edges"] = edges_w
+        # Nodes with no in-arc never receive inflow: their u is 0.0 every
+        # round.  The set is STATIC, so precompute it once and make each
+        # round a (contribs ∪ constant) union instead of an n-row outer
+        # join — the per-round sort-merge join of the full node set
+        # against contribs disappears from the loop entirely (guide §2.4:
+        # remove shuffles outright).  The in-arc id set has ≤ n rows, so
+        # on the broadcast path it is broadcast like the rank side.
+        has_in = g.edges.select(F.col("dst").alias("id")).distinct()
+        if use_broadcast:
+            has_in = F.broadcast(has_in)
+        setup["no_in"] = g.nodes().join(has_in, "id", "left_anti").localCheckpoint(eager=True)
+        return setup["edges"], setup["no_in"]
 
     # state rank column = u = rank − c (module docstring); a fresh or
     # resumed state holds true ranks, i.e. c = 0
@@ -138,20 +160,9 @@ def pagerank(
     def initial() -> DataFrame:
         return g.nodes().select("id", F.lit(1.0 / n).alias("rank"))
 
-    # Nodes with no in-arc never receive inflow: their u is 0.0 every
-    # round.  The set is STATIC, so precompute it once and make each
-    # round a (contribs ∪ constant) union instead of an n-row outer
-    # join — the per-round sort-merge join of the full node set against
-    # contribs disappears from the loop entirely (guide §2.4: remove
-    # shuffles outright).  The in-arc id set has ≤ n rows, so on the
-    # broadcast path it is broadcast like the rank side.
-    has_in = g.edges.select(F.col("dst").alias("id")).distinct()
-    if use_broadcast:
-        has_in = F.broadcast(has_in)
-    no_in = g.nodes().join(has_in, "id", "left_anti").localCheckpoint(eager=True)
-
     def step(ranks: DataFrame, it: int):
         nonlocal obs
+        edges_w, no_in = built()
         # After localCheckpoint the rank DataFrame is a LogicalRDD with no
         # size statistics, so Catalyst left alone would fall back to a
         # sort-merge join that reshuffles the whole edge table every
@@ -225,8 +236,8 @@ def pagerank(
     try:
         result = runner.run(initial, step, check=check, durable=with_c)
     finally:
-        if not use_broadcast:
+        if setup and not use_broadcast:
             # don't leave the degree-joined edge table pinned in executor
             # storage for the rest of the session
-            edges_w.unpersist()
+            setup["edges"].unpersist()
     return with_c(result.state)

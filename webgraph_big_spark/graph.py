@@ -13,9 +13,14 @@ Reference mapping (see SURVEY.md §1.4):
 - ``splitNodeIterators`` (``ImmutableGraph.java:405``) → Spark partitions.
 - ``BVGraph.store`` (``BVGraph.java:1641``) → partitioned parquet write of
   the gap-encoded CSR table + a ``.properties``-style JSON sidecar
-  (``meta.json``).  Parquet delta/dict encodings play the role of the
-  γ/ζ instantaneous codes; the *semantic* analogue kept from the reference
-  is the gap-sorted successor array (``BVGraph.java:141-223``).
+  (``meta.json``).  The *semantic* analogue kept from the reference is
+  the gap-sorted successor array (``BVGraph.java:141-223``); the bit
+  coding is parquet's (:data:`PARQUET_WRITE_OPTIONS`): v2 data pages
+  store the ascending ``src`` column DELTA_BINARY_PACKED and the gap
+  columns dictionary-coded while the dictionary pays, delta bit-packed
+  once it does not (the role of the γ/ζ instantaneous codes), and zstd
+  entropy-codes each page, its LZ window over neighbouring gap lists
+  the generic analogue of BV's copy references.
 - ``ImmutableGraph.equals`` (``ImmutableGraph.java:759``) →
   ``same_graph``: symmetric exceptAll emptiness on canonical arcs.
 
@@ -40,6 +45,14 @@ ARC_SCHEMA = T.StructType(
     ]
 )
 
+
+# The one encoding of every parquet file the engine writes (stored
+# graphs, loop checkpoints, typed graphs), passed per write so no session
+# conf changes: v2 data pages, whose fallback from a dictionary is
+# DELTA_BINARY_PACKED rather than PLAIN, under zstd.  Readers decode
+# whatever a file declares, so files written under other options (v1
+# pages, snappy) still load.
+PARQUET_WRITE_OPTIONS = {"parquet.writer.version": "v2", "compression": "zstd"}
 
 TARGET_PIN_PARTITION_BYTES = 32 * 1024 * 1024
 _PIN_ROW_BYTES_PER_COL = 16  # long column in an UnsafeRow, incl. overhead
@@ -169,11 +182,24 @@ class Graph:
         ``ScatteredArcsASCIIGraph`` *before* its remap): the node set is
         the distinct endpoints actually present.  Defaults to dense when
         ``num_nodes`` is given, else scattered."""
+        self.dense = dense if dense is not None else (num_nodes is not None)
+        self._declared_nodes = num_nodes
+        self.edges = edges
+
+    @property
+    def edges(self) -> DataFrame:
+        return self._edges
+
+    @edges.setter
+    def edges(self, edges: DataFrame) -> None:
+        """Replace the arc table.  Every memo derived from the old arcs
+        (node and arc counts, the touched-node set) goes with them; a
+        node count the caller declared stays."""
         if "src" not in edges.columns or "dst" not in edges.columns:
             raise ValueError(f"edges must have src/dst columns, got {edges.columns}")
-        self.edges = edges
-        self._num_nodes = num_nodes
-        self.dense = dense if dense is not None else (num_nodes is not None)
+        self._edges = edges
+        self._num_nodes = self._declared_nodes
+        self._num_arcs: int | None = None
         self._touched: DataFrame | None = None
 
     # ------------------------------------------------------------------
@@ -285,8 +311,11 @@ class Graph:
         return self._num_nodes
 
     def num_arcs(self) -> int:
-        """m — ``ImmutableGraph.numArcs`` (``ImmutableGraph.java:263``)."""
-        return self.edges.count()
+        """m — ``ImmutableGraph.numArcs`` (``ImmutableGraph.java:263``):
+        the edge table's row count, counted once per arc table."""
+        if self._num_arcs is None:
+            self._num_arcs = self.edges.count()
+        return self._num_arcs
 
     def nodes(self) -> DataFrame:
         """The node-id set as a DataFrame: ``[0, n)`` range when dense,
@@ -424,7 +453,14 @@ class Graph:
         sorts within partitions, and stores *gap-encoded* successor
         arrays (first element absolute, rest deltas−1;
         ``BVGraph.java:141-223``'s residual coding) plus successor-aligned
-        label arrays, which parquet's delta/dictionary codecs compress.
+        label arrays.  Every file is written with
+        :data:`PARQUET_WRITE_OPTIONS`: v2 data pages, so the ascending
+        ``src`` column is DELTA_BINARY_PACKED and ``outdeg`` and the gaps
+        are dictionary-coded while the dictionary pays and delta
+        bit-packed once it does not, and zstd on every page.  The layout
+        (``wbs-csr-gap-v2``, its columns) does not depend on the
+        encoding, so stores written with other parquet options load the
+        same way.
 
         ``meta.json`` — the ``.properties`` analogue
         (``ImmutableGraph.java:162-177``) — records node/arc counts,
@@ -456,7 +492,8 @@ class Graph:
             adj.select(*keep)
             .repartitionByRange(buckets, "src")
             .sortWithinPartitions("src")
-            .write.mode("overwrite")
+            .write.options(**PARQUET_WRITE_OPTIONS)
+            .mode("overwrite")
             .parquet(adj_dir)
         )
         per_file = {}

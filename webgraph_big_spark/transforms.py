@@ -15,6 +15,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from webgraph_big_spark.graph import Graph
 
+
+def _kept_nodes(g: Graph) -> int | None:
+    """The node count a graph derived from ``g``'s arcs may inherit: a
+    dense graph's ``[0, n)`` outlives any change to its arcs, while a
+    scattered graph's node set is its arcs' endpoints, so its count is
+    the new graph's to derive."""
+    return g._num_nodes if g.dense else None
+
+
 # ---------------------------------------------------------------------------
 # arc-level filters (Transform.filterArcs, Transform.java:503)
 # ---------------------------------------------------------------------------
@@ -26,7 +35,7 @@ def filter_arcs(g: Graph, predicate: Column) -> Graph:
     The ``ArcFilter.accept(i, j)`` extension point (``Transform.java:103``)
     becomes a Catalyst expression — pushed down to the scan when possible.
     """
-    return Graph(g.edges.filter(predicate), g._num_nodes, dense=g.dense)
+    return Graph(g.edges.filter(predicate), _kept_nodes(g), dense=g.dense)
 
 
 def no_loops(g: Graph) -> Graph:
@@ -53,7 +62,7 @@ def relabel_arc_labels(g: Graph, conversions: dict) -> Graph:
             cols.append(F.col(c).cast(conv).alias(c))
         else:
             cols.append(conv.alias(c))
-    return Graph(g.edges.select(*cols), g._num_nodes, dense=g.dense)
+    return Graph(g.edges.select(*cols), _kept_nodes(g), dense=g.dense)
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +80,7 @@ def transpose(g: Graph) -> Graph:
         g.edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), *others
         ),
-        g._num_nodes,
+        _kept_nodes(g),
         dense=g.dense,
     )
 
@@ -116,12 +125,10 @@ class BidirectionalGraph:
 def union_graphs(g0: Graph, g1: Graph) -> Graph:
     """Arc-set union, n = max(n0, n1) — ``Transform.union``
     (``Transform.java:1659``, ``UnionImmutableGraph.java:35``)."""
-    n = None
-    if g0._num_nodes is not None and g1._num_nodes is not None:
-        n = max(g0._num_nodes, g1._num_nodes)
+    n0, n1 = _kept_nodes(g0), _kept_nodes(g1)
     return Graph(
         g0.edges.select("src", "dst").union(g1.edges.select("src", "dst")).distinct(),
-        n,
+        max(n0, n1) if n0 is not None and n1 is not None else None,
         dense=g0.dense and g1.dense,
     )
 

@@ -34,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from webgraph_big_spark.functions import global_rank, pack_node
-from webgraph_big_spark.graph import Graph
+from webgraph_big_spark.graph import PARQUET_WRITE_OPTIONS, Graph
 
 
 def assign_typed_ids(node_types: DataFrame) -> DataFrame:
@@ -85,6 +85,11 @@ def convert_to_typed(
       counts (the ``.properties`` ``nodes``/``arcs`` matrices) + the
       dropped-arc count.
 
+    Both parquet tables are written with the engine's one encoding
+    (:data:`webgraph_big_spark.graph.PARQUET_WRITE_OPTIONS`): v2 data
+    pages, where a long column whose dictionary stops paying falls back
+    to DELTA_BINARY_PACKED rather than PLAIN, under zstd.
+
     ``write_partitions`` (default: ``spark.sql.shuffle.partitions``)
     sizes the conversion's write stage.  The write range-partitions on
     (src_type, dst_type, src_tid): each type pair spans MANY contiguous
@@ -125,11 +130,14 @@ def convert_to_typed(
     (
         out.repartitionByRange(write_partitions, "src_type", "dst_type", "src_tid")
         .sortWithinPartitions("src_type", "dst_type", "src_tid", "dst_tid")
-        .write.mode("overwrite")
+        .write.options(**PARQUET_WRITE_OPTIONS)
+        .mode("overwrite")
         .partitionBy("src_type", "dst_type")
         .parquet(os.path.join(basename, "arcs"))
     )
-    typed.write.mode("overwrite").parquet(os.path.join(basename, "ids"))
+    typed.write.options(**PARQUET_WRITE_OPTIONS).mode("overwrite").parquet(
+        os.path.join(basename, "ids")
+    )
     node_counts = {
         int(r["type"]): int(r["c"])
         for r in typed.groupBy("type").agg(F.count("*").alias("c")).collect()
