@@ -23,7 +23,7 @@ from webgraph_big_spark.algorithms.components import (
 )
 from webgraph_big_spark.algorithms.labelprop import label_propagation
 from webgraph_big_spark.algorithms.pagerank import pagerank
-from webgraph_big_spark.algorithms.triangles import node_triangles, triangle_count
+from webgraph_big_spark.algorithms.triangles import triangle_count
 from webgraph_big_spark.algorithms.bfs import bfs_distances
 from webgraph_big_spark.algorithms.stats import degree_histogram, graph_stats
 
@@ -113,13 +113,6 @@ def test_triangles_families(spark, fam):
 def test_triangles_complete_graph_closed_form(spark):
     # K6: C(6,3) = 20 triangles
     assert triangle_count(_g(spark, synth.complete(6), 6)) == 20
-
-
-def test_node_triangles_sum(spark):
-    edges, n = FAMILIES["er"]
-    per_node = node_triangles(_g(spark, edges, n))
-    total = sum(r["triangles"] for r in per_node.collect())
-    assert total == 3 * triangles_oracle(edges, n)
 
 
 @pytest.mark.parametrize("fam", ["er", "tree_out", "two_comp"])

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from tests.oracle import bfs_oracle, pagerank_oracle
 from tests.test_pagerank_rounds import _jobs
-from webgraph_big_spark.algorithms.bfs import bfs_distances
+from webgraph_big_spark.algorithms.bfs import bfs_distances, visit_all
 from webgraph_big_spark.algorithms.components import (
     connected_components,
     connected_components_star,
@@ -18,7 +18,7 @@ from webgraph_big_spark.algorithms.hyperball import hyperball
 from webgraph_big_spark.algorithms.labelprop import label_propagation
 from webgraph_big_spark.algorithms.pagerank import pagerank
 from webgraph_big_spark.algorithms.scc import strongly_connected_components_fwbw
-from webgraph_big_spark.algorithms.triangles import node_triangles, triangle_edges
+from webgraph_big_spark.algorithms.triangles import triangle_edges
 from webgraph_big_spark.graph import (
     Graph,
     broadcast_threshold,
@@ -58,7 +58,7 @@ def test_frontier_reach_edge_cases(spark, case):
         else {}
     )
 
-    pin = co_partitioned(g.edges, "src")
+    pin = co_partitioned(g.edges, "src", rows=len(arcs))
     try:
         reached = frontier_reach(
             spark.createDataFrame([(s,) for s in seeds], "id long"),
@@ -78,10 +78,11 @@ def test_frontier_reach_edge_cases(spark, case):
 
 
 def test_loops_run_no_emptiness_probe(spark, monkeypatch):
-    """BFS to exhaustion and HyperBall to its register fixpoint end on
-    the count observed by their own checkpoint job: neither calls
-    ``isEmpty()`` (before the shared driver both called it every level
-    or round)."""
+    """BFS to exhaustion, HyperBall to its register fixpoint and the
+    directed ``visit_all`` end on the count observed by their own
+    checkpoint job: none calls ``isEmpty()`` (before the shared driver
+    BFS and HyperBall called it every level or round, ``visit_all``
+    every component)."""
     g = _chain(spark, 6)
     edges = np.array([(i, i + 1) for i in range(5)])
 
@@ -97,6 +98,12 @@ def test_loops_run_no_emptiness_probe(spark, monkeypatch):
     # five rounds grow the balls along the chain, the sixth changes nothing
     assert [t for t, _ in conv] == list(range(7))
     assert conv == bounded[:7]
+
+    # the chain plus two isolated nodes: each restart takes the least
+    # unvisited id, read off the previous checkpoint
+    tail = Graph(g.edges, num_nodes=8)
+    got = {r["id"]: (r["round"], r["dist"]) for r in visit_all(tail, symmetric=False).collect()}
+    assert got == {**{i: (0, i) for i in range(6)}, 6: (1, 0), 7: (2, 0)}
 
     # FW-BW: a pivot round resolves {0, 1, 2}, a colouring round {3, 4, 5}
     cycles = Graph.from_pairs(spark, [(i, i + 1) for i in range(5)] + [(2, 0), (5, 3)])
@@ -160,7 +167,7 @@ def test_caches_released_when_loop_raises(spark, monkeypatch, algo):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-@pytest.mark.parametrize("fn", [triangle_edges, node_triangles], ids=lambda f: f.__name__)
+@pytest.mark.parametrize("fn", [triangle_edges], ids=lambda f: f.__name__)
 def test_triangles_leave_no_cache(spark, fn):
     """The oriented adjacency a triangle call builds is a checkpoint, not
     a session cache entry that outlives the call."""

@@ -280,16 +280,10 @@ def test_no_exchange_above_pin_in_round_plans(spark, monkeypatch):
 
 
 def test_co_partitioned_sizing(spark):
-    """A small relation pins as 2 partitions; passing ``rows`` skips the
-    sizing count of the relation itself."""
+    """A small relation pins as 2 partitions."""
     g = _g(spark, [(i, (i + 1) % 20) for i in range(20)], 20)
-    df = g.edges.select("src", "dst")
-    for rows in (None, 20):
-        pin = co_partitioned(df, "src", rows=rows)
-        try:
-            assert pin.rdd.getNumPartitions() == 2
-        finally:
-            pin.unpersist()
-    counted = _jobs(spark, "pin_count", lambda: co_partitioned(df, "src").unpersist())
-    given = _jobs(spark, "pin_rows", lambda: co_partitioned(df, "src", rows=20).unpersist())
-    assert given < counted
+    pin = co_partitioned(g.edges.select("src", "dst"), "src", rows=20)
+    try:
+        assert pin.rdd.getNumPartitions() == 2
+    finally:
+        pin.unpersist()

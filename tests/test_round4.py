@@ -34,7 +34,8 @@ def test_typed_conversion_splits_pairs_across_tasks(spark, tmp_path):
     files = [f for f in os.listdir(pair_dir) if f.endswith(".parquet")]
     assert len(files) >= 2, f"pair (0,0) written by {len(files)} task(s)"
     # loads stay correct after the layout change
-    got = ty.load_typed_pair(spark, base, 0, 0).count()
+    arcs = spark.read.parquet(os.path.join(base, "arcs"))
+    got = arcs.filter((F.col("src_type") == 0) & (F.col("dst_type") == 0)).count()
     assert got == 200
 
 

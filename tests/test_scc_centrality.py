@@ -9,14 +9,10 @@ from tests.oracle import harmonic_oracle, scc_oracle
 from webgraph_big_spark import synth
 from webgraph_big_spark.graph import Graph
 from webgraph_big_spark.algorithms.scc import (
+    _peel_trivial,
     strongly_connected_components,
-    trim,
 )
-from webgraph_big_spark.algorithms.centrality import (
-    harmonic_centrality,
-    closeness_centrality,
-    reachable_counts,
-)
+from webgraph_big_spark.algorithms.centrality import harmonic_centrality
 
 
 def _g(spark, edges, n):
@@ -41,10 +37,11 @@ def test_scc_vs_tarjan(spark, case):
 
 def test_trim_removes_dag_fringe(spark):
     edges, n = CASES["dag"]
-    trimmed = trim(_g(spark, edges, n), rounds=4)
-    assert trimmed.edges.isEmpty()  # a tree has no 2-cycles at all
+    arcs = _g(spark, edges, n).edges.select("src", "dst")
+    trimmed, _, _ = _peel_trivial(arcs, max_rounds=4)
+    assert trimmed.isEmpty()  # a tree has no 2-cycles at all
     # zero rounds return the edges unchanged
-    kept = trim(_g(spark, edges, n), rounds=0).edges.collect()
+    kept = _peel_trivial(arcs, max_rounds=0)[0].collect()
     assert sorted(map(tuple, kept)) == sorted((int(s), int(d)) for s, d in edges)
 
 
@@ -56,11 +53,3 @@ def test_harmonic_vs_oracle(spark):
     for k in want:
         assert abs(got[k] - want[k]) < 1e-8, k
 
-
-def test_closeness_and_reachable(spark):
-    # directed 4-cycle: every node reaches all in ≤3, closeness = 1/(1+2+3)
-    g = _g(spark, synth.cycle(4), 4)
-    cl = {r["id"]: r["closeness"] for r in closeness_centrality(g, t=5).collect()}
-    assert all(abs(v - 1.0 / 6.0) < 1e-9 for v in cl.values())
-    rc = {r["id"]: r["reachable"] for r in reachable_counts(g, 5).collect()}
-    assert all(v == 4 for v in rc.values())

@@ -15,7 +15,7 @@ BFS index — which is exactly how the reference derives WCC
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from webgraph_big_spark.graph import Graph, co_partitioned, frontier_reach
 
@@ -122,21 +122,21 @@ def visit_all(
             .join(dists, "id")
             .select("id", F.col("round").cast("long"), F.col("dist").cast("int"))
         )
-    remaining = g.nodes().localCheckpoint(eager=True)
+
+    def unvisited(df: DataFrame) -> tuple[DataFrame, dict]:
+        # the next head and the loop's end ride on the checkpoint job
+        seen = Observation()
+        df = df.observe(seen, F.min("id").alias("head"), F.count(F.lit(1)).alias("n"))
+        return df.localCheckpoint(eager=True), seen.get
+
+    remaining, seen = unvisited(g.nodes())
     out = spark.createDataFrame([], "id long, round long, dist int")
     rnd = 0
-    while True:
-        head = remaining.agg(F.min("id").alias("m")).first()["m"]
-        if head is None:
-            break
-        d = bfs_distances(g, [int(head)], symmetric=symmetric)
+    while seen["n"]:
+        d = bfs_distances(g, [int(seen["head"])], symmetric=symmetric)
         out = out.union(d.select("id", F.lit(rnd).cast("long").alias("round"), F.col("dist").cast("int")))
-        remaining = remaining.join(d.select("id"), "id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        remaining, seen = unvisited(remaining.join(d.select("id"), "id", "left_anti"))
         if (rnd + 1) % checkpoint_every == 0:
             out = out.localCheckpoint(eager=True)  # truncate the union chain
-        if remaining.isEmpty():
-            break
         rnd += 1
     return out

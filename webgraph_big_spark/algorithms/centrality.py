@@ -68,22 +68,3 @@ def harmonic_centrality(g: Graph, t: int, rnd: int = 9) -> DataFrame:
     return geometric_centrality(
         g, t, lambda d: F.lit(1.0) / d.cast("double"), "harmonic", rnd
     )
-
-
-def closeness_centrality(g: Graph, t: int, rnd: int = 9) -> DataFrame:
-    """Closeness: 1 / Σ d over coreachable pairs (0 for isolated)."""
-    dist = bounded_distances(g, t)
-    return (
-        dist.filter(F.col("dist") > 0)
-        .groupBy(F.col("y").alias("id"))
-        .agg(F.round(F.lit(1.0) / F.sum(F.col("dist").cast("double")), rnd).alias("closeness"))
-    )
-
-
-def reachable_counts(g: Graph, t: int) -> DataFrame:
-    """(id, reachable): |ball(x, t)| — per-node reachable-set sizes, the
-    exact form of HyperBall's per-node estimates."""
-    dist = bounded_distances(g, t)
-    return dist.groupBy(F.col("x").alias("id")).agg(
-        F.count("*").cast("long").alias("reachable")
-    )

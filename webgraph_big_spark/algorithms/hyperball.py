@@ -50,12 +50,14 @@ outputs hash-match).
 from __future__ import annotations
 
 import functools
+import itertools
 import math
 import sys
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from webgraph_big_spark.algorithms.centrality import bounded_distances
 from webgraph_big_spark.checkpoint import IterativeRunner
 from webgraph_big_spark.functions import stable_long_hash
 from webgraph_big_spark.graph import Graph, co_partitioned
@@ -64,26 +66,13 @@ from webgraph_big_spark.transforms import BidirectionalGraph
 
 def neighbourhood_function_exact(g: Graph, t_max: int) -> DataFrame:
     """(t, nf): #ordered pairs (x,y) with directed dist(x,y) ≤ t, incl.
-    x=y, for t = 0..t_max — the exact function HyperBall approximates."""
-    spark = g.edges.sparkSession
-    edges = g.edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    reach = (
-        g.nodes()
-        .select(F.col("id").alias("x"), F.col("id").alias("y"))
-        .localCheckpoint(eager=True)
-    )
-    counts = [(0, reach.count())]
-    for t in range(1, t_max + 1):
-        expanded = (
-            reach.join(edges, reach.y == edges.src)
-            .select("x", F.col("dst").alias("y"))
-            .union(reach)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        counts.append((t, expanded.count()))
-        reach = expanded
-    return spark.createDataFrame(counts, "t long, nf long")
+    x=y, for t = 0..t_max — the exact function HyperBall approximates.
+    Like the reference's ``NeighbourhoodFunction``, it comes from the
+    same bounded distances as the geometric centralities: one
+    per-distance count (≤ t_max+1 rows) summed up on the driver."""
+    per_dist = dict(bounded_distances(g, t_max).groupBy("dist").count().collect())
+    counts = list(enumerate(itertools.accumulate(per_dist.get(t, 0) for t in range(t_max + 1))))
+    return g.edges.sparkSession.createDataFrame(counts, "t long, nf long")
 
 
 def effective_diameter_value(nf: list[float], alpha: float = 0.9) -> float:
@@ -325,7 +314,7 @@ def _packed_loop(g: Graph, t_max: int | None, log2m: int, on_round=None):
     registers only grow and are bounded)."""
     # no ``distinct()`` before the pin: the field-wise max merge is
     # idempotent, duplicate arcs cannot change any register (guide §2.4)
-    edges = co_partitioned(g.edges.select("src", "dst"), "dst")
+    edges = co_partitioned(g.edges.select("src", "dst"), "dst", rows=g.num_arcs())
     max_aggs = [F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)]
     differs = F.col("packed") != F.col("old_packed")
     moved = None  # the latest round's observed changed-word count

@@ -10,10 +10,11 @@ whenever t ≥ the graph's diameter.
 Scale notes: closure pairs are O(Σ|ball|) — fine on sparse/banded
 graphs and on pruned subgraphs, quadratic on dense cores.  For web-scale
 SCC the standard trick composes this with trimming (degree-0 peeling)
-and the giant-SCC FW-BW split from one pivot; ``trim`` exposes the
-peeling.  The reference's "buckets" (terminal non-dangling components,
-``StronglyConnectedComponents``) derive from the same labels + the
-quotient DAG.
+and the giant-SCC FW-BW split from one pivot, which
+:func:`strongly_connected_components_fwbw` does (its peeling is
+:func:`_peel_trivial`).  The reference's "buckets" (terminal
+non-dangling components, ``StronglyConnectedComponents``) derive from
+the same labels + the quotient DAG.
 
 :func:`strongly_connected_components_fwbw` runs its outer rounds, and
 its coloring, on ``IterativeRunner``; its ``run_dir`` is the runner's
@@ -39,8 +40,10 @@ from webgraph_big_spark.graph import (
 
 
 def bounded_closure(g: Graph, t: int) -> DataFrame:
-    """(x, y) pairs with a directed path x⇝y of length ≤ t (incl. x=x),
-    by join doubling — ceil(log2 t) shuffle rounds."""
+    """(x, y) pairs with a directed path x⇝y of length ≤ 2^⌈log2 t⌉,
+    not just ≤ t (incl. x=x), by join doubling — ⌈log2 t⌉ shuffle
+    rounds.  ``_closure_sql`` in ``__spark_entry__`` mirrors it for
+    t ≥ 2."""
     edges = g.edges.select("src", "dst").distinct()
     reach = (
         g.nodes()
@@ -174,7 +177,7 @@ def strongly_connected_components_fwbw(
     the reference's own SCC, ``algo/StronglyConnectedComponents.java:225``,
     is sequential Tarjan and has no parallel analogue):
 
-    1. **trim** — peel in/out-degree-0 nodes iteratively (singleton SCCs);
+    1. **peel** — drop in/out-degree-0 nodes iteratively (singleton SCCs);
     2. **FW-BW pivot** — forward ∩ backward reachability from the minimum
        remaining node captures the (giant) SCC containing it in
        O(diameter of that SCC) frontier rounds, O(n) state;
@@ -368,11 +371,3 @@ def scc_buckets(g: Graph, components: DataFrame) -> DataFrame:
         has_out.join(outward, "comp", "left_anti")
         .select("comp")
     )
-
-
-def trim(g: Graph, rounds: int = 3) -> Graph:
-    """Iteratively peel nodes with in- or out-degree 0, at most
-    ``rounds`` times — they are singleton SCCs; the standard
-    preprocessing that shrinks real graphs drastically before
-    closure/FW-BW."""
-    return Graph(_peel_trivial(g.edges.select("src", "dst"), max_rounds=rounds)[0], dense=False)

@@ -101,20 +101,3 @@ def graph_stats(g: Graph) -> dict:
     finally:
         edges.unpersist()
         outdeg.unpersist()
-
-
-def component_size_stats(components: DataFrame) -> dict:
-    """Size distribution of a component labelling — the ``Stats`` wiring
-    of SCC/WCC sizes (``Stats.java`` component-size report): count,
-    largest, and the size histogram head."""
-    sizes = components.groupBy("comp").agg(F.count("*").alias("size"))
-    agg = sizes.agg(
-        F.count("*").alias("n_components"),
-        F.max("size").alias("largest"),
-        F.avg("size").alias("avg_size"),
-    ).first()
-    return {
-        "n_components": int(agg["n_components"] or 0),
-        "largest_component": int(agg["largest"] or 0),
-        "avg_component_size": float(agg["avg_size"] or 0.0),
-    }

@@ -82,20 +82,3 @@ def triangle_count(g: Graph) -> int:
     """Total number of triangles in the underlying simple graph."""
     row = triangle_edges(g).agg(F.coalesce(F.sum("tri"), F.lit(0)).alias("t")).first()
     return int(row["t"])
-
-
-def node_triangles(g: Graph) -> DataFrame:
-    """(id, triangles) per node — each triangle credited to all 3 corners.
-
-    Built on the same ``_edge_pairs`` as ``triangle_edges``."""
-    # corner credit: for edge (u,v) with witnesses w ∈ N⁺(u)∩N⁺(v), each of
-    # u, v, w gets +1.  Explode the witness set once.
-    witnesses = _edge_pairs(g).select(
-        "src", "dst", F.explode(F.array_intersect("_nu", "_nv")).alias("w")
-    )
-    credits = (
-        witnesses.select(F.col("src").alias("id"))
-        .union(witnesses.select(F.col("dst").alias("id")))
-        .union(witnesses.select(F.col("w").alias("id")))
-    )
-    return credits.groupBy("id").agg(F.count("*").alias("triangles"))

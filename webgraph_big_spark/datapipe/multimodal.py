@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Image/audio/video payloads are treated as opaque ``binary`` columns with
-a typed metadata struct alongside; decode / feature-extract / resize /
-frame-sample run as Arrow-batched pandas UDFs over ``mapInPandas``.
+a typed metadata struct alongside; decode and feature extraction run
+as Arrow-batched pandas UDFs over ``mapInPandas``.
 
 The actual codecs (PIL/ffmpeg/torchaudio) are NOT in this container, so
 ``decode_media`` raises ``NotImplementedError`` by design; everything
@@ -95,22 +95,3 @@ def extract_features(media_df: DataFrame, fake: bool = True) -> DataFrame:
             yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
 
     return media_df.select("media_id", "media").mapInPandas(run, out_schema)
-
-
-def frame_sample(media_df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """(media_id, frame_idx, frame: binary): split each payload into
-    ``n_frames`` contiguous chunks — the video frame-sampling access
-    pattern (chunk offsets, not codecs), pure Spark expressions."""
-    size = F.octet_length("media")
-    idx = F.explode(F.sequence(F.lit(0), F.lit(n_frames - 1))).alias("frame_idx")
-    df = media_df.select("media_id", "media", size.alias("_sz"), idx)
-    start = (F.col("frame_idx") * F.col("_sz") / n_frames).cast("long") + 1
-    length = (
-        ((F.col("frame_idx") + 1) * F.col("_sz") / n_frames).cast("long")
-        - (F.col("frame_idx") * F.col("_sz") / n_frames).cast("long")
-    )
-    return df.select(
-        "media_id",
-        F.col("frame_idx").cast("long"),
-        F.substring(F.col("media"), start, length).alias("frame"),
-    )

@@ -101,15 +101,6 @@ def _mean_vectors(assigned: DataFrame, vec_col: str, rnd: int = KM_RND) -> DataF
     )
 
 
-def centroids(corpus: DataFrame, cell_col: str = "label", vec_col: str = "embedding") -> DataFrame:
-    """(cell, centroid): element-wise mean per provided cell column —
-    kept as the label-partitioned codebook path (e.g. pre-partitioned
-    corpora); the trained path is :func:`kmeans_fit`."""
-    return _mean_vectors(
-        corpus.select(F.col(cell_col).alias("cell"), vec_col), vec_col
-    )
-
-
 def _sq_dist(a: Column, b: Column) -> Column:
     """‖a−b‖² as dot(a,a) − 2·dot(a,b) + dot(b,b) — the same expression
     shape (and fold order) the SQL oracle uses."""

@@ -21,7 +21,6 @@ import re
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F, types as T
-from pyspark.sql.window import Window
 
 from webgraph_big_spark.graph import Graph
 
@@ -96,33 +95,6 @@ def assign_dense_ids(symbols: DataFrame, col: str = "symbol") -> DataFrame:
 
     uniq = symbols.select(F.col(col).alias("symbol")).distinct()
     return global_rank(uniq, ["symbol"], out="id")
-
-
-def from_url_arcs(urls: DataFrame, arcs: DataFrame) -> tuple[Graph, DataFrame]:
-    """URL-keyed ingestion — the ``webbase/Converter`` analogue
-    (``webbase/Converter.java:38``: URL lines + CRC map → BVGraph).
-
-    ``urls``: one column ``url`` (the node universe, any order);
-    ``arcs``: columns ``src_url, dst_url``.  URLs get dense long ids by
-    sorted order (:func:`assign_dense_ids` — replacing Converter's CRC64
-    hash map with a deterministic order-based map, collision-free by
-    construction), arcs whose endpoints are not in the universe are
-    dropped (Converter skips unresolvable CRCs the same way).  Returns
-    (graph, id_map(symbol=url, id)).
-    """
-    id_map = assign_dense_ids(urls.select(F.col("url").alias("symbol")))
-    edges = (
-        arcs.join(
-            F.broadcast(id_map.withColumnRenamed("symbol", "src_url")), "src_url"
-        )
-        .withColumnRenamed("id", "src")
-        .join(F.broadcast(id_map.withColumnRenamed("symbol", "dst_url")), "dst_url")
-        .withColumnRenamed("id", "dst")
-        .select("src", "dst")
-        .distinct()
-    )
-    n = id_map.count()
-    return Graph(edges, num_nodes=n), id_map
 
 
 def build_graph(repos: DataFrame) -> tuple[Graph, DataFrame]:

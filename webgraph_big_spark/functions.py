@@ -7,7 +7,6 @@ built-in Spark SQL expression (whole-stage codegen, no Python).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
 
 # TypedGraph bit packing (typed/TypedGraph.java:48-62): a node is a
 # 16-bit type ⊕ 48-bit per-type id packed into one long.
@@ -182,76 +181,4 @@ def global_cumsum(
         with_run.join(off_df, "_pid")
         .withColumn(out, (F.col("_off") + F.col("_run")).cast(sql_type))
         .drop("_pid", "_run", "_off")
-    )
-
-
-# A small built-in public-suffix list (the reference's topPrivateDomain
-# mode relies on Guava's bundled copy of publicsuffix.org,
-# BuildHostMap.java:87-96).  Production deployments pass the full list.
-DEFAULT_PUBLIC_SUFFIXES = [
-    "com", "org", "net", "edu", "gov", "io", "dev", "app",
-    "co.uk", "ac.uk", "org.uk", "gov.uk",
-    "com.au", "net.au", "org.au",
-    "co.jp", "ne.jp", "or.jp",
-    "com.br", "com.cn", "co.in", "co.kr", "com.mx",
-    "github.io", "blogspot.com",
-    "de", "fr", "it", "nl", "es", "ru", "cn", "jp", "uk", "us", "eu",
-]
-
-
-def top_private_domain(
-    hosts: DataFrame, suffixes: list[str] | None = None, host_col: str = "host"
-) -> DataFrame:
-    """host → top private domain — ``BuildHostMap``'s ``topPrivateDomain``
-    mode (``BuildHostMap.java:87-96``).
-
-    For each host, the LONGEST matching public suffix (by label count)
-    is found via an explode-of-suffix-candidates + broadcast join (all
-    JVM-side: a host with k labels yields k candidate suffixes), and the
-    TPD is the label immediately before it plus the suffix.  Hosts
-    matching no suffix (or equal to a bare suffix) map to themselves —
-    Guava's `isUnderPublicSuffix` guard.
-
-    Returns the input plus a ``tpd`` column.
-    """
-    spark = hosts.sparkSession
-    sfx = spark.createDataFrame(
-        [(s, s.count(".") + 1) for s in (suffixes or DEFAULT_PUBLIC_SUFFIXES)],
-        "_sfx string, _sfx_labels int",
-    )
-    parts = F.split(F.col(host_col), r"\.")
-    cand = hosts.select(
-        F.col(host_col),
-        F.size(parts).alias("_n"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(parts)),
-                lambda i: F.array_join(F.slice(parts, i, F.size(parts)), "."),
-            )
-        ).alias("_pos", "_cand"),
-    )
-    matched = cand.join(
-        F.broadcast(sfx), cand["_cand"] == sfx["_sfx"]
-    ).filter(
-        # the suffix must be proper (at least one label before it)
-        F.col("_n") > F.col("_sfx_labels")
-    )
-    w = Window.partitionBy(host_col).orderBy(F.desc("_sfx_labels"))
-    best = (
-        matched.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col(host_col),
-            F.array_join(
-                F.slice(
-                    F.split(F.col(host_col), r"\."),
-                    F.col("_n") - F.col("_sfx_labels"),
-                    F.col("_sfx_labels") + 1,
-                ),
-                ".",
-            ).alias("tpd"),
-        )
-    )
-    return hosts.join(best, host_col, "left").withColumn(
-        "tpd", F.coalesce("tpd", F.col(host_col))
     )

@@ -58,7 +58,7 @@ TARGET_PIN_PARTITION_BYTES = 32 * 1024 * 1024
 _PIN_ROW_BYTES_PER_COL = 16  # long column in an UnsafeRow, incl. overhead
 
 
-def co_partitioned(df: DataFrame, *keys: str, rows: int | None = None) -> DataFrame:
+def co_partitioned(df: DataFrame, *keys: str, rows: int) -> DataFrame:
     """Pin a STATIC relation hash-partitioned by ``keys`` for an
     iterative loop — the shared recipe behind every per-round join that
     must NOT re-exchange the big side (PageRank, HyperBall, WCC, label
@@ -94,12 +94,10 @@ def co_partitioned(df: DataFrame, *keys: str, rows: int | None = None) -> DataFr
     reports SinglePartition, which no hash-distributed join can reuse,
     so the cached side would be re-exchanged every round.
 
-    ``rows`` should come from a count of the SOURCE relation (an upper
-    bound is fine): counting ``df`` itself when it is omitted runs the
-    whole upstream plan once more before the pin runs it.
+    ``rows`` comes from a count of the SOURCE relation (an upper bound
+    is fine, e.g. the ``Graph.num_arcs`` memo): counting ``df`` itself
+    would run the whole upstream plan once more before the pin runs it.
     """
-    if rows is None:
-        rows = df.count()
     est_bytes = rows * _PIN_ROW_BYTES_PER_COL * max(len(df.columns), 1)
     k = -(-est_bytes // TARGET_PIN_PARTITION_BYTES)
     pinned = df.repartition(max(2, int(k)), *keys).cache()

@@ -89,19 +89,6 @@ def disjoint_union(*graphs: tuple[np.ndarray, int]) -> tuple[np.ndarray, int]:
     return np.concatenate(parts), offset
 
 
-def random_power_law(n: int, m_target: int, seed: int, exponent: float = 2.1) -> np.ndarray:
-    """Skewed-degree random graph (hubby, web-like): endpoints drawn from
-    a zipf-ish distribution — the 100 TB-shaped stress input."""
-    rng = np.random.default_rng(seed)
-    w = (np.arange(1, n + 1, dtype=np.float64)) ** (-1.0 / (exponent - 1.0))
-    w /= w.sum()
-    src = rng.choice(n, size=m_target, p=w).astype(np.int64)
-    dst = rng.choice(n, size=m_target, p=w).astype(np.int64)
-    e = np.stack([src, dst], axis=1)
-    e = e[e[:, 0] != e[:, 1]]
-    return np.unique(e, axis=0)
-
-
 # ---------------------------------------------------------------------------
 # repos-table rendering
 # ---------------------------------------------------------------------------

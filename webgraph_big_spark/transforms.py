@@ -43,28 +43,6 @@ def no_loops(g: Graph) -> Graph:
     return filter_arcs(g, F.col("src") != F.col("dst"))
 
 
-def relabel_arc_labels(g: Graph, conversions: dict) -> Graph:
-    """Label-type conversion view —
-    ``labelling/ArcRelabelledImmutableGraph.java`` (wraps a labelled
-    graph, converting each arc label through a type converter, e.g.
-    gamma-coded int → fixed-width int).  In Spark a label is a typed
-    column, so a conversion is a ``cast`` (type name value) or an
-    arbitrary Column expression per label column; unlisted label columns
-    pass through unchanged."""
-    cols = [F.col("src"), F.col("dst")]
-    for c in g.edges.columns:
-        if c in ("src", "dst"):
-            continue
-        conv = conversions.get(c)
-        if conv is None:
-            cols.append(F.col(c))
-        elif isinstance(conv, str):
-            cols.append(F.col(c).cast(conv).alias(c))
-        else:
-            cols.append(conv.alias(c))
-    return Graph(g.edges.select(*cols), _kept_nodes(g), dense=g.dense)
-
-
 # ---------------------------------------------------------------------------
 # set operations on arc sets (Transform union/transpose/symmetrize/simplify)
 # ---------------------------------------------------------------------------
@@ -115,11 +93,6 @@ class BidirectionalGraph:
         return self.backward.out_degrees(include_zero).withColumnRenamed(
             "outdeg", "indeg"
         )
-
-    def transposed_view(self) -> "BidirectionalGraph":
-        """Successors become predecessors and vice versa — the
-        reference's ``transpose()`` view (no data movement)."""
-        return BidirectionalGraph(self.backward, self.forward)
 
 
 def union_graphs(g0: Graph, g1: Graph) -> Graph:

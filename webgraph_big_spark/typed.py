@@ -1,4 +1,4 @@
-"""Typed graphs — per-type-pair partitioned conversion, storage, stats.
+"""Typed graphs — per-type-pair partitioned conversion and storage.
 
 Reference mapping:
 
@@ -11,10 +11,10 @@ Reference mapping:
   node counts and the numTypes×numTypes arc-count matrix recorded in
   ``.properties``; arcs whose type pair is not in the *type graph* are
   dropped with an error count (``ConvertToTypedGraph.java:168-177``).
-- ``typed/EstimateTypedGraphSize.java:52`` — per-pair size statistics
-  without writing the converted graph.
 - ``typed/BVImmutableTypedGraph.java:45`` — loading one type's streams;
-  here a per-pair load is a partition-pruned parquet read.
+  here a per-pair load is a parquet read of ``arcs/`` filtered on
+  ``src_type`` and ``dst_type``, which Spark prunes to that pair's
+  partition.
 
 Spark design: conversion is two broadcast-able joins + one scalable
 rank (:func:`webgraph_big_spark.functions.global_rank` — no global
@@ -31,7 +31,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from webgraph_big_spark.functions import global_rank, pack_node
 from webgraph_big_spark.graph import PARQUET_WRITE_OPTIONS, Graph
@@ -157,29 +157,3 @@ def convert_to_typed(
     with open(os.path.join(basename, "meta.json"), "w") as fh:
         json.dump(meta, fh)
     return meta
-
-
-def load_typed_pair(
-    spark: SparkSession, basename: str, src_type: int, dst_type: int
-) -> DataFrame:
-    """One (src_type, dst_type) stream — a partition-pruned read (only
-    that pair's files are listed/scanned), the analogue of opening one
-    per-type bit stream in ``BVImmutableTypedGraph.load``."""
-    return (
-        spark.read.parquet(os.path.join(basename, "arcs"))
-        .filter(
-            (F.col("src_type") == src_type) & (F.col("dst_type") == dst_type)
-        )
-        .select("src_tid", "dst_tid", "src_packed", "dst_packed")
-    )
-
-
-def typed_pair_stats(spark: SparkSession, basename: str) -> DataFrame:
-    """(src_type, dst_type, arcs) recomputed from the stored table —
-    ``EstimateTypedGraphSize``'s per-pair summary, exercising the
-    partitioned layout."""
-    return (
-        spark.read.parquet(os.path.join(basename, "arcs"))
-        .groupBy("src_type", "dst_type")
-        .agg(F.count("*").alias("arcs"))
-    )
